@@ -1,10 +1,6 @@
 package graft.engine
 
-import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
-
-import scala.jdk.CollectionConverters._
 
 /** Durable ACL/user state next to the catalog (`<warehouse>/acl.json`)
   * — the analog of the reference's users/groups/membership/
@@ -14,97 +10,53 @@ import scala.jdk.CollectionConverters._
   * restart.
   *
   * Format: one deterministic JSON document (sorted arrays) written
-  * write-then-rename like Catalog.commit — a crash mid-save leaves
-  * the previous state, never a torn file. Sized by principals and
-  * grants (catalog-scale, not data-scale). Jackson is already on
-  * Spark's classpath; no new dependencies.
+  * through JsonDoc's write-then-swap, like `catalog.json` — a crash
+  * mid-save leaves the previous state, never a torn file. Sized by
+  * principals and grants (catalog-scale, not data-scale).
   */
 object AclStore {
 
-  private val mapper = new ObjectMapper()
+  // the acl.json document, field for field; Jackson writes the fields
+  // in declaration order
+  private final case class Pair(a: String, b: String)
+  private final case class Access(who: String, source: String, level: Int)
+  private final case class CredDoc(user: String, salt: String, hash: String)
+  private final case class Doc(
+      users: Seq[String], groups: Seq[String], admins: Seq[String],
+      canCreate: Seq[String], canCreateGroup: Seq[String],
+      membership: Seq[Pair], canManageGroup: Seq[Pair],
+      userAccess: Seq[Access], groupAccess: Seq[Access], creds: Seq[CredDoc])
 
-  private def levelOf(rank: Int): Acl.Level = rank match {
-    case 0 => Acl.LevelNone
-    case 1 => Acl.LevelRead
-    case 2 => Acl.LevelUpdate
-    case 3 => Acl.LevelManage
-    case r => throw new IllegalArgumentException(s"bad level rank: $r")
-  }
+  private val levels =
+    Seq(Acl.LevelNone, Acl.LevelRead, Acl.LevelUpdate, Acl.LevelManage).map(l => l.rank -> l).toMap
 
   def save(spark: SparkSession, path: String, st: Acl.State): Unit = {
-    val root = mapper.createObjectNode()
-    def strings(k: String, xs: Iterable[String]): Unit = {
-      val a = root.putArray(k); xs.toSeq.sorted.foreach(a.add)
-    }
-    strings("users", st.users)
-    strings("groups", st.groups)
-    strings("admins", st.admins)
-    strings("canCreate", st.canCreate)
-    strings("canCreateGroup", st.canCreateGroup)
-    def pairs(k: String, ps: Iterable[(String, String)]): Unit = {
-      val a = root.putArray(k)
-      ps.toSeq.sorted.foreach { case (x, y) =>
-        val o = a.addObject(); o.put("a", x); o.put("b", y)
-      }
-    }
-    pairs("membership", st.membership)
-    pairs("canManageGroup", st.canManageGroup)
-    def access(k: String, m: Map[(String, String), Acl.Level]): Unit = {
-      val a = root.putArray(k)
-      m.toSeq.sortBy(_._1).foreach { case ((who, source), l) =>
-        val o = a.addObject()
-        o.put("who", who); o.put("source", source); o.put("level", l.rank)
-      }
-    }
-    access("userAccess", st.userAccess)
-    access("groupAccess", st.groupAccess)
-    val creds = root.putArray("creds")
-    st.creds.toSeq.sortBy(_._1).foreach { case (u, c) =>
-      val o = creds.addObject()
-      o.put("user", u); o.put("salt", c.saltHex); o.put("hash", c.hashHex)
-    }
-
-    val bytes = mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(root)
-    val dst = new Path(path)
-    val tmp = new Path(path + "_tmp")
-    val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(tmp, true)
-    try out.write(bytes) finally out.close()
-    if (fs.exists(dst)) fs.delete(dst, false)
-    fs.rename(tmp, dst)
+    def pairs(ps: Set[(String, String)]) = ps.toSeq.sorted.map { case (a, b) => Pair(a, b) }
+    def access(m: Map[(String, String), Acl.Level]) =
+      m.toSeq.sortBy(_._1).map { case ((who, source), l) => Access(who, source, l.rank) }
+    JsonDoc.write(spark, path, Doc(
+      st.users.toSeq.sorted, st.groups.toSeq.sorted, st.admins.toSeq.sorted,
+      st.canCreate.toSeq.sorted, st.canCreateGroup.toSeq.sorted,
+      pairs(st.membership), pairs(st.canManageGroup),
+      access(st.userAccess), access(st.groupAccess),
+      st.creds.toSeq.sortBy(_._1).map { case (u, c) => CredDoc(u, c.saltHex, c.hashHex) }))
   }
 
-  def load(spark: SparkSession, path: String): Option[Acl.State] = {
-    val dst = new Path(path)
-    val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(dst)) None
-    else {
-      val in = fs.open(dst)
-      val root = try mapper.readTree(in) finally in.close()
-      def strings(k: String): Set[String] =
-        root.get(k).elements().asScala.map(_.asText()).toSet
-      def pairs(k: String): Set[(String, String)] =
-        root.get(k).elements().asScala
-          .map(o => (o.get("a").asText(), o.get("b").asText())).toSet
-      def access(k: String): Map[(String, String), Acl.Level] =
-        root.get(k).elements().asScala.map { o: JsonNode =>
-          (o.get("who").asText(), o.get("source").asText()) ->
-            levelOf(o.get("level").asInt())
-        }.toMap
-      Some(Acl.State(
-        users = strings("users"),
-        groups = strings("groups"),
-        membership = pairs("membership"),
-        userAccess = access("userAccess"),
-        groupAccess = access("groupAccess"),
-        canCreate = strings("canCreate"),
-        canCreateGroup = strings("canCreateGroup"),
-        canManageGroup = pairs("canManageGroup"),
-        admins = strings("admins"),
-        creds = root.get("creds").elements().asScala.map { o =>
-          o.get("user").asText() ->
-            Acl.Cred(o.get("salt").asText(), o.get("hash").asText())
-        }.toMap))
+  def load(spark: SparkSession, path: String): Option[Acl.State] =
+    JsonDoc.read(spark, path)(in => JsonDoc.mapper.readValue(in, classOf[Doc])).map { d =>
+      def pairs(ps: Seq[Pair]) = ps.map(p => (p.a, p.b)).toSet
+      def access(as: Seq[Access]) = as.map(a => (a.who, a.source) -> levels.getOrElse(a.level,
+        throw new IllegalArgumentException(s"bad level rank: ${a.level}"))).toMap
+      Acl.State(
+        users = d.users.toSet,
+        groups = d.groups.toSet,
+        membership = pairs(d.membership),
+        userAccess = access(d.userAccess),
+        groupAccess = access(d.groupAccess),
+        canCreate = d.canCreate.toSet,
+        canCreateGroup = d.canCreateGroup.toSet,
+        canManageGroup = pairs(d.canManageGroup),
+        admins = d.admins.toSet,
+        creds = d.creds.map(c => c.user -> Acl.Cred(c.salt, c.hash)).toMap)
     }
-  }
 }

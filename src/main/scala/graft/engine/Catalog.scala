@@ -2,7 +2,6 @@ package graft.engine
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 
 /** Versioned, tagged, searchable dataset catalog (SURVEY.md §1.4, §2
   * I11/I14/I15/I18/I19).
@@ -13,10 +12,11 @@ import org.apache.spark.sql.expressions.Window
   * the reference are plain computed columns here.
   *
   * Storage: one parquet dir per source version under
-  * `<warehouse>/data/<name>_v<N>/{untyped,typed}`, plus a small
-  * parquet-backed catalog table at `<warehouse>/catalog`. Catalog
-  * operations are driver-local (the catalog is tiny); data stays
-  * distributed.
+  * `<warehouse>/data/<name>_v<N>/{untyped,typed}`, plus the catalog
+  * itself as one JSON document, `<warehouse>/catalog.json` (a list of
+  * these entries), beside `acl.json`. Catalog metadata is read and
+  * committed on the driver (JsonDoc) and never runs a Spark job; data
+  * stays distributed.
   */
 final case class SourceEntry(
     ix: Long,                    // global source id (sources.ix analog)
@@ -50,34 +50,43 @@ final case class SourceEntry(
 class Catalog(val spark: SparkSession, val warehouse: String) {
   import spark.implicits._
 
-  private def catalogPath = s"$warehouse/catalog"
+  private def catalogPath = s"$warehouse/catalog.json"
 
-  // missing catalog = empty; any OTHER read failure (corruption, IO)
-  // must propagate — swallowing it would make the next commit()
-  // overwrite the real catalog with an empty one
-  private def catalogExists: Boolean = {
-    val p = new org.apache.hadoop.fs.Path(catalogPath)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
-
+  // read on every call, no cache: other Catalogs on this warehouse
+  // commit through the same file. Missing = empty; corrupt throws.
   def entries: Seq[SourceEntry] =
-    if (!catalogExists) Seq.empty
-    else spark.read.parquet(catalogPath).as[SourceEntry].collect().toSeq
+    JsonDoc.read(spark, catalogPath)(in =>
+      JsonDoc.mapper.readValue(in, classOf[Array[SourceEntry]]).toSeq).getOrElse(Seq.empty)
 
   // write-then-swap: never read+overwrite the catalog in place
-  private def commit(es: Seq[SourceEntry]): Unit = {
-    val tmp = new org.apache.hadoop.fs.Path(catalogPath + "_tmp")
-    val dst = new org.apache.hadoop.fs.Path(catalogPath)
-    es.toDS().coalesce(1).write.mode(SaveMode.Overwrite).parquet(tmp.toString)
+  private def commit(es: Seq[SourceEntry]): Unit = JsonDoc.write(spark, catalogPath, es)
+
+  private def entry(name: String, version: Int): SourceEntry =
+    entries.find(x => x.name == name && x.version == version)
+      .getOrElse(throw new NoSuchElementException(s"$name v$version"))
+
+  /** Rename-aside swap of a data directory: write `df` to `<path>_new`,
+    * move the live copy ASIDE to `<path>_old` (never deleted inside the
+    * window), move the new copy in, run `commitCatalog`, and only then
+    * drop the aside copy. A crash anywhere leaves the old data at `path`
+    * or restorable at `<path>_old`; the catalog, committed last, never
+    * points at deleted data.
+    */
+  private def swapData(path: String, df: DataFrame)(commitCatalog: => Unit): Unit = {
+    val dst = new org.apache.hadoop.fs.Path(path)
+    val tmp = new org.apache.hadoop.fs.Path(path + "_new")
+    val old = new org.apache.hadoop.fs.Path(path + "_old")
+    df.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
     val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(dst)) fs.delete(dst, true)
+    if (fs.exists(old)) fs.delete(old, true)
+    if (fs.exists(dst)) fs.rename(dst, old)
     fs.rename(tmp, dst)
+    commitCatalog
+    fs.delete(old, true)
   }
 
   /** The catalog as a DataFrame (for the search operators S1–S9). */
-  def df: DataFrame =
-    if (!catalogExists) Seq.empty[SourceEntry].toDS().toDF()
-    else spark.read.parquet(catalogPath)
+  def df: DataFrame = entries.toDS().toDF()
 
   /** Ingest a prepared dataset as a new version of `name` (I14): version
     * = max+1, older versions auto-deprecated (DB/Sources.hs:80-85).
@@ -146,13 +155,13 @@ class Catalog(val spark: SparkSession, val warehouse: String) {
   }
 
   /** Friendly-named typed DataFrame of one version (the `<name>_vN` view). */
-  def view(name: String, version: Int): DataFrame = {
-    val e = entries.find(x => x.name == name && x.version == version)
-      .getOrElse(throw new NoSuchElementException(s"$name v$version"))
+  def view(name: String, version: Int): DataFrame = view(entry(name, version))
+
+  private def view(e: SourceEntry): DataFrame =
     if (e.compactedPath.nonEmpty) {
       // the compacted table stores untyped text; re-apply this version's casts
       val raw = spark.read.parquet(e.compactedPath)
-        .filter(array_contains(col("ixs"), version))
+        .filter(array_contains(col("ixs"), e.version))
       // lenient like setColumnType's re-materialization: an overridden
       // type with unparseable values must read as NULL here too, not
       // throw under ANSI at view time
@@ -164,13 +173,10 @@ class Catalog(val spark: SparkSession, val warehouse: String) {
         .toDF("ix" +: e.friendlyNames: _*)
     } else
       spark.read.parquet(e.typedPath).toDF("ix" +: e.friendlyNames: _*)
-  }
 
   /** Latest (non-deprecated if any) version's view. */
-  def view(name: String): DataFrame = {
-    val v = entries.filter(_.name == name).map(_.version).max
-    view(name, v)
-  }
+  def view(name: String): DataFrame =
+    view(entries.filter(_.name == name).maxBy(_.version))
 
   /** Render the whole catalog as deterministic dbinfo text — the
     * `dump-db-info` analog (reference runtests.sh:110-117 ingests the
@@ -238,10 +244,13 @@ class Catalog(val spark: SparkSession, val warehouse: String) {
   /** Register `<name>_vN` (+ bare latest) temp views for the SQL
     * surface; all names pass Names.sanitize so any ingested source
     * name (dots, spaces, leading digits) is queryable, and sqlNames
-    * guarantees no two sources share a registered identifier.
+    * guarantees no two sources share a registered identifier. One
+    * catalog read, one frame per entry: an entry's versioned name and
+    * its bare alias register the same frame.
     */
-  def registerViews(): Unit = sqlNames.foreach { case (n, e) =>
-    view(e.name, e.version).createOrReplaceTempView(n)
+  def registerViews(): Unit = sqlNames.groupMap(_._2)(_._1).foreach { case (e, names) =>
+    val df = view(e)
+    names.foreach(df.createOrReplaceTempView)
   }
 
   /** Column-type override + re-type (reference DB/ColumnSpec.hs:182-189,
@@ -252,8 +261,7 @@ class Catalog(val spark: SparkSession, val warehouse: String) {
     * re-type; overriding to TEXT always restores the raw strings.
     */
   def setColumnType(name: String, version: Int, colIx: Int, t: ColumnType): SourceEntry = {
-    val e = entries.find(x => x.name == name && x.version == version)
-      .getOrElse(throw new NoSuchElementException(s"$name v$version"))
+    val e = entry(name, version)
     require(colIx >= 1 && colIx <= e.colTypes.length,
       s"no column $colIx in $name v$version (${e.colTypes.length} columns)")
     rebuildTyped(e, e.colTypes.updated(colIx - 1, t.displayName))
@@ -270,8 +278,7 @@ class Catalog(val spark: SparkSession, val warehouse: String) {
     * typed ingest by construction.
     */
   def makeTyped(name: String, version: Int): SourceEntry = {
-    val e = entries.find(x => x.name == name && x.version == version)
-      .getOrElse(throw new NoSuchElementException(s"$name v$version"))
+    val e = entry(name, version)
     val untyped = spark.read.parquet(e.untypedPath)
     val dataCols = e.colTypes.indices.map(i => col(s"c${i + 1}"))
     val inferred = Infer.inferColumns(untyped.select(dataCols: _*))
@@ -282,32 +289,18 @@ class Catalog(val spark: SparkSession, val warehouse: String) {
   }
 
   private def rebuildTyped(e: SourceEntry, newTypes: Seq[String]): SourceEntry = {
-    val (name, version) = (e.name, e.version)
     val untyped = spark.read.parquet(e.untypedPath)
     val cols = newTypes.zipWithIndex.map { case (tn, i) =>
       Ingest.castTo(col(s"c${i + 1}"), ColumnType.fromDisplay(tn), lenient = true)
         .as(s"c${i + 1}")
     }
-    val typed = untyped.select(col("ix") +: cols: _*)
-    // write-then-swap, like commit(): never overwrite typed in place.
-    // The old copy is renamed ASIDE (not deleted) before the new one
-    // moves in, so a crash anywhere in the window leaves either the old
-    // data at typedPath or restorable at typedPath_old — the catalog
-    // (committed last, still holding the old colTypes until then) never
-    // points at deleted data.
-    val tmp = new org.apache.hadoop.fs.Path(e.typedPath + "_retype")
-    val dst = new org.apache.hadoop.fs.Path(e.typedPath)
-    val old = new org.apache.hadoop.fs.Path(e.typedPath + "_old")
-    typed.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-    val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(old)) fs.delete(old, true)
-    if (fs.exists(dst)) fs.rename(dst, old)
-    fs.rename(tmp, dst)
-
+    // never overwrite typed in place; the catalog keeps the old
+    // colTypes until the new copy is in
     val updated = e.copy(colTypes = newTypes)
-    commit(entries.map(x =>
-      if (x.name == name && x.version == version) updated else x))
-    fs.delete(old, true) // commit durable; drop the aside copy
+    swapData(e.typedPath, untyped.select(col("ix") +: cols: _*)) {
+      commit(entries.map(x =>
+        if (x.name == e.name && x.version == e.version) updated else x))
+    }
     updated
   }
 
@@ -388,21 +381,11 @@ class Catalog(val spark: SparkSession, val warehouse: String) {
       .agg(sort_array(collect_set(col("srcver"))).as("ixs"))
       .select(col("orig_ix").as("ix") +: dataCols :+ col("ixs"): _*)
 
-    // rename-aside swap (same invariant as setColumnType): the old
-    // compacted copy — which committed entries may already point at —
-    // is never deleted inside the swap window
+    // committed entries may already point at an older compacted copy
     val compactedPath = s"$warehouse/data/${name}_compacted"
-    val dst = new org.apache.hadoop.fs.Path(compactedPath)
-    val tmp = new org.apache.hadoop.fs.Path(compactedPath + "_new")
-    val old = new org.apache.hadoop.fs.Path(compactedPath + "_old")
-    merged.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-    val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(old)) fs.delete(old, true)
-    if (fs.exists(dst)) fs.rename(dst, old)
-    fs.rename(tmp, dst)
-
-    commit(entries.map(e =>
-      if (e.name == name) e.copy(compactedPath = compactedPath) else e))
-    fs.delete(old, true) // commit durable; drop the aside copy
+    swapData(compactedPath, merged) {
+      commit(entries.map(e =>
+        if (e.name == name) e.copy(compactedPath = compactedPath) else e))
+    }
   }
 }

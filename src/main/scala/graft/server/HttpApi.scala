@@ -3,8 +3,8 @@ package graft.server
 import java.net.InetSocketAddress
 import java.net.URLDecoder
 import java.nio.charset.StandardCharsets.UTF_8
-import java.util.concurrent.ConcurrentHashMap
-import java.util.concurrent.atomic.AtomicReference
+import java.util.concurrent.{ConcurrentHashMap, ExecutorService, Executors, TimeUnit}
+import java.util.concurrent.atomic.{AtomicInteger, AtomicReference}
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 
@@ -87,7 +87,7 @@ import graft.engine._
   * ACL/user state is DURABLE at `<warehouse>/acl.json` (AclStore —
   * the analog of the reference's Postgres security tables); session
   * tokens are ephemeral. Catalog and ACL mutations serialize on one
-  * lock, reads are lock-free against the parquet-backed catalog.
+  * lock; reads are lock-free, each re-reading `catalog.json`.
   */
 class HttpApi(val cat: Catalog, defaultPublic: Boolean = true,
               adminPass: String = "",
@@ -128,17 +128,31 @@ class HttpApi(val cat: Catalog, defaultPublic: Boolean = true,
   private val authTokens = new ConcurrentHashMap[String, String]() // token -> user
 
   private var server: HttpServer = _
+  private var pool: ExecutorService = _
 
-  /** Bind (port 0 = ephemeral) and start; returns the bound port. */
+  /** Bind (port 0 = ephemeral) and start; returns the bound port. The
+    * handler threads are named `graft-http-<port>-<n>`.
+    */
   def start(port: Int = 0): Int = {
     server = HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
+    val bound = server.getAddress.getPort
+    val n = new AtomicInteger()
+    pool = Executors.newFixedThreadPool(4, (r: Runnable) =>
+      new Thread(r, s"graft-http-$bound-${n.incrementAndGet()}"))
     server.createContext("/", (ex: HttpExchange) => handle(ex))
-    server.setExecutor(java.util.concurrent.Executors.newFixedThreadPool(4))
+    server.setExecutor(pool)
     server.start()
-    server.getAddress.getPort
+    bound
   }
 
-  def stop(): Unit = if (server != null) server.stop(0)
+  /** Stop serving and end the handler threads. */
+  def stop(): Unit = {
+    if (server != null) server.stop(0)
+    if (pool != null) {
+      pool.shutdown()
+      pool.awaitTermination(10, TimeUnit.SECONDS)
+    }
+  }
 
   // ---------------- tiny JSON rendering (no deps) ----------------
 

@@ -106,13 +106,11 @@ class CatalogSpec extends AnyFunSuite {
     val cat = freshCatalog()
     cat.ingest("t", Ingest.csv(spark, res("typeinfer.csv")), "csv")
     assert(cat.entries.length == 1)
-    // corrupt the committed catalog: a non-parquet part file. The read
-    // must PROPAGATE the failure — the old catch-all returned Seq.empty,
-    // and the next commit() would overwrite the real catalog with it.
-    val dir = new java.io.File(s"${cat.warehouse}/catalog")
-    dir.listFiles().filter(_.getName.endsWith(".parquet")).foreach { f =>
-      java.nio.file.Files.writeString(f.toPath, "this is not parquet")
-    }
+    // corrupt the committed catalog document. The read must PROPAGATE
+    // the failure — a catch-all returning Seq.empty would let the next
+    // commit() overwrite the real catalog with it.
+    val doc = java.nio.file.Paths.get(cat.warehouse, "catalog.json")
+    java.nio.file.Files.writeString(doc, "this is not json")
     intercept[Exception] { cat.entries }
     // a genuinely MISSING catalog is still just empty
     val empty = freshCatalog()
