@@ -3,29 +3,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      // events.parquet carries TIMESTAMP(NANOS); Spark only reads it as long
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // driver r9 regenerated events.parquet with naive-micros timestamps
-      // (isAdjustedToUTC=false); read them as LTZ like every prior round
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      // 49 distinct queries × 2 passes thrash the default 100-entry
-      // janino cache: heavyweight projections (LSH hyperplanes, minhash
-      // aggregates) get evicted between passes and re-pay multi-second
-      // compiles, measuring the cache, not the query. Raised 8000 →
-      // 16000 in r15: the registry grew past 8000 generated stages per
-      // 2-pass run again (338 gates), and the same-session A/B read
-      // ~5% median per-query / ~8% matched-set in favor of 16000.
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "16000"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build()
     // headline queries only: the im* entries are engine-flow correctness
     // artifacts (tiny embedded inputs + temp-warehouse writes), not
     // data-path performance. Run the whole set TWICE and report the
@@ -468,7 +446,7 @@ object Bench {
     // the JIT-settling trace (last entry == probes[0], the settled
     // reading): lets a reader separate warm-up from interference
     val warmupJson = probeWarmup.map(f2).mkString("[", ",", "]")
-    val summaryLine = s"""{"metric":"total","value":$total,"unit":"sec","n":${results2.size},"warm_total":$total,"cold_total":$coldTotal,"warm_min_total":${f2(minTotal)},"errors":$errJson,"vs_baseline_matched":${f2(matchedTotal / baselineTotal)},"vs_baseline_matched_min":${f2(matchedMinTotal / baselineTotal)},"matched_warm_total":${f2(matchedTotal)},"matched_min_total":${f2(matchedMinTotal)},"matched_n":${matched.size},"vs_baseline":${f2(total / baselineTotal)},"vs_baseline_per_query":${f2((total / results2.size.max(1)) / (baselineTotal / baselineN))},"baseline_warm_total":$baselineTotal,"baseline_n":$baselineN,"adaptive_passes":$adaptive,"adaptive_log":$adaptJson,"probes":$probeJson,"probe_warmup":$warmupJson,"engine_total":${f2(engineTotal)},"engine_total_2":${f2(engineTotal2)},"engine_min_total":${f2(engineMinTotal)},"engine_n":${engineTimes.size},"engine_par":$enginePar,"sentinel":${dict(sentinel)},"host_page_cache_mb":$cachedMb,"host_load_1m":$load1m,"host_load_1m_start":$load1mStart,"jvm_max_heap_mb":$heapMb,"jvm_gc":"$gcNames","jvm_gc_ms":$gcMs,"jvm_gc_count":$gcN,"spark_cpus":$cpus,"queries":$slowest,"queries_are":"slowest 8 by per-query BEST-OF-PASSES min(cold,warm); warm dict folds adaptive re-runs (best warm-state pass per query, see adaptive_log) so a one-pass host-load episode cannot fake a gate failure; engine_total = WALL of the FIRST engine_par-way concurrent pass over the non-headline flow gates (drift detection only; per-gate walls measured under that concurrency); engine_min_total = min of two pass walls (a load episode inflates one pass, a real regression inflates both); vs_baseline_matched = SAME 49 baseline queries vs their recorded 50 s","sf":"$sfDir"}"""
+    val summaryLine = s"""{"metric":"total","value":$total,"unit":"sec","n":${results2.size},"warm_total":$total,"cold_total":$coldTotal,"warm_min_total":${f2(minTotal)},"errors":$errJson,"vs_baseline_matched":${f2(matchedTotal / baselineTotal)},"vs_baseline_matched_min":${f2(matchedMinTotal / baselineTotal)},"matched_warm_total":${f2(matchedTotal)},"matched_min_total":${f2(matchedMinTotal)},"matched_n":${matched.size},"vs_baseline":${f2(total / baselineTotal)},"vs_baseline_per_query":${f2((total / results2.size.max(1)) / (baselineTotal / baselineN))},"baseline_warm_total":$baselineTotal,"baseline_n":$baselineN,"adaptive_passes":$adaptive,"adaptive_log":$adaptJson,"probes":$probeJson,"probe_warmup":$warmupJson,"engine_total":${f2(engineTotal)},"engine_total_2":${f2(engineTotal2)},"engine_min_total":${f2(engineMinTotal)},"engine_n":${engineTimes.size},"engine_par":$enginePar,"sentinel":${dict(sentinel)},"host_page_cache_mb":$cachedMb,"host_load_1m":$load1m,"host_load_1m_start":$load1mStart,"jvm_max_heap_mb":$heapMb,"jvm_gc":"$gcNames","jvm_gc_ms":$gcMs,"jvm_gc_count":$gcN,"spark_cpus":${GraftSession.cpus},"queries":$slowest,"queries_are":"slowest 8 by per-query BEST-OF-PASSES min(cold,warm); warm dict folds adaptive re-runs (best warm-state pass per query, see adaptive_log) so a one-pass host-load episode cannot fake a gate failure; engine_total = WALL of the FIRST engine_par-way concurrent pass over the non-headline flow gates (drift detection only; per-gate walls measured under that concurrency); engine_min_total = min of two pass walls (a load episode inflates one pass, a real regression inflates both); vs_baseline_matched = SAME 49 baseline queries vs their recorded 50 s","sf":"$sfDir"}"""
     println(summaryLine)
     // Triple-path emission (r19 verdict #1): every BENCH_r*.json back to
     // r16 has parsed:null because sbt's logger wrapped this line in an

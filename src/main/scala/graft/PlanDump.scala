@@ -1,13 +1,13 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths, StandardOpenOption}
 import java.nio.charset.StandardCharsets
 
 /** Measurement tooling (optimization rounds): dump the formatted
   * physical plan of each registered query to one file per query, so
   * plan-shape claims (Exchange count, join strategy, PushedFilters)
-  * are checkable without running Spark. Session confs mirror Bench so
-  * the dumped plans are the benched plans.
+  * are checkable without running Spark. The session comes from
+  * GraftSession, as Bench's does, so the dumped plans are the benched
+  * plans.
   *
   * Usage: runMain graft.PlanDump <outDir> [names] [sfDir]
   *   names: comma-separated query names, or "headline" (Bench's
@@ -19,18 +19,7 @@ object PlanDump {
     val namesArg = if (args.length > 1) args(1) else "headline"
     val sfDir = if (args.length > 2) args(2)
       else sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "16000"))
-      .getOrCreate()
+    val spark = GraftSession.build()
     spark.sparkContext.setLogLevel("ERROR")
     Files.createDirectories(Paths.get(outDir))
     val all = SparkEntry.queries

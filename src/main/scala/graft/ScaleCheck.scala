@@ -1121,7 +1121,6 @@ object ScaleCheck {
     // own probe subject); the measured pass is the codegen'd encode +
     // one partial-aggregated groupBy whose shuffle carries only the
     // per-(lang, source) partials — slope must be scan-bound ~linear
-    graft.functions.TextFunctions.register(spark)
     val base = Tables.load(spark, "/root/testdata/sf0.1", "documents")
     val merges = graft.ops.TextAnalysis.bpeTrain(base, numMerges = 12)
       .map(mg => (mg._2, mg._3))
@@ -1204,7 +1203,6 @@ object ScaleCheck {
       val t0 = System.nanoTime(); val r = f
       println(f"[scale] $label rows=$r%d sec=${(System.nanoTime() - t0) / 1e9}%.1f")
     }
-    graft.functions.TextFunctions.register(spark)
     val base = Tables.load(spark, "/root/testdata/sf0.1", "documents")
     val vocab = graft.ops.TextAnalysis.unigramTrain(base, vocabSize = 48,
       rounds = 2, maxPieceLen = 4).map(v => (v._2, v._4))
@@ -1586,16 +1584,7 @@ object ScaleCheck {
 
   def main(args: Array[String]): Unit = {
     val path = args.headOption.getOrElse("/tmp/many_rows.csv")
-    val spark = SparkSession.builder().master("local[32]")
-      .appName("graft-scale")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build()
 
     if (path == "quick") {
       quickBench(spark, args(1), args(2).split(',').toSeq)

@@ -173,23 +173,11 @@ case class CrossPairs(left: Expression, right: Expression)
 }
 
 object ArrayFunctions {
-  /** Register `graft_pair_combos` / `graft_cross_pairs`. Idempotent. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_pair_combos", exprs => PairCombinations(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_cross_pairs", exprs => CrossPairs(exprs.head, exprs(1)), "built-in")
-  }
-
-  /** Column API: all index-ordered pairs of a sorted distinct array.
-    * Requires `register(spark)` on the session first.
-    */
+  /** Column API: all index-ordered pairs of a sorted distinct array. */
   def pair_combos(arr: Column): Column =
     org.apache.spark.sql.functions.call_function("graft_pair_combos", arr)
 
-  /** Column API: the |A|×|B| cross-side pairs of two arrays.
-    * Requires `register(spark)` on the session first.
-    */
+  /** Column API: the |A|×|B| cross-side pairs of two arrays. */
   def cross_pairs(a: Column, b: Column): Column =
     org.apache.spark.sql.functions.call_function("graft_cross_pairs", a, b)
 }

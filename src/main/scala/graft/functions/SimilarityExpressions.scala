@@ -96,14 +96,7 @@ case class JaroWinkler(left: Expression, right: Expression)
 }
 
 object SimilarityFunctions {
-  /** Register `graft_jaro_winkler`. Idempotent. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_jaro_winkler",
-      exprs => JaroWinkler(exprs(0), exprs(1)),
-      "built-in")
-
-  /** Column API; requires `register(spark)` on the session first. */
+  /** Column API: Jaro-Winkler similarity of two string columns. */
   def jaro_winkler(a: Column, b: Column): Column =
     org.apache.spark.sql.functions.call_function("graft_jaro_winkler", a, b)
 }

@@ -1,7 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -47,22 +46,7 @@ case class BloomContainsLong(filterBytes: Array[Byte], child: Expression)
 }
 
 object SketchFunctions {
-  /** Register `graft_bloom_contains(<binary literal>, key)`; the first
-    * argument must be a foldable binary literal (the serialized
-    * sketch), extracted at resolution time so executors never carry it
-    * as a per-row column. Idempotent.
-    */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_bloom_contains", exprs => {
-        require(exprs.head.foldable, "bloom sketch must be a literal")
-        BloomContainsLong(
-          exprs.head.eval(InternalRow.empty).asInstanceOf[Array[Byte]], exprs(1))
-      }, "built-in")
-
-  /** Column API: membership of `key` in a serialized Bloom sketch.
-    * Requires `register(spark)` on the session first.
-    */
+  /** Column API: membership of `key` in a serialized Bloom sketch. */
   def bloom_contains(filterBytes: Array[Byte], key: Column): Column =
     org.apache.spark.sql.functions.call_function("graft_bloom_contains",
       org.apache.spark.sql.functions.lit(filterBytes), key)

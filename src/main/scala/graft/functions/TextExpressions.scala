@@ -512,50 +512,7 @@ case class MultiMatch(child: Expression, packedPhrases: String)
 }
 
 object TextFunctions {
-  /** Register `graft_shingles` (registry + call_function is the public
-    * route to a custom Expression in Spark 4). Idempotent.
-    */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_shingles",
-      exprs => WordShingles(exprs(0),
-        exprs(1).eval(null).asInstanceOf[Number].intValue()),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_minhash_hashes",
-      exprs => MinhashHashes(exprs(0),
-        exprs(1).eval(null).asInstanceOf[Number].intValue()),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_simhash_pack",
-      exprs => SimhashVotePack(exprs(0)),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_bpe_encode",
-      exprs => BpeEncode(exprs(0),
-        exprs(1).eval(null).asInstanceOf[UTF8String].toString),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_unigram_encode",
-      exprs => UnigramEncode(exprs(0),
-        exprs(1).eval(null).asInstanceOf[UTF8String].toString),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_multi_match",
-      exprs => MultiMatch(exprs(0),
-        exprs(1).eval(null).asInstanceOf[UTF8String].toString),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_unorm",
-      exprs => UnicodeNormalize(exprs(0),
-        exprs(1).eval(null).asInstanceOf[UTF8String].toString,
-        exprs(2).eval(null).asInstanceOf[Boolean]),
-      "built-in")
-  }
-
-  /** Column API: word k-shingles of a string column. Requires
-    * `register(spark)` on the session first.
-    */
+  /** Column API: word k-shingles of a string column. */
   def shingles(text: Column, k: Int): Column =
     org.apache.spark.sql.functions.call_function("graft_shingles",
       text, org.apache.spark.sql.functions.lit(k))

@@ -69,18 +69,7 @@ case class FloatDotProduct(left: Expression, right: Expression)
 }
 
 object VectorFunctions {
-  /** Register `float_dot` in the session's function registry (the
-    * Column↔Expression bridge is session-internal in Spark 4, so the
-    * registry + call_function is the public route to a custom
-    * Expression from the DSL). Idempotent.
-    */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_float_dot", exprs => FloatDotProduct(exprs(0), exprs(1)), "built-in")
-
-  /** Column API: dot(a, b) over array<float> columns. Requires
-    * `register(spark)` on the session first.
-    */
+  /** Column API: dot(a, b) over array<float> columns. */
   def float_dot(a: Column, b: Column): Column =
     org.apache.spark.sql.functions.call_function("graft_float_dot", a, b)
 }

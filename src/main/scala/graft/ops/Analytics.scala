@@ -476,7 +476,6 @@ object Analytics {
     // map-side straight into the (item_a, item_b) partial agg — no
     // self-join, no buffered many-to-many merge scan, and no
     // interpreted HOF lambdas in the hot loop
-    graft.functions.ArrayFunctions.register(df.sparkSession)
     val pairs = bi.groupBy(col("bk"))
       .agg(array_sort(collect_set(col("it"))).as("__m"))
       .select(explode(graft.functions.ArrayFunctions.pair_combos(col("__m")))
@@ -535,7 +534,6 @@ object Analytics {
     // group-collect + native pair-combination codegen (basketLift's
     // rationale): the per-user item set is guard-bounded, so the
     // explode is ≤ maxItemsPerUser²/2 per user, map-side, tight loop
-    graft.functions.ArrayFunctions.register(df.sparkSession)
     val co0 = ui.groupBy(col("u"))
       .agg(array_sort(collect_set(col("it"))).as("__m"))
       .select(explode(graft.functions.ArrayFunctions.pair_combos(col("__m")))

@@ -39,9 +39,6 @@ object Curation {
     erasePermitPool
   }
 
-  private def registerOn(df: DataFrame): Unit =
-    graft.functions.TextFunctions.register(df.sparkSession)
-
   /** Train/eval contamination check: for every training doc sharing at
     * least one word n-gram with the eval corpus, emit
     * (doc_id, shared_grams = distinct overlapping n-grams).
@@ -56,7 +53,6 @@ object Curation {
     */
   def contamination(train: DataFrame, eval: DataFrame, n: Int = 13,
                     text: Column = col("text")): DataFrame = {
-    registerOn(train)
     val evalGrams = eval
       .select(explode(graft.functions.TextFunctions.shingles(text, n)).as("g"))
       .distinct()
@@ -83,7 +79,6 @@ object Curation {
   def contaminationAttribution(train: DataFrame, eval: DataFrame,
                                n: Int = 13,
                                text: Column = col("text")): DataFrame = {
-    registerOn(train)
     val evalGrams = eval
       .select(col("doc_id").as("eval_doc_id"),
         explode(graft.functions.TextFunctions.shingles(text, n)).as("g"))
@@ -125,8 +120,6 @@ object Curation {
   def bloomDecontaminate(train: DataFrame, eval: DataFrame, n: Int = 13,
                          numBits: Long = 1L << 22,
                          text: Column = col("text")): DataFrame = {
-    registerOn(train)
-    graft.functions.SketchFunctions.register(train.sparkSession)
     def h(g: Column): Column =
       conv(substring(md5(g), 1, 15), 16, 10).cast("long")
     val evalGrams = eval
@@ -1815,7 +1808,6 @@ object Curation {
                            maxHits: Long = 0,
                            text: Column = col("text")): DataFrame = {
     require(phrases.nonEmpty, "blocklistFilterLarge needs phrases")
-    graft.functions.TextFunctions.register(df.sparkSession)
     val mm = graft.functions.TextFunctions.multi_match(text, phrases)
     df.select(col("doc_id"), mm.as("mm"))
       .select(col("doc_id"),
@@ -2080,7 +2072,6 @@ object Curation {
   def ngramNovelty(newDocs: DataFrame, base: DataFrame, n: Int = 13,
                    text: Column = col("text"),
                    id: Column = col("doc_id")): DataFrame = {
-    registerOn(newDocs)
     val baseGrams = base
       .select(explode(graft.functions.TextFunctions.shingles(text, n)).as("g"))
       .distinct()

@@ -298,8 +298,7 @@ object Dedup {
     * joined). Backed by the native WordShingles expression — the
     * composed HOF form below computes the identical value but pays
     * three interpreted lambdas per shingle, which dominates the whole
-    * dedup pipeline (see TextExpressions.scala). Callers must
-    * register the function on the session (Dedup entry points do).
+    * dedup pipeline (see TextExpressions.scala).
     */
   def shingles(text: Column, k: Int = 3): Column =
     graft.functions.TextFunctions.shingles(text, k)
@@ -314,11 +313,6 @@ object Dedup {
     array_distinct(
       transform(sequence(lit(1), greatest(size(toks) - (k - 1), lit(1))),
         i => concat_ws(" ", (0 until k).map(o => try_element_at(toks, i + o)): _*)))
-  }
-
-  private def registerOn(df: DataFrame): Unit = {
-    graft.functions.TextFunctions.register(df.sparkSession)
-    graft.functions.ArrayFunctions.register(df.sparkSession)
   }
 
   /** Drop shingles whose document frequency exceeds `maxDf`: a shingle
@@ -346,7 +340,6 @@ object Dedup {
                         numHashes: Int = 12, k: Int = 3,
                         maxShingleDf: Int = 1000,
                         idCols: Seq[String] = Seq("doc_id")): DataFrame = {
-    registerOn(df)
     val ex = dfCapped(df.select(idCols.map(col) :+ explode(shingles(text, k)).as("g"): _*),
       maxShingleDf)
     // native MinhashHashes: one reused digest per row for all
@@ -490,7 +483,6 @@ object Dedup {
     * bits 32..63 = nibble b's second bit (SimhashVotePack).
     */
   def simhash(df: DataFrame, text: Column = col("text")): DataFrame = {
-    registerOn(df)
     val toks = df.select(col("doc_id"), explode(split(text, " ")).as("tok"))
       .withColumn("h", graft.functions.TextFunctions.simhash_pack(col("tok")))
     // 64 sum-aggregates, one per bit position — single shuffle, no ×64
@@ -587,7 +579,6 @@ object Dedup {
     require(sliceArity >= 1 && sliceArity <= numSlices - maxHamming,
       s"sliceArity $sliceArity breaks exactness at radius $maxHamming " +
         s"with $numSlices slices (need arity ≤ ${numSlices - maxHamming})")
-    registerOn(df)
     val w = 64 / numSlices
     val mask = if (w == 64) -1L else (1L << w) - 1
     val base = df.select(col("doc_id"), hash.cast("long").as("__h"))
@@ -620,7 +611,6 @@ object Dedup {
   def ngramJaccard(df: DataFrame, text: Column = col("text"),
                    k: Int = 3, threshold: Double = 0.5,
                    maxShingleDf: Int = 1000): DataFrame = {
-    registerOn(df)
     val sets = df.select(col("doc_id"), shingles(text, k).as("sh"))
       .withColumn("sz", size(col("sh")))
       .withColumn("block", substring(md5(element_at(sort_array(col("sh")), 1)), 1, 8))
@@ -674,7 +664,6 @@ object Dedup {
   def containmentPairs(df: DataFrame, text: Column = col("text"),
                        k: Int = 3, threshold: Double = 0.8,
                        maxShingleDf: Int = 200): DataFrame = {
-    registerOn(df)
     val sets = df.select(col("doc_id"), shingles(text, k).as("sh"))
       .withColumn("sz", size(col("sh")))
     val ex = dfCapped(

@@ -192,7 +192,6 @@ object Embeddings {
   def pqEncode(corpus: DataFrame, codebooks: Array[Array[Array[Float]]],
                out: String = "codes"): DataFrame = {
     val spark = corpus.sparkSession
-    graft.functions.VectorFunctions.register(spark)
     import spark.implicits._
     val m = codebooks.length
     val sub = codebooks(0)(0).length

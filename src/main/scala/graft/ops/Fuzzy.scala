@@ -76,7 +76,6 @@ object Fuzzy {
                        maxBucket: Int = 10000): DataFrame = {
     require(minSim > 0 && minSim <= 1, s"minSim out of range: $minSim")
     require(blockPrefix >= 1, s"blockPrefix must be >= 1: $blockPrefix")
-    graft.functions.SimilarityFunctions.register(df.sparkSession)
     val names = df.select(col(column).as("__v"))
       .filter(col("__v").isNotNull).distinct()
       .withColumn("__blk", substring(col("__v"), 1, blockPrefix))

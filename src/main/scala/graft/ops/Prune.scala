@@ -50,7 +50,6 @@ object Prune {
     * sketch (keeps all true matches; false positives pass at ~fpp).
     */
   def bloomPrune(df: DataFrame, key: Column, sketch: Array[Byte]): DataFrame = {
-    SketchFunctions.register(df.sparkSession)
     df.filter(SketchFunctions.bloom_contains(sketch, key))
   }
 

@@ -26,8 +26,7 @@ object Similarity {
 
   /** Dot product of two float-array columns (float products, double
     * accumulation, array order — matched exactly by the oracles).
-    * Uses the native codegen FloatDotProduct expression; call sites
-    * register it on their session (registerOn). The composed
+    * Uses the native codegen FloatDotProduct expression. The composed
     * zip_with/aggregate fallback computes the identical value.
     */
   def dot(x: Column, y: Column): Column =
@@ -36,11 +35,6 @@ object Similarity {
   /** Composed higher-order-function form (no custom expression). */
   def dotHof(x: Column, y: Column): Column =
     aggregate(zip_with(x, y, (p, q) => p * q), lit(0.0d), (acc, v) => acc + v)
-
-  private def registerOn(df: DataFrame): Unit = {
-    graft.functions.VectorFunctions.register(df.sparkSession)
-    graft.functions.ArrayFunctions.register(df.sparkSession)
-  }
 
   /** cos(a, b) as a column expression over two float-array columns. */
   def cosine(a: Column, b: Column): Column =
@@ -82,7 +76,6 @@ object Similarity {
     * results are stable across engines and runs.
     */
   def bruteForceTopK(corpus: DataFrame, queries: DataFrame, k: Int): DataFrame = {
-    registerOn(corpus)
     val q = broadcast(queries.select(col("vec_id").as("query_id"),
       col("embedding").as("q_emb"),
       sqrt(dot(col("embedding"), col("embedding"))).as("q_norm")))
@@ -132,7 +125,6 @@ object Similarity {
                  annTables: Int = 2, nBits: Int = 0,
                  maxBucket: Int = 10000): DataFrame = {
     require(k >= 1, s"k must be >= 1: $k")
-    registerOn(corpus)
     val corpusN = corpus.count()
     val scored =
       if (corpusN <= annThreshold) {
@@ -305,7 +297,6 @@ object Similarity {
   def hardNegatives(corpus: DataFrame, queries: DataFrame, k: Int,
                     annThreshold: Long = 50000,
                     annTables: Int = 4): DataFrame = {
-    registerOn(corpus)
     val (corpusN, queriesN) = (corpus.count(), queries.count())
     val useAnn = queriesN > annThreshold ||
       (corpusN > annThreshold &&
@@ -478,7 +469,6 @@ object Similarity {
     */
   def lshTopK(corpus: DataFrame, dim: Int, k: Int, nBits: Int = 0,
               tables: Int = 2, maxBucket: Int = 10000): DataFrame = {
-    registerOn(corpus)
     val bits = if (nBits > 0) nBits else bitsFor(corpus.count())
     val cand0 = bucketCandidates(bucketized(corpus, dim, bits, tables), maxBucket,
       (a, b) => when(a("vec_id") =!= b("vec_id"),
@@ -592,7 +582,6 @@ object Similarity {
 
   def ivfTopK(corpus: DataFrame, dim: Int, k: Int, numCells: Int = 64,
               maxBucket: Int = 10000, kmeansIters: Int = 0): DataFrame = {
-    registerOn(corpus)
     val base = corpus.select(col("vec_id"), col("embedding"),
       sqrt(dot(col("embedding"), col("embedding"))).as("norm"))
     val cells = coarseCells(corpus, base, numCells, kmeansIters)
@@ -634,7 +623,6 @@ object Similarity {
   def ivfPqTopK(corpus: DataFrame, dim: Int, k: Int, numCells: Int = 64,
                 m: Int = 8, codebookK: Int = 16, kmeansIters: Int = 0,
                 maxBucket: Int = 10000): DataFrame = {
-    registerOn(corpus)
     val cbs = Embeddings.pqCodebooks(corpus, m, codebookK)
     val enc = Embeddings.pqEncode(corpus, cbs)
     val base = corpus.select(col("vec_id"), col("embedding"),
@@ -704,7 +692,6 @@ object Similarity {
     */
   def semDedup(corpus: DataFrame, dim: Int, eps: Double, numCells: Int = 64,
                maxBucket: Int = 10000, kmeansIters: Int = 0): DataFrame = {
-    registerOn(corpus)
     val base = corpus.select(col("vec_id"), col("embedding"),
       sqrt(dot(col("embedding"), col("embedding"))).as("norm"))
     val cells = coarseCells(corpus, base, numCells, kmeansIters)
@@ -770,7 +757,6 @@ object Similarity {
               lambda: Double = 0.7): DataFrame = {
     require(k >= 1 && k <= 1000, s"k out of range: $k")
     require(lambda > 0 && lambda <= 1, s"lambda out of (0,1]: $lambda")
-    registerOn(corpus)
     val spark = corpus.sparkSession
     import spark.implicits._
     val qEmb = corpus.filter(col("vec_id") === queryId)
@@ -816,7 +802,6 @@ object Similarity {
     */
   def cosineDups(corpus: DataFrame, dim: Int, threshold: Double,
                  nBits: Int = 0, tables: Int = 2, maxBucket: Int = 10000): DataFrame = {
-    registerOn(corpus)
     val bits = if (nBits > 0) nBits else bitsFor(corpus.count())
     val pairs = bucketCandidates(bucketized(corpus, dim, bits, tables), maxBucket,
       (a, b) => when(a("vec_id") < b("vec_id"),
@@ -847,7 +832,6 @@ object Similarity {
                              threshold: Double, nBits: Int = 0,
                              tables: Int = 2,
                              maxBucket: Int = 10000): DataFrame = {
-    registerOn(newBatch)
     val bits = if (nBits > 0) nBits else bitsFor(base.count())
     val side = "__icd_new"
     require(!newBatch.columns.contains(side), s"column $side would be clobbered")

@@ -296,7 +296,6 @@ object Sketches {
                       absent: DataFrame, absentKey: Column,
                       expectedItems: Long, numBits: Long,
                       fpBound: Double): DataFrame = {
-    graft.functions.SketchFunctions.register(build.sparkSession)
     val filt = build.stat.bloomFilter(key.cast("long"), expectedItems, numBits)
     val bytes = {
       val bos = new java.io.ByteArrayOutputStream()

@@ -533,8 +533,6 @@ object TextAnalysis {
     require(vocabSize > 0, s"vocabSize must be positive: $vocabSize")
     require(rounds > 0, s"rounds must be positive: $rounds")
     require(maxPieceLen >= 2, s"maxPieceLen must be >= 2: $maxPieceLen")
-    val spark = df.sparkSession
-    graft.functions.TextFunctions.register(spark)
     val words = df.select(explode(split(text, "\\s+")).as("w"))
       .filter(col("w") =!= "")
       .groupBy(col("w")).agg(count(lit(1)).as("cnt"))

@@ -1195,7 +1195,6 @@ object CurationOps {
     // tokens retile that total per shard.
     NamedQuery("pp17_learned_tokenized_landing",
       (s, d) => {
-        graft.functions.TextFunctions.register(s)
         val vocab = graft.ops.TextAnalysis.unigramTrain(docs(s, d),
           vocabSize = 48, rounds = 2, maxPieceLen = 4).map(v => (v._2, v._4))
         val art = java.nio.file.Files.createTempDirectory("pp17v").toString
@@ -1236,7 +1235,6 @@ object CurationOps {
     // StreamingTokenizedSpec.
     NamedQuery("st13_streaming_tokenized_landing",
       (s, d) => {
-        graft.functions.TextFunctions.register(s)
         val ds = docs(s, d).select(col("doc_id"), col("text"))
         val vocab = graft.ops.TextAnalysis.unigramTrain(docs(s, d),
           vocabSize = 48, rounds = 2, maxPieceLen = 4).map(v => (v._2, v._4))
@@ -1465,7 +1463,6 @@ object CurationOps {
     // no gram-set join materializes. Oracle replays the md5 k-min.
     NamedQuery("ov01_corpus_overlap",
       (s, d) => {
-        graft.functions.TextFunctions.register(s)
         val all = docs(s, d)
         def grams(side: DataFrame) = side.select(explode(
           graft.functions.TextFunctions.shingles(col("text"), 13)).as("g"))

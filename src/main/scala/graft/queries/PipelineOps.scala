@@ -234,7 +234,6 @@ object PipelineOps {
     // independent word/byte sums through the two ratio columns.
     NamedQuery("tk05_bpe_fertility",
       (s, d) => {
-        graft.functions.TextFunctions.register(s)
         val merges = TextAnalysis.bpeTrain(docs(s, d), numMerges = 12)
           .map(m => (m._2, m._3))
         TextAnalysis.bpeFertility(docs(s, d), merges)
@@ -734,7 +733,6 @@ object PipelineOps {
     // merge-table format.
     NamedQuery("tk02_bpe_encode",
       (s, d) => {
-        graft.functions.TextFunctions.register(s)
         val merges = TextAnalysis.bpeTrain(docs(s, d), numMerges = 12)
           .map(m => (m._2, m._3))
         val toks = docs(s, d).select(explode(
@@ -810,7 +808,6 @@ object PipelineOps {
     // with tk06's expected counts by construction (same E-step).
     NamedQuery("tk07_unigram_encode",
       (s, d) => {
-        graft.functions.TextFunctions.register(s)
         val vocab = TextAnalysis.unigramTrain(docs(s, d), vocabSize = 48,
           rounds = 2, maxPieceLen = 4).map(v => (v._2, v._4))
         val toks = docs(s, d).select(explode(
@@ -845,7 +842,6 @@ object PipelineOps {
     // the artifact contract broke, not the trainer.
     NamedQuery("tk08_vocab_roundtrip",
       (s, d) => {
-        graft.functions.TextFunctions.register(s)
         val vocab = TextAnalysis.unigramTrain(docs(s, d), vocabSize = 48,
           rounds = 2, maxPieceLen = 4).map(v => (v._2, v._4))
         val tmp = java.nio.file.Files.createTempDirectory("tk08").toString
@@ -927,7 +923,6 @@ object PipelineOps {
     // nfc_normalize + lower replay the NFC + ROOT-casefold semantics.
     NamedQuery("tx07_unicode_normalize",
       (s, d) => {
-        graft.functions.TextFunctions.register(s)
         import s.implicits._
         val fx = unicodeFixture.toDF("id", "raw")
         val nfc = graft.functions.TextFunctions.unicode_normalize(col("raw"), "NFC")
@@ -2224,7 +2219,6 @@ object PipelineOps {
       (s, d) => {
         import org.apache.spark.sql.functions._
         import org.apache.spark.sql.expressions.Window
-        graft.functions.VectorFunctions.register(s)
         val e = embs(s, d).select(col("vec_id"), col("embedding"))
         // self-norms once per ROW before the n² crossJoin (same float
         // value and association as computing them per pair — the dot

@@ -27,6 +27,12 @@ class SqlGateSpec extends AnyFunSuite {
     }
   }
 
+  test("graft_* scalar functions pass the gate and resolve on a fresh session") {
+    val r = SqlGate.execute(spark.newSession(),
+      "SELECT graft_jaro_winkler('MARTHA', 'MARTHA')", Set.empty).head()
+    assert(r.getDouble(0) == 1.0)
+  }
+
   test("subquery reads are collected (IN / EXISTS / scalar / nested)") {
     assert(SqlGate.summarize(spark,
       "SELECT * FROM pub WHERE x IN (SELECT y FROM secret)").reads == Set("pub", "secret"))

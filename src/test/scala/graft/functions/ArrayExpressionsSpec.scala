@@ -18,7 +18,6 @@ class ArrayExpressionsSpec extends AnyFunSuite {
         x => x.isNotNull)))
 
   test("pair_combos == composed HOF form on sorted distinct longs") {
-    ArrayFunctions.register(spark)
     val df = Seq(Seq(1L, 3L, 7L, 9L), Seq(2L), Seq.empty[Long], Seq(5L, 6L))
       .toDF("m").select(array_sort(col("m")).as("m"))
     val native = df.select(ArrayFunctions.pair_combos(col("m")).as("p"))
@@ -34,7 +33,6 @@ class ArrayExpressionsSpec extends AnyFunSuite {
   }
 
   test("pair_combos on strings") {
-    ArrayFunctions.register(spark)
     val r = Seq(Seq("b", "a", "c")).toDF("m")
       .select(ArrayFunctions.pair_combos(array_sort(col("m"))).as("p"))
       .collect().head.getSeq[org.apache.spark.sql.Row](0)
@@ -43,7 +41,6 @@ class ArrayExpressionsSpec extends AnyFunSuite {
   }
 
   test("pair_combos survives an aggregation pipeline (explode + count)") {
-    ArrayFunctions.register(spark)
     // three buckets of sizes 4, 3, 1 -> 6 + 3 + 0 pairs
     val df = Seq((1, 10L), (1, 20L), (1, 30L), (1, 40L),
       (2, 10L), (2, 50L), (2, 60L), (3, 99L)).toDF("k", "v")
@@ -54,7 +51,6 @@ class ArrayExpressionsSpec extends AnyFunSuite {
   }
 
   test("pair_combos on struct elements: sorted by leading field, payload intact") {
-    ArrayFunctions.register(spark)
     // the dedup member-record shape: (doc_id, sz); array_sort orders by
     // doc_id (leading field), so pairs are the doc_id-ordered a < b set
     val df = Seq((1, 30L, 3), (1, 10L, 1), (1, 20L, 2)).toDF("k", "doc_id", "sz")
@@ -68,7 +64,6 @@ class ArrayExpressionsSpec extends AnyFunSuite {
   }
 
   test("pair_combos on structs carrying nested arrays (the minhash sig shape)") {
-    ArrayFunctions.register(spark)
     val df = Seq((1, 1L, Seq("h1", "h2")), (1, 2L, Seq("h1", "h3")))
       .toDF("k", "doc_id", "sig")
       .groupBy("k").agg(collect_set(struct(col("doc_id"), col("sig"))).as("m"))
@@ -84,7 +79,6 @@ class ArrayExpressionsSpec extends AnyFunSuite {
   }
 
   test("cross_pairs: exactly the |A|x|B| cross-side pairs, empty side yields none") {
-    ArrayFunctions.register(spark)
     val df = Seq(
       (1, Seq(1L, 2L), Seq(10L, 20L, 30L)),
       (2, Seq(5L), Seq.empty[Long]),
@@ -99,7 +93,6 @@ class ArrayExpressionsSpec extends AnyFunSuite {
   }
 
   test("cross_pairs on struct elements matches the HOF cross-side form") {
-    ArrayFunctions.register(spark)
     val df = Seq(
       (1L, 1, Seq("a", "b")), (2L, 1, Seq("a", "c")),
       (3L, 0, Seq("a", "b")), (4L, 0, Seq("d", "e")))

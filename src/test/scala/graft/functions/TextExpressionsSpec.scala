@@ -12,7 +12,6 @@ class TextExpressionsSpec extends AnyFunSuite {
   import spark.implicits._
 
   private def compare(texts: Seq[String], k: Int): Unit = {
-    TextFunctions.register(spark)
     val df = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("id", "text")
     val both = df.select(
       graft.ops.Dedup.shingles($"text", k).as("native"),
@@ -52,7 +51,6 @@ class TextExpressionsSpec extends AnyFunSuite {
   }
 
   test("native shingles == HOF shingles on the documents corpus") {
-    TextFunctions.register(spark)
     val docs = graft.Tables.load(spark, "/root/testdata/sf0.001", "documents")
     val diff = docs.select(
         graft.ops.Dedup.shingles(col("text")).as("native"),
@@ -63,7 +61,6 @@ class TextExpressionsSpec extends AnyFunSuite {
   }
 
   test("minhash_hashes == composed md5(concat(j,'#',g)) bit-for-bit") {
-    TextFunctions.register(spark)
     val df = graft.Tables.load(spark, "/root/testdata/sf0.001", "documents")
       .select(explode(graft.ops.Dedup.shingles(col("text"))).as("g"))
     val n = 12
@@ -76,7 +73,6 @@ class TextExpressionsSpec extends AnyFunSuite {
   }
 
   test("simhash_pack bit b == md5 nibble high bit; bit 32+b == second bit") {
-    TextFunctions.register(spark)
     val df = Seq("alpha", "beta", "gamma délta", "", "x").toDF("tok")
     val hi = (0 until 32).map(b =>
       (shiftright(TextFunctions.simhash_pack(col("tok")), b).bitwiseAND(lit(1)) === 1) ===
@@ -94,7 +90,6 @@ class TextExpressionsSpec extends AnyFunSuite {
     // still builds one all-null shingle that concat_ws turns into "".
     // The native expression propagates null — the saner contract; no
     // oracle corpus contains null text, so the forms only diverge here.
-    TextFunctions.register(spark)
     val df = Seq((1L, Option.empty[String]), (2L, Some("a b c d"))).toDF("id", "text")
     val r = df.orderBy("id").select(graft.ops.Dedup.shingles($"text").as("n"),
       graft.ops.Dedup.shinglesHof($"text").as("h")).collect()
@@ -104,7 +99,6 @@ class TextExpressionsSpec extends AnyFunSuite {
   }
 
   test("unicode_normalize: NFC composes, NFKC folds compatibility, null propagates") {
-    TextFunctions.register(spark)
     val df = Seq(
       (1L, Some("Cafe\u0301")),             // decomposed acute
       (2L, Some("\uFF21\uFF22\u3000x")),    // full-width A, B, ideographic space
@@ -130,7 +124,6 @@ class TextExpressionsSpec extends AnyFunSuite {
   }
 
   test("bpe_encode: priority order, overlap handling, multi-word, no merges") {
-    TextFunctions.register(spark)
     val merges = Seq(("e", "s"), ("es", "t"))
     val df = Seq(
       (1L, "newest"),
@@ -162,7 +155,6 @@ class TextExpressionsSpec extends AnyFunSuite {
   }
 
   test("unigram_encode: Viterbi max-likelihood, tie→longer, unk fallback") {
-    TextFunctions.register(spark)
     val ln = (p: Double) => math.log(p)
     // "ab" one piece (-0.916) beats "a"+"b" (-2.41): Viterbi picks it
     val v1 = Seq(("ab", ln(0.4)), ("a", ln(0.3)), ("b", ln(0.3)))
@@ -239,7 +231,6 @@ class TextExpressionsSpec extends AnyFunSuite {
       for { t <- text.apply(Gen.Parameters.default, s)
             m <- mergesGen.apply(Gen.Parameters.default, s.next) } yield (t, m)
     }.toSeq
-    TextFunctions.register(spark)
     cases.foreach { case (t, merges) =>
       val got = Seq((1L, t)).toDF("id", "text")
         .select(TextFunctions.bpe_encode($"text", merges).as("toks"))
@@ -304,7 +295,6 @@ class TextExpressionsSpec extends AnyFunSuite {
       for { t <- text.apply(Gen.Parameters.default, s)
             v <- vocabGen.apply(Gen.Parameters.default, s.next) } yield (t, v)
     }.toSeq
-    TextFunctions.register(spark)
     cases.foreach { case (t, vocab) =>
       val got = Seq((1L, t)).toDF("id", "text")
         .select(TextFunctions.unigram_encode($"text", vocab.toSeq.sortBy(_._1))
@@ -317,7 +307,6 @@ class TextExpressionsSpec extends AnyFunSuite {
 
   test("multi_match: counts equal a brute-force scan, case-insensitive") {
     import spark.implicits._
-    TextFunctions.register(spark)
     def brute(text: String, phrases: Seq[String]): (Long, Int) = {
       val lt = text.toLowerCase
       val per = phrases.map { p =>
@@ -349,7 +338,6 @@ class TextExpressionsSpec extends AnyFunSuite {
 
   test("multi_match: duplicate lexicon entries collapse to one phrase") {
     import spark.implicits._
-    TextFunctions.register(spark)
     // a repeated (or case-variant) entry must not double-count hits
     val row = Seq((1L, "banana")).toDF("id", "text")
       .select(TextFunctions.multi_match($"text",
@@ -361,7 +349,6 @@ class TextExpressionsSpec extends AnyFunSuite {
 
   test("multi_match: nested/suffix phrases all emit via the fail chain") {
     import spark.implicits._
-    TextFunctions.register(spark)
     // "she" contains "he"; "hers" shares the "he" path — the AC paper's
     // own example set
     val phrases = Seq("he", "she", "his", "hers")
@@ -375,7 +362,6 @@ class TextExpressionsSpec extends AnyFunSuite {
 
   test("multi_match: 20k phrases stay one expression at one-pass cost") {
     import spark.implicits._
-    TextFunctions.register(spark)
     // a lexicon far past where per-phrase expressions die (codegen
     // limits + O(phrases x text) scans); one automaton handles it
     val phrases = (1 to 20000).map(i => s"tok$i xx$i")
@@ -397,7 +383,6 @@ class TextExpressionsSpec extends AnyFunSuite {
   test("multi_match: property — equals brute force over random lexicons") {
     import spark.implicits._
     import org.scalacheck.Gen
-    TextFunctions.register(spark)
     def brute(text: String, phrases: Seq[String]): (Long, Int) = {
       val lt = text.map(Character.toLowerCase)
       val per = phrases.map(_.map(Character.toLowerCase)).distinct.map { pl =>

@@ -16,7 +16,6 @@ class VectorExpressionsSpec extends AnyFunSuite {
   ).toDF("id", "a", "b")
 
   test("native float_dot equals the composed zip_with/aggregate form bit-for-bit") {
-    VectorFunctions.register(spark)
     val rows = vecs.select($"id",
         VectorFunctions.float_dot($"a", $"b").as("native"),
         graft.ops.Similarity.dotHof($"a", $"b").as("composed"))
@@ -29,7 +28,6 @@ class VectorExpressionsSpec extends AnyFunSuite {
   }
 
   test("float_dot is callable from SQL after registration") {
-    VectorFunctions.register(spark)
     vecs.createOrReplaceTempView("vecs_test")
     val r = spark.sql("SELECT graft_float_dot(a, b) AS d FROM vecs_test WHERE id = 1")
       .head.getDouble(0)
@@ -37,7 +35,6 @@ class VectorExpressionsSpec extends AnyFunSuite {
   }
 
   test("nulls propagate, mismatched lengths truncate") {
-    VectorFunctions.register(spark)
     val df = Seq((Option(Array(1.0f)), Option.empty[Array[Float]])).toDF("a", "b")
     assert(df.select(VectorFunctions.float_dot($"a", $"b")).head.isNullAt(0))
     val got = vecs.filter($"id" === 2).select(VectorFunctions.float_dot($"a", $"b"))

@@ -233,7 +233,6 @@ class AnalysisOpsSpec extends AnyFunSuite {
       assert(got == want, s"$a/$b: got $got want $want")
     }
     // and through the registered codegen path on a DataFrame
-    graft.functions.SimilarityFunctions.register(spark)
     val viaDf = Seq(("martha", "marhta")).toDF("a", "b")
       .select(graft.functions.SimilarityFunctions.jaro_winkler(col("a"), col("b")))
       .head.getDouble(0)

@@ -236,7 +236,6 @@ class ShardMaterializeSpec extends AnyFunSuite {
   test("packTokenSequences: exact lengths, order conservation, learned tokenizer") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    graft.functions.TextFunctions.register(spark)
     // learned unigram vocab over a toy corpus; ids by piece rank —
     // the composition DuckDB can't replay (Viterbi), pinned here
     val df = (1 to 12).map(i =>

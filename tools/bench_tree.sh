@@ -5,10 +5,12 @@
 # java, no sbt, so interleaved runs share nothing but the host.
 #   tools/bench_tree.sh <treeDir> <outFile>
 # Env passthrough: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS,
-# SPARK_GRAFT_ONLY, SPARK_GRAFT_CODEGEN_CACHE, SPARK_DRIVER_MEM.
+# SPARK_GRAFT_ONLY, SPARK_DRIVER_MEM.
 set -euo pipefail
 TREE=$1; OUT=$2
-CP="$TREE/target/scala-2.13/classes:/opt/spark/jars/*"
+# src/main/resources carries the META-INF/services file that injects the
+# graft_* functions; plain `sbt compile` does not copy it into classes/
+CP="$TREE/target/scala-2.13/classes:$TREE/src/main/resources:/opt/spark/jars/*"
 OPENS=""
 for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
          java.nio java.util java.util.concurrent java.util.concurrent.atomic \
