@@ -36,10 +36,10 @@ object Demo {
     println(s"[demo] json rows=${ej.rowCount} type=${ej.jsonType}")
 
     // 4. catalog search with TsQuery
-    val hits = Search.apply(cat.df,
+    val hits = Search(cat.entries,
       Search.SourcesSpec(searchQuery = Some("column:city & !weather"), includeDeprecated = true))
     println(s"[demo] search 'column:city & !weather' → " +
-      hits.select("name", "version").collect().map(r => s"${r.get(0)}v${r.get(1)}").mkString(","))
+      hits.map(e => s"${e.name}v${e.version}").mkString(","))
 
     // 5. authorized SQL over registered views
     cat.registerViews()

@@ -10,9 +10,8 @@ package graft.engine
   * The effective level of a user on a dataset = max of their direct
   * grant and every grant to a group they belong to; new datasets give
   * their creator Manage; members of the "public" group can read
-  * public datasets. `canReadDf` materializes the (usr, sourcename)
-  * read-cache the search semi-join consumes — the analog of the
-  * trigger-maintained cachedcanread table, recomputed on change.
+  * public datasets. Search filters by `canRead` per entry, on the
+  * driver, instead of the trigger-maintained cachedcanread table.
   *
   * Reference defaults ported from runsecuritytests.sh:
   *  - users can create datasets AND groups by default; both privileges
@@ -90,9 +89,12 @@ object Acl {
       * default (runsecuritytests.sh:87,171 "Users can create groups /
       * datasets by default"); both are revocable via revokeCreate*.
       */
-    def addUser(u: String): State =
+    def addUser(u: String): State = {
+      // "" encodes the anonymous principal (Search.SourcesSpec.readableBy)
+      require(u.nonEmpty, "user name must not be empty")
       copy(users = users + u, membership = membership + ((u, PublicGroup)),
         canCreate = canCreate + u, canCreateGroup = canCreateGroup + u)
+    }
 
     def addUser(u: String, pass: String): State =
       addUser(u).copy(creds = creds + (u -> newCred(pass)))
@@ -243,10 +245,9 @@ object Acl {
     def canRead(u: Option[String], source: String): Boolean =
       levelOf(u, source) >= LevelRead
 
-    /** The cachedcanread analog: one (usr, sourcename) row per readable
-      * pair, for the search semi-join (Search.apply readableBy). The
-      * anonymous principal appears as usr="" (Search passes "" when no
-      * session is present).
+    /** One (usr, sourcename) row per readable pair; the anonymous
+      * principal appears as usr="". Kept only for perfbench, whose
+      * direct routes feed it to Search's frame adapters.
       */
     def canReadDf(spark: org.apache.spark.sql.SparkSession,
                   sources: Seq[String]): org.apache.spark.sql.DataFrame = {

@@ -61,7 +61,7 @@ class Catalog(val spark: SparkSession, val warehouse: String) {
   // write-then-swap: never read+overwrite the catalog in place
   private def commit(es: Seq[SourceEntry]): Unit = JsonDoc.write(spark, catalogPath, es)
 
-  private def entry(name: String, version: Int): SourceEntry =
+  def entry(name: String, version: Int): SourceEntry =
     entries.find(x => x.name == name && x.version == version)
       .getOrElse(throw new NoSuchElementException(s"$name v$version"))
 
@@ -85,7 +85,7 @@ class Catalog(val spark: SparkSession, val warehouse: String) {
     fs.delete(old, true)
   }
 
-  /** The catalog as a DataFrame (for the search operators S1–S9). */
+  /** The catalog as a DataFrame (perfbench's direct routes only). */
   def df: DataFrame = entries.toDS().toDF()
 
   /** Ingest a prepared dataset as a new version of `name` (I14): version
@@ -102,6 +102,7 @@ class Catalog(val spark: SparkSession, val warehouse: String) {
       sourceIdent: Option[String] = None,
       created: Option[String] = None): SourceEntry = {
 
+    created.foreach(Search.instant) // an unreadable date would break every date search
     val es = entries
     sourceIdent.map(id => s"SUID:$id").foreach { suid =>
       es.find(e => e.name == name && e.tags.contains(suid)) match {

@@ -1,23 +1,27 @@
 package graft.engine
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.functions._
+import java.time.{Instant, LocalDate, LocalDateTime, OffsetDateTime, ZoneOffset}
+import java.util.Locale
+import scala.util.Try
+import org.apache.spark.sql.DataFrame
 
-/** Catalog search (SURVEY.md §2.B, S1–S9).
+/** Catalog search (SURVEY.md §2.B, S1–S9): a pure function over the
+  * catalog's entry list, evaluated on the driver — no Spark job.
   *
   * `SourcesSpec` mirrors src/interface/src/Lagoon/Interface/SourceInfo.hs:178-226;
   * the filter semantics mirror DB/SourceInfo.hs:214-331 (substring filters
   * are case-insensitive contains; users OR-fold, tags/columns AND-fold;
-  * date range on `created`; deprecated excluded by default).
+  * date range on `created`, compared as UTC instants; deprecated excluded
+  * by default; `readableBy` keeps what [[Acl.State.canRead]] allows).
   *
   * TsQuery is lagoon's tiny full-text query language
   * (Interface/TsQuery.hs:42-199): lexemes with prefix-match semantics,
   * `|` / `&` / juxtaposition-as-AND / `!` / `label:term`, precedence
   * | < & < juxt < ! < :, parentheses, and local error recovery (any
   * string parses; unparseable pieces vanish). Labels pick the field
-  * (name/tag/column/description/user — Schema.hs:560-573); we compile
-  * straight to a boolean Column over the catalog DataFrame instead of a
-  * Postgres tsquery.
+  * (name/tag/column/description/user — Schema.hs:560-573); we evaluate
+  * the query against each entry's lower-cased `[^a-z0-9]+` tokens
+  * instead of a Postgres tsquery.
   */
 object Search {
 
@@ -54,9 +58,7 @@ object Search {
   private def binop(f: (Ts, Ts) => Ts, a: Ts, b: Ts): Option[Ts] =
     (collapse(a), collapse(b)) match {
       case (Some(x), Some(y)) => Some(f(x, y))
-      case (Some(x), None)    => Some(x)
-      case (None, Some(y))    => Some(y)
-      case (None, None)       => None
+      case (x, y)             => x.orElse(y)
     }
 
   private final class Parser(s: String) {
@@ -128,41 +130,31 @@ object Search {
     }
   }
 
-  // ---------------- TsQuery → Column compiler ----------------
+  // ---------------- TsQuery evaluation ----------------
 
-  /** Fields searched per label (fulltextWeights, Schema.hs:560-573 —
-    * weights only select fields; no ranking is consumed). Unlabeled
-    * lexemes match ANY field.
-    */
-  private def fieldTokens(label: Option[String]): Column = {
-    def toks(c: Column): Column = split(lower(c), "[^a-zA-Z0-9]+")
-    val name = toks(col("name"))
-    val desc = toks(col("description"))
-    val user = toks(col("addedBy"))
-    val tags = split(lower(concat_ws(" ", col("tags"))), "[^a-zA-Z0-9]+")
-    val cols = split(lower(concat_ws(" ", col("friendlyNames"))), "[^a-zA-Z0-9]+")
-    label match {
-      case Some("name")        => name
-      case Some("description") => desc
-      case Some("user")        => user
-      case Some("tag")         => tags
-      case Some("column")      => cols
-      case _ => concat(name, desc, user, tags, cols)
-    }
+  private def lc(s: String): String = s.toLowerCase(Locale.ROOT)
+  private def tokens(s: String): Seq[String] = lc(s).split("[^a-z0-9]+").toSeq
+
+  /** Tokens searched per label (fulltextWeights, Schema.hs:560-573: weights
+    * only select fields, no ranking); unlabeled lexemes match ANY field. */
+  private def fieldTokens(e: SourceEntry, label: Option[String]): Seq[String] = label match {
+    case Some("name")        => tokens(e.name)
+    case Some("description") => tokens(e.description)
+    case Some("user")        => tokens(e.addedBy)
+    case Some("tag")         => tokens(e.tags.mkString(" "))
+    case Some("column")      => tokens(e.friendlyNames.mkString(" "))
+    case _ => Seq("name", "description", "user", "tag", "column")
+      .flatMap(l => fieldTokens(e, Some(l)))
   }
 
-  /** Compile to a boolean Column; lexemes are prefix matches (`:*`,
-    * Util/PostgreSQL/TsQuery.hs:50).
-    */
-  def compile(q: Ts, label: Option[String] = None): Column = q match {
-    case TsLexeme("") => lit(true)
-    case TsLexeme(l) =>
-      exists(fieldTokens(label), t => t.startsWith(lit(l.toLowerCase)))
-    case TsOr(a, b)  => compile(a, label) || compile(b, label)
-    case TsAnd(a, b) => compile(a, label) && compile(b, label)
-    case TsNot(a)    => !compile(a, label)
-    case TsLabel(l, a) => compile(a, Some(l))
-    case TsError     => lit(true)
+  /** Lexemes are prefix matches (`:*`, Util/PostgreSQL/TsQuery.hs:50). */
+  def matches(q: Ts, e: SourceEntry, label: Option[String] = None): Boolean = q match {
+    case TsLexeme("") | TsError => true
+    case TsLexeme(l)   => fieldTokens(e, label).exists(_.startsWith(lc(l)))
+    case TsOr(a, b)    => matches(a, e, label) || matches(b, e, label)
+    case TsAnd(a, b)   => matches(a, e, label) && matches(b, e, label)
+    case TsNot(a)      => !matches(a, e, label)
+    case TsLabel(l, a) => matches(a, e, Some(l))
   }
 
   // ---------------- SourcesSpec ----------------
@@ -171,7 +163,7 @@ object Search {
   final case class SourcesSpec(
       offset: Option[Int] = None,
       limit: Option[Int] = None,
-      sortBy: Seq[(String, Boolean)] = Seq.empty, // (column, ascending)
+      sortBy: Seq[(String, Boolean)] = Seq.empty, // (field, ascending)
       filterIx: Option[Long] = None,
       filterName: Option[String] = None,
       filterDescription: Option[String] = None,
@@ -182,59 +174,107 @@ object Search {
       filterColumns: Seq[String] = Seq.empty,     // AND
       searchQuery: Option[String] = None,         // TsQuery string
       includeDeprecated: Boolean = false,
-      readableBy: Option[String] = None)
+      readableBy: Option[String] = None)          // "" = the anonymous principal
 
-  private def icontains(c: Column, x: String): Column =
-    lower(c).contains(x.toLowerCase)
-
-  /** Apply a spec to the catalog DataFrame (S1–S8). */
-  def apply(catalog: DataFrame, spec: SourcesSpec,
-            canRead: Option[DataFrame] = None): DataFrame = {
-    var df = catalog
-    spec.filterIx.foreach(x => df = df.filter(col("ix") === x))
-    spec.filterName.foreach(x => df = df.filter(icontains(col("name"), x)))
-    spec.filterDescription.foreach(x => df = df.filter(icontains(col("description"), x)))
-    // compare as TIMESTAMPS, not strings: catalog `created` values mix
-    // precision ("...T00:00:00Z" vs Instant.now's "...T00:00:00.123Z"),
-    // and lexicographically ".123Z" sorts BEFORE "Z" while being later
-    spec.filterCreatedAfter.foreach(x =>
-      df = df.filter(col("created").cast("timestamp") >= lit(x).cast("timestamp")))
-    spec.filterCreatedBefore.foreach(x =>
-      df = df.filter(col("created").cast("timestamp") <= lit(x).cast("timestamp")))
-    if (spec.filterUsers.nonEmpty)
-      df = df.filter(spec.filterUsers.map(u => icontains(col("addedBy"), u)).reduce(_ || _))
-    if (spec.filterTags.nonEmpty)
-      df = df.filter(spec.filterTags.map(t =>
-        icontains(concat_ws(" ", col("tags")), t)).reduce(_ && _))
-    if (spec.filterColumns.nonEmpty)
-      df = df.filter(spec.filterColumns.map(c =>
-        icontains(concat_ws(" ", col("friendlyNames")), c)).reduce(_ && _))
-    spec.searchQuery.foreach(q => df = df.filter(compile(parse(q))))
-    if (!spec.includeDeprecated) df = df.filter(!col("deprecated"))
-    (spec.readableBy, canRead) match {
-      case (Some(user), Some(acl)) =>
-        // ACL semi-join (S8; cachedcanread, Schema.hs:468-493)
-        df = df.join(
-          broadcast(acl.filter(col("usr") === user).select(col("sourcename"))),
-          df("name") === col("sourcename"), "left_semi")
-      case (Some(user), None) =>
-        // fail CLOSED: a readability filter without an ACL table must
-        // never silently return everything
-        throw new IllegalArgumentException(
-          s"readableBy=$user requires an ACL table (canRead); refusing to fail open")
-      case _ => ()
-    }
-    if (spec.sortBy.nonEmpty)
-      df = df.orderBy(spec.sortBy.map { case (c, asc) =>
-        if (asc) col(c).asc else col(c).desc }: _*)
-    spec.offset.foreach(o => df = df.offset(o))
-    spec.limit.foreach(l => df = df.limit(l))
-    df
+  /** An ISO-8601 instant, date-time or date, read in UTC: the one parser
+    * for `created` values (checked at ingest) and the date bounds.
+    * Compared as instants, not strings: `created` values mix precision
+    * ("...T00:00:00Z" vs Instant.now's "...T00:00:00.123Z"), and
+    * lexicographically ".123Z" sorts BEFORE "Z" while being later.
+    */
+  def instant(s: String): Instant = {
+    val t = s.trim.replace(' ', 'T')
+    Try(OffsetDateTime.parse(t).toInstant)
+      .orElse(Try(LocalDateTime.parse(t).toInstant(ZoneOffset.UTC)))
+      .orElse(Try(LocalDate.parse(t).atStartOfDay(ZoneOffset.UTC).toInstant))
+      .getOrElse(throw new IllegalArgumentException(s"not an ISO-8601 date or instant: $s"))
   }
 
-  /** S9: count with the same WHERE (X-Total-Count). */
-  def count(catalog: DataFrame, spec: SourcesSpec,
-            canRead: Option[DataFrame] = None): Long =
-    apply(catalog, spec.copy(offset = None, limit = None, sortBy = Seq.empty),
-      canRead).count()
+  private def by[K: Ordering](k: SourceEntry => K): Ordering[SourceEntry] = Ordering.by(k)
+
+  /** Sortable fields, matched case-insensitively. */
+  private val sortFields: Map[String, Ordering[SourceEntry]] = Map(
+    "ix" -> by(_.ix), "name" -> by(_.name), "version" -> by(_.version),
+    "created" -> by(e => instant(e.created)), "addedby" -> by(_.addedBy),
+    "description" -> by(_.description), "deprecated" -> by(_.deprecated),
+    "kind" -> by(_.kind), "rowcount" -> by(_.rowCount), "viewname" -> by(_.viewName))
+
+  /** The entries a spec's filters keep (S3–S8), in catalog order. */
+  private def hits(entries: Seq[SourceEntry], spec: SourcesSpec,
+                   acl: Option[Acl.State]): Seq[SourceEntry] = {
+    // S8 (cachedcanread, Schema.hs:468-493); fail CLOSED: a readability
+    // filter without an ACL must never silently return everything
+    val st = spec.readableBy.map(u => acl.getOrElse(throw new IllegalArgumentException(
+      s"readableBy=$u requires an ACL; refusing to fail open")))
+    val (after, before) = (spec.filterCreatedAfter.map(instant), spec.filterCreatedBefore.map(instant))
+    val query = spec.searchQuery.map(parse)
+    def icontains(s: String, x: String) = lc(s).contains(lc(x))
+    def inRange(t: => Instant) = after.forall(!t.isBefore(_)) && before.forall(!t.isAfter(_))
+    entries.filter { e =>
+      spec.filterIx.forall(_ == e.ix) &&
+      spec.filterName.forall(icontains(e.name, _)) &&
+      spec.filterDescription.forall(icontains(e.description, _)) &&
+      inRange(instant(e.created)) &&
+      (spec.filterUsers.isEmpty || spec.filterUsers.exists(icontains(e.addedBy, _))) &&
+      spec.filterTags.forall(icontains(e.tags.mkString(" "), _)) &&
+      spec.filterColumns.forall(icontains(e.friendlyNames.mkString(" "), _)) &&
+      query.forall(matches(_, e)) &&
+      (spec.includeDeprecated || !e.deprecated) &&
+      // "" is the anonymous principal
+      st.forall(_.canRead(spec.readableBy.filter(_.nonEmpty), e.name))
+    }
+  }
+
+  /** Apply a spec to the catalog entries (S1–S8): filter, stable sort,
+    * then offset and limit.
+    */
+  def apply(entries: Seq[SourceEntry], spec: SourcesSpec,
+            acl: Option[Acl.State] = None): Seq[SourceEntry] = {
+    require(spec.offset.forall(_ >= 0) && spec.limit.forall(_ >= 0), "offset and limit must be >= 0")
+    val ord = spec.sortBy.map { case (f, asc) =>
+      val o = sortFields.getOrElse(lc(f), throw new IllegalArgumentException(s"unknown sort field: $f"))
+      if (asc) o else o.reverse
+    }.reduceOption(_ orElse _).getOrElse(by(_ => 0))
+    hits(entries, spec, acl).sorted(ord)
+      .drop(spec.offset.getOrElse(0)).take(spec.limit.getOrElse(Int.MaxValue))
+  }
+
+  /** S9: count with the same filters (X-Total-Count). */
+  def count(entries: Seq[SourceEntry], spec: SourcesSpec,
+            acl: Option[Acl.State] = None): Long = hits(entries, spec, acl).size.toLong
+
+  // ---------------- frame adapters (perfbench only) ----------------
+
+  /** Frame forms of [[apply]] and [[count]], kept only for perfbench's
+    * direct routes: they collect the catalog frame and the `(usr,
+    * sourcename)` read-cache ([[Acl.State.canReadDf]]) on the driver and
+    * run the list form. Both are local relations, so no Spark job runs.
+    */
+  def apply(catalog: DataFrame, spec: SourcesSpec, canRead: Option[DataFrame]): DataFrame = {
+    val spark = catalog.sparkSession
+    import spark.implicits._
+    val (es, s) = readableRows(catalog, spec, canRead)
+    apply(es, s).toDS().toDF()
+  }
+
+  def count(catalog: DataFrame, spec: SourcesSpec, canRead: Option[DataFrame]): Long = {
+    val (es, s) = readableRows(catalog, spec, canRead)
+    count(es, s)
+  }
+
+  /** The catalog's entries, kept to the pairs of `spec.readableBy` when a
+    * read-cache is given (readableBy without one fails closed in the list form).
+    */
+  private def readableRows(catalog: DataFrame, spec: SourcesSpec,
+                           canRead: Option[DataFrame]): (Seq[SourceEntry], SourcesSpec) = {
+    val spark = catalog.sparkSession
+    import spark.implicits._
+    val es = catalog.as[SourceEntry].collect().toSeq
+    (spec.readableBy, canRead) match {
+      case (Some(u), Some(pairs)) =>
+        val names = pairs.as[(String, String)].collect().collect { case (`u`, n) => n }.toSet
+        (es.filter(e => names.contains(e.name)), spec.copy(readableBy = None))
+      case _ => (es, spec)
+    }
+  }
 }

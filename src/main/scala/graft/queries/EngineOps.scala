@@ -470,11 +470,10 @@ object EngineOps {
           created = Some("2024-02-01T00:00:00Z"))
         cat.ingest("beta", Ingest.csv(s, tmpFile(raggedCsv, ".csv")), "csv",
           addedBy = "bob", created = Some("2024-03-01T00:00:00Z"))
-        val df = cat.df
+        val es = cat.entries
         def names(spec: Search.SourcesSpec): String =
-          Search.apply(df, spec).orderBy("name", "version").collect()
-            .map(r => s"${r.getAs[String]("name")}_v${r.getAs[Int]("version")}")
-            .mkString(",")
+          Search(es, spec).sortBy(e => (e.name, e.version))
+            .map(e => s"${e.name}_v${e.version}").mkString(",")
         val cases = Seq(
           ("1_ix", names(Search.SourcesSpec(filterIx = Some(1), includeDeprecated = true))),
           ("2_daterange", names(Search.SourcesSpec(
@@ -482,7 +481,7 @@ object EngineOps {
             filterCreatedBefore = Some("2024-02-15"), includeDeprecated = true))),
           ("3_default_hides_deprecated", names(Search.SourcesSpec())),
           ("4_include_deprecated", names(Search.SourcesSpec(includeDeprecated = true))),
-          ("5_count", Search.count(df, Search.SourcesSpec(includeDeprecated = true)).toString),
+          ("5_count", Search.count(es, Search.SourcesSpec(includeDeprecated = true)).toString),
           ("6_user_or", names(Search.SourcesSpec(filterUsers = Seq("bob"),
             includeDeprecated = true))))
         rowsDf(s, Seq("case_id", "result"), cases.map { case (i, r) => Seq(i, r) })

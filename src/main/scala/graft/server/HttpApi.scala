@@ -246,10 +246,6 @@ class HttpApi(val cat: Catalog, defaultPublic: Boolean = true,
     case other => throw new IllegalArgumentException(s"unknown level: $other")
   }
 
-  private def entry(name: String, version: Int): SourceEntry =
-    cat.entries.find(e => e.name == name && e.version == version)
-      .getOrElse(throw new NoSuchElementException(s"$name v$version"))
-
   private def requireLevel(u: Option[String], source: String,
                            l: Acl.Level): Unit = {
     // 404 vs 403: an unreadable source must be indistinguishable from
@@ -402,14 +398,12 @@ class HttpApi(val cat: Catalog, defaultPublic: Boolean = true,
           includeDeprecated = p1("includeDeprecated").contains("true"),
           // anonymous principals search as usr="" (public rows only)
           readableBy = Some(userOpt.getOrElse("")))
-        val names = cat.entries.map(_.name).distinct
-        val aclDf = acl.get.canReadDf(spark, names)
-        val total = Search.count(cat.df, spec, Some(aclDf))
-        val ixs = Search(cat.df, spec, Some(aclDf))
-          .select("ix").collect().map(_.getLong(0)).toSet
-        val es = cat.entries.filter(e => ixs.contains(e.ix))
-          .map(sourceJson).mkString("[", ",", "]")
-        send(ex, 200, es, headers = Map("X-Total-Count" -> total.toString))
+        // one catalog and ACL snapshot, so the page and its total agree
+        val es = cat.entries
+        val st = Some(acl.get)
+        val page = Search(es, spec, st).map(sourceJson).mkString("[", ",", "]")
+        val total = Search.count(es, spec, st)
+        send(ex, 200, page, headers = Map("X-Total-Count" -> total.toString))
 
       case ("POST", Seq("sources", "compact")) => lock.synchronized {
         val name = p1("name").getOrElse(throw new IllegalArgumentException("name required"))
@@ -461,9 +455,7 @@ class HttpApi(val cat: Catalog, defaultPublic: Boolean = true,
             // a new VERSION must not reshuffle grants (the updater
             // must NOT become a manager of someone else's source)
             if (isNewSource) updateAcl(_.onCreate(u, e.name, public))
-            if (tags.isEmpty) e
-            else cat.entries.find(x =>
-              x.name == e.name && x.version == e.version).getOrElse(e)
+            if (tags.isEmpty) e else cat.entry(e.name, e.version)
           }
           if (p1("progress").contains("true")) {
             // reference SourcesPost streams ProgressOr SourceInfo
@@ -505,20 +497,20 @@ class HttpApi(val cat: Catalog, defaultPublic: Boolean = true,
         send(ex, 200, es.map(sourceJson).mkString("[", ",", "]"))
       case ("GET", Seq("source", n, v, "column", cname)) =>
         // SourceGetColumn: friendly column name -> 1-based column ix
-        val e = entry(n, v.toInt)
+        val e = cat.entry(n, v.toInt)
         requireLevel(userOpt, n, Acl.LevelRead)
         val i = e.friendlyNames.indexOf(cname)
         if (i < 0) throw new NoSuchElementException(s"no column $cname in $n v$v")
         send(ex, 200, s"""{"ix":${i + 1}}""")
       case ("GET", Seq("source", n, v, "download")) =>
         requireLevel(userOpt, n, Acl.LevelRead)
-        val e = entry(n, v.toInt)
+        val e = cat.entry(n, v.toInt)
         if (e.kind == "json")
           stream(ex, Export.jsonRaw(cat.view(n, v.toInt)).linesIterator,
             "application/json")
         else stream(ex, Export.csvLines(cat.view(n, v.toInt)), "text/csv")
       case ("GET", Seq("source", n, v)) =>
-        val e = entry(n, v.toInt)
+        val e = cat.entry(n, v.toInt)
         requireLevel(userOpt, n, Acl.LevelRead)
         send(ex, 200, sourceJson(e))
       case ("DELETE", Seq("source", n)) => lock.synchronized {
@@ -623,8 +615,8 @@ class HttpApi(val cat: Catalog, defaultPublic: Boolean = true,
         send(ex, 200, cat.dbInfo, cType = "text/plain")
       case ("POST", Seq("debug", "rebuildCanReadCache")) =>
         // DebugRebuildCanReadCache: the reference materializes a
-        // can-read cache table and this endpoint rebuilds it. Our ACL
-        // semi-join evaluates against live state (nothing cached to
+        // can-read cache table and this endpoint rebuilds it. Search
+        // asks the live ACL state per entry (nothing cached to
         // rebuild), so parity here = admin-gated success, not work.
         checkAdmin("rebuild-can-read-cache")
         send(ex, 204, "")

@@ -45,7 +45,7 @@ class AclSpec extends AnyFunSuite {
     assert(s.canRead("carol", "ds1"))
   }
 
-  test("canReadDf feeds the search semi-join (incl. the anonymous row)") {
+  test("canReadDf lists every readable (usr, sourcename) pair, incl. the anonymous row") {
     val spark = TestSpark.spark
     var s = base.onCreate("alice", "ds1").onCreate("bob", "ds2")
     s = s.makePublic("alice", "ds1")

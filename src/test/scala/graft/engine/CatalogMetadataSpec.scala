@@ -4,6 +4,7 @@ import java.nio.file.Files
 
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
+import graft.TestSpark.jobsOf
 
 /** Catalog metadata lives in `catalog.json` and is read and committed
   * on the driver: reads and metadata-only commits run no Spark job,
@@ -13,26 +14,6 @@ class CatalogMetadataSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   private def res(name: String): String =
     getClass.getResource(s"/fixtures/$name").getPath
-
-  /** Spark job ids started by `f`. The status tracker is fed
-    * asynchronously, so a marker job runs after `f` in a group of its
-    * own; once the marker is visible, every earlier job is too.
-    */
-  private def jobsOf(label: String)(f: => Any): Seq[Int] = {
-    val sc = spark.sparkContext
-    val group = s"catalog-metadata-$label-${System.nanoTime()}"
-    sc.setJobGroup(group, label)
-    try f finally sc.clearJobGroup()
-    val marker = s"$group-marker"
-    sc.setJobGroup(marker, "marker")
-    try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-    val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-    while (sc.statusTracker.getJobIdsForGroup(marker).isEmpty) {
-      assert(System.nanoTime() < deadline, "marker job never reached the status tracker")
-      Thread.sleep(10)
-    }
-    sc.statusTracker.getJobIdsForGroup(group).toSeq
-  }
 
   test("entries, sqlNames, tag and setDeprecated run zero Spark jobs") {
     val cat = new Catalog(spark, Files.createTempDirectory("graft-wh").toString)

@@ -36,10 +36,15 @@ object EngineProps extends Properties("engine") {
 
   // ---------------- TsQuery ----------------
 
+  private val probe = SourceEntry(1L, "sales_q1", 1, "2024-01-01T00:00:00Z", "alice",
+    "quarterly sales", false, Seq("finance"), "csv", "", "", Seq("region"), Seq("region"),
+    Seq("TEXT"), "", 0L, "", "sales_q1_v1")
+
   property("tsquery parser is total (error recovery, never throws)") =
     forAll(Gen.asciiPrintableStr) { s =>
       val q = Search.parse(s)
-      Search.compile(q) != null // compiles to a Column without a session
+      // evaluates against an entry, and negation flips the answer
+      Search.matches(Search.TsNot(q), probe) == !Search.matches(q, probe)
     }
 
   // ---------------- JsonType lattice ----------------

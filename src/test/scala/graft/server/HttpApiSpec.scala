@@ -289,4 +289,43 @@ class HttpApiSpec extends AnyFunSuite {
     assert(dl.body.contains("1") && dl.body.contains("2") &&
       !dl.body.contains("other"), dl.body)
   }
+
+  test("GET /sources returns the page in the requested sort order") {
+    for (n <- Seq("srt_b", "srt_c", "srt_a"))
+      assert(req("POST", s"/sources?name=$n.csv", "x,y\n2,3\n", asRoot).statusCode == 201)
+    def order(q: String): Seq[String] = {
+      val r = req("GET", s"/sources?name=srt_&$q")
+      assert(r.statusCode == 200, r.body)
+      "\"name\":\"(srt_[a-z])\\.csv\"".r.findAllMatchIn(r.body).map(_.group(1)).toSeq
+    }
+    assert(order("sortBy=name:desc") == Seq("srt_c", "srt_b", "srt_a"))
+    assert(order("sortBy=name&limit=2") == Seq("srt_a", "srt_b"))
+    assert(order("sortBy=name&offset=1&limit=1") == Seq("srt_b"))
+    val r = req("GET", "/sources?name=srt_&sortBy=name&limit=1")
+    assert(r.headers.firstValue("X-Total-Count").orElse("") == "3")
+  }
+
+  for (q <- Seq("sortBy=bogus", "createdAfter=notadate", "offset=-1", "limit=-1"))
+    test(s"GET /sources?$q is a client error (400), not a 500") {
+      val r = req("GET", s"/sources?$q")
+      assert(r.statusCode == 400, r.body)
+    }
+
+  test("an upload with an unreadable created date is refused; date search keeps working") {
+    val bad = req("POST", "/sources?name=j.csv&created=junk", "x,y\n2,3\n", asRoot)
+    assert(bad.statusCode == 400, bad.body)
+    assert(req("GET", "/source/name/j.csv").statusCode == 404)
+    val ok = req("POST", "/sources?name=k.csv&created=2001-06-01", "x,y\n2,3\n", asRoot)
+    assert(ok.statusCode == 201, ok.body)
+    val r = req("GET", "/sources?createdAfter=2001-01-01&createdBefore=2001-12-31")
+    assert(r.statusCode == 200, r.body)
+    assert(r.body.contains("\"k.csv\"") && r.headers.firstValue("X-Total-Count").orElse("") == "1",
+      r.body)
+  }
+
+  test("POST /users refuses an empty user name (it encodes the anonymous principal)") {
+    val r = req("POST", "/users?name=&pass=x", headers = asRoot)
+    assert(r.statusCode == 400, r.body)
+    assert(req("POST", "/user/login?user=&pass=x").statusCode == 401)
+  }
 }
