@@ -41,14 +41,12 @@ object Demo {
     println(s"[demo] search 'column:city & !weather' → " +
       hits.map(e => s"${e.name}v${e.version}").mkString(","))
 
-    // 5. authorized SQL over registered views
-    cat.registerViews()
-    val known = cat.entries.map(_.viewName).toSet ++ cat.entries.map(_.name)
-    val df = SqlGate.execute(spark,
+    // 5. authorized SQL over the catalog's views
+    val df = SqlGate.run(cat,
       "SELECT city, population FROM cities WHERE avg_temp > 10 ORDER BY population DESC",
-      known)
+      _ => true)
     println("[demo] sql result:\n" + Export.csvString(df))
-    try SqlGate.execute(spark, "DROP TABLE cities", known)
+    try SqlGate.run(cat, "DROP TABLE cities", _ => true)
     catch { case SqlGate.Denied(r) => println(s"[demo] correctly denied: $r") }
 
     // 6. compaction + roundtrip

@@ -158,7 +158,8 @@ class Catalog(val spark: SparkSession, val warehouse: String) {
   /** Friendly-named typed DataFrame of one version (the `<name>_vN` view). */
   def view(name: String, version: Int): DataFrame = view(entry(name, version))
 
-  private def view(e: SourceEntry): DataFrame =
+  /** Friendly-named typed DataFrame of one entry (no catalog read). */
+  def view(e: SourceEntry): DataFrame =
     if (e.compactedPath.nonEmpty) {
       // the compacted table stores untyped text; re-apply this version's casts
       val raw = spark.read.parquet(e.compactedPath)
@@ -175,7 +176,7 @@ class Catalog(val spark: SparkSession, val warehouse: String) {
     } else
       spark.read.parquet(e.typedPath).toDF("ix" +: e.friendlyNames: _*)
 
-  /** Latest (non-deprecated if any) version's view. */
+  /** Highest version's view, deprecated or not (as sqlNames' bare alias). */
   def view(name: String): DataFrame =
     view(entries.filter(_.name == name).maxBy(_.version))
 
@@ -247,7 +248,8 @@ class Catalog(val spark: SparkSession, val warehouse: String) {
     * name (dots, spaces, leading digits) is queryable, and sqlNames
     * guarantees no two sources share a registered identifier. One
     * catalog read, one frame per entry: an entry's versioned name and
-    * its bare alias register the same frame.
+    * its bare alias register the same frame. Only perfbench's direct
+    * route uses this; `/sql` goes through SqlGate.run.
     */
   def registerViews(): Unit = sqlNames.groupMap(_._2)(_._1).foreach { case (e, names) =>
     val df = view(e)

@@ -45,18 +45,17 @@ object Export {
     df.write.mode(SaveMode.Overwrite).json(path)
 
   /** Raw multi-value JSON passthrough for JSON sources: the stored c1
-    * strings, newline-joined in ix order (byte-roundtrip property,
-    * runtests.sh:160-168).
+    * strings as lines in ix order, one partition in driver memory at a
+    * time like csvLines (byte-roundtrip property, runtests.sh:160-168).
     */
-  def jsonRaw(df: DataFrame): String = {
+  def jsonRaw(df: DataFrame): Iterator[String] = {
+    import scala.jdk.CollectionConverters._
     // first non-ix column: "c1" on the untyped frame, the friendly
     // name on a registered view (HttpApi downloads pass the view —
     // hardcoding c1 500'd every JSON download over HTTP)
     val valueCol = df.columns.find(_ != "ix")
       .getOrElse(throw new IllegalArgumentException("no value column"))
-    val it = df.orderBy("ix").select(valueCol).toLocalIterator()
-    val sb = new StringBuilder
-    while (it.hasNext) { sb.append(it.next().getString(0)).append('\n') }
-    sb.toString
+    df.orderBy("ix").select(valueCol).toLocalIterator().asScala
+      .map(r => String.valueOf(r.getString(0)))
   }
 }

@@ -56,7 +56,7 @@ package graft.engine
   *     TEXT)`, `x::int8`, DOUBLE PRECISION, ...) — renamed by
   *     [[PgTypes]], chained last. (String-LITERAL decoding —
   *     Postgres's literal backslashes vs Spark's escapes — is
-  *     [[PgStrings.escape]], applied ONCE at the server boundary, not
+  *     [[PgStrings.escape]], applied ONCE by SqlGate.run, not
   *     here: doubling is not idempotent.)
   *
   * Scope notes:

@@ -24,8 +24,8 @@ import PgSelect.{skipComment, atComment}
   * untouched.
   *
   * NOT idempotent by design (doubling twice quadruples), so it is NOT
-  * part of PgSelect.rewrite: the server applies it exactly once at the
-  * request boundary, before the JSON/SELECT rewrites — it is the
+  * part of PgSelect.rewrite: SqlGate.run applies it exactly once per
+  * request, before the JSON/SELECT rewrites — it is the
   * transport-level decode of the Postgres dialect, not a query
   * rewrite.
   */

@@ -5,8 +5,8 @@ import org.apache.spark.sql.catalyst.analysis.{PlanWithUnresolvedIdentifier, Unr
 import org.apache.spark.sql.catalyst.expressions.SubqueryExpression
 import org.apache.spark.sql.catalyst.plans.logical.{Command, InsertIntoStatement, LogicalPlan, ScriptTransformation, UnresolvedWith}
 
-/** The `/sql` endpoint analog: run arbitrary user SQL over registered
-  * dataset views, after plan-walk authorization.
+/** The `/sql` endpoint analog: run arbitrary user SQL over catalog
+  * views, after plan-walk authorization (`run` is the whole flow).
   *
   * Reference: verifyUserQuery (src/backend/src/Lagoon/Verified.hs:794-855)
   * EXPLAINs the query and walks the Postgres plan tree, denying writes,
@@ -93,19 +93,45 @@ object SqlGate {
     Summary(reads.toSet)
   }
 
-  /** Authorize + execute: every read relation must be a registered view
-    * the user can read (CanReadDataset ACL, Verified.hs:834-854).
+  /** Every read relation must be a known table the user can read
+    * (CanReadDataset ACL, Verified.hs:834-854); returns the reads.
     */
+  private def authorize(
+      spark: SparkSession,
+      sql: String,
+      knownTables: Set[String],
+      canRead: String => Boolean): Set[String] = {
+    val reads = summarize(spark, sql).reads
+    reads.foreach { t =>
+      if (!knownTables.contains(t)) throw Denied(s"unknown table: $t")
+      if (!canRead(t)) throw Denied(s"permission denied: $t")
+    }
+    reads
+  }
+
+  /** Authorize + execute over views the caller has registered. */
   def execute(
       spark: SparkSession,
       sql: String,
       knownTables: Set[String],
       canRead: String => Boolean = _ => true): DataFrame = {
-    val s = summarize(spark, sql)
-    s.reads.foreach { t =>
-      if (!knownTables.contains(t)) throw Denied(s"unknown table: $t")
-      if (!canRead(t)) throw Denied(s"permission denied: $t")
-    }
+    authorize(spark, sql, knownTables, canRead)
     spark.sql(sql)
+  }
+
+  /** The `/sql` flow: Postgres-dialect `text` over one catalog read;
+    * `canRead` takes the owning SOURCE name. PgStrings.escape runs
+    * exactly once (doubling is not idempotent), and `DISTINCT ON (k) *`
+    * expands from the stored column list, so nothing is analyzed before
+    * authorization. Views are registered only for the tables read.
+    */
+  def run(cat: Catalog, text: String, canRead: String => Boolean): DataFrame = {
+    val tables = cat.sqlNames.map { case (n, e) => n.toLowerCase -> e }
+    val schemaOf: String => Option[Seq[String]] =
+      n => tables.get(n.toLowerCase).map("ix" +: _.friendlyNames)
+    val sql = PgSelect.rewrite(PgJson.rewrite(PgStrings.escape(text)), schemaOf)
+    val reads = authorize(cat.spark, sql, tables.keySet, t => canRead(tables(t).name))
+    reads.foreach(t => cat.view(tables(t)).createOrReplaceTempView(t))
+    cat.spark.sql(sql)
   }
 }

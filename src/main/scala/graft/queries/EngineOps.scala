@@ -1172,7 +1172,7 @@ object EngineOps {
         val ing = Ingest.csv(s, tmpFile(inferCsv, ".csv"))
         val csvOut = Export.csvString(ing.view.orderBy("ix"))
         val jsonIng = Ingest.json(s, tmpFile("{\"a\":1} {\"a\":2}", ".json"))
-        val raw = Export.jsonRaw(jsonIng.untyped)
+        val raw = Export.jsonRaw(jsonIng.untyped).map(_ + "\n").mkString
         rowsDf(s, Seq("csv_lines", "csv_header", "json_roundtrip"),
           Seq(Seq(csvOut.split("\n").length,
             csvOut.split("\n").head,
@@ -1184,11 +1184,11 @@ object EngineOps {
     // The end-to-end /sql lifecycle (round-3 verdict Missing #1): the
     // reference's main path is ingest → views → ACL-authorized SQL →
     // stream out as ONE flow (server/src/Lagoon/Server/API/SQL.hs:29-47,
-    // Verified.hs:794-855). This composes Catalog.registerViews +
-    // Acl.State + SqlGate.execute + Export over catalog-registered
-    // views — including the seams most likely to harbor a bug: mixed-
-    // case dataset names vs the gate's lowercased reads, the bare-name
-    // latest alias, versioned _vN views, and ACL-denied subqueries.
+    // Verified.hs:794-855). This composes Acl.State + SqlGate.run +
+    // Export over the catalog's views — including the seams most likely
+    // to harbor a bug: mixed-case dataset names vs the gate's lowercased
+    // reads, the bare-name latest alias, versioned _vN views, and
+    // ACL-denied subqueries.
     NamedQuery("im17_sql_lifecycle",
       (s, _) => {
         val cat = new Catalog(s, Files.createTempDirectory("graft-wh").toString)
@@ -1201,7 +1201,6 @@ object EngineOps {
         // id=2, not 1: a lone "1" lexes as BOOL (the lagoon literal set)
         cat.ingest("Wages", Ingest.csv(s,
           tmpFile("id,salary\n2,100\n", ".csv")), "csv")
-        cat.registerViews()
 
         var acl = Acl.State(canCreateGroup = Set("admin"))
           .addUser("admin").addUser("alice").addUser("bob")
@@ -1211,25 +1210,17 @@ object EngineOps {
         acl = acl.grantUser("admin", "alice", "Orders", Acl.LevelRead)
         acl = acl.grantUser("admin", "bob", "Cust", Acl.LevelRead)
 
-        // view name (as the gate lowercases reads) → owning dataset:
-        // every <name>_vN plus the bare-name latest alias
-        val viewToDs: Map[String, String] = cat.entries.flatMap(e =>
-          Seq(e.viewName.toLowerCase -> e.name, e.name.toLowerCase -> e.name)).toMap
+        def sqlAs(user: String, sql: String) = SqlGate.run(cat, sql, acl.canRead(user, _))
         def runAs(user: String, sql: String): String =
-          try {
-            val df = SqlGate.execute(s, sql, viewToDs.keySet,
-              t => viewToDs.get(t).exists(ds => acl.canRead(user, ds)))
-            s"ok:${Export.csvString(df).linesIterator.size - 1}"
-          } catch { case SqlGate.Denied(_) => "denied" }
+          try s"ok:${Export.csvString(sqlAs(user, sql)).linesIterator.size - 1}"
+          catch { case SqlGate.Denied(_) => "denied" }
 
         val joinSql =
           """SELECT c.name, CAST(count(*) AS BIGINT) AS n, CAST(sum(o.amt) AS BIGINT) AS amt
              FROM cust c JOIN orders o ON c.id = o.cust_id
              GROUP BY c.name ORDER BY c.name"""
         // the allowed result is also EXPORTED and pinned byte-for-byte
-        val export = Export.csvString(SqlGate.execute(s, joinSql, viewToDs.keySet,
-          t => viewToDs.get(t).exists(ds => acl.canRead("alice", ds))))
-          .replace("\n", ";")
+        val export = Export.csvString(sqlAs("alice", joinSql)).replace("\n", ";")
         val cases = Seq(
           ("1_alice_join_export", s"ok:$export"),       // bare alias = latest (v2)
           ("2_alice_versioned", runAs("alice", "SELECT * FROM orders_v1")),

@@ -81,9 +81,12 @@ import graft.engine._
   * admin is `root` with the constructor's `adminPass` ("" by default,
   * matching the reference test rig's dummy-auth empty password).
   *
-  * Scale notes: /sql and /download write the response with
-  * Export.csvLines (toLocalIterator — one partition in driver memory
-  * at a time, the Conduit.hs streaming analog), never a collect.
+  * /sql is one SqlGate.run call, which builds views only for the
+  * tables the query reads, after authorizing it.
+  *
+  * Scale notes: /sql and /download stream the response line by line
+  * (toLocalIterator — one partition in driver memory at a time, the
+  * Conduit.hs streaming analog), never a collect.
   * ACL/user state is DURABLE at `<warehouse>/acl.json` (AclStore —
   * the analog of the reference's Postgres security tables); session
   * tokens are ephemeral. Catalog and ACL mutations serialize on one
@@ -505,10 +508,8 @@ class HttpApi(val cat: Catalog, defaultPublic: Boolean = true,
       case ("GET", Seq("source", n, v, "download")) =>
         requireLevel(userOpt, n, Acl.LevelRead)
         val e = cat.entry(n, v.toInt)
-        if (e.kind == "json")
-          stream(ex, Export.jsonRaw(cat.view(n, v.toInt)).linesIterator,
-            "application/json")
-        else stream(ex, Export.csvLines(cat.view(n, v.toInt)), "text/csv")
+        if (e.kind == "json") stream(ex, Export.jsonRaw(cat.view(e)), "application/json")
+        else stream(ex, Export.csvLines(cat.view(e)), "text/csv")
       case ("GET", Seq("source", n, v)) =>
         val e = cat.entry(n, v.toInt)
         requireLevel(userOpt, n, Acl.LevelRead)
@@ -570,37 +571,9 @@ class HttpApi(val cat: Catalog, defaultPublic: Boolean = true,
 
       // ---- /sql ----
       case ("POST", Seq("sql")) =>
-        cat.registerViews()
-        // registered table name -> owning SOURCE name for the ACL
-        // check. sqlNames is collision-proof (two sources can never
-        // share a registered identifier), so the attribution is exact;
-        // keys are lowercased because SqlGate reports reads lowercased.
-        val owner: Map[String, String] = cat.sqlNames.map {
-          case (n, e) => n.toLowerCase -> e.name
-        }
-        // Postgres JSON operators (the dplyr client's %->>% family
-        // ships as -> / ->> / #> / #>> text — reference
-        // clients/RLagoon/R/dplyrlagoon.r:86-100) rewrite to
-        // get_json_object BEFORE the gate parses the query
-        // ... then the Postgres SELECT forms (DISTINCT ON, EPOCH)
-        // lower to their Spark spellings (PgSelect scope notes).
-        // schemaOf expands `DISTINCT ON (k) *` (dbplyr's
-        // distinct(.keep_all=TRUE) text) against the registered view's
-        // columns — restricted to catalog names so no Spark-internal
-        // table schema leaks into a rewrite; the gate's ACL check
-        // still governs whether the query may READ the table.
-        val schemaOf: String => Option[Seq[String]] = n =>
-          if (owner.contains(n.toLowerCase))
-            scala.util.Try(spark.table(n).columns.toSeq).toOption
-          else None
-        // PgStrings.escape FIRST and exactly ONCE: the Postgres
-        // string-literal decode (backslashes are literal there, Spark
-        // eats them) — transport-level, deliberately NOT part of the
-        // idempotent rewrite chain (doubling twice would quadruple)
-        val df = SqlGate.execute(spark,
-          PgSelect.rewrite(PgJson.rewrite(PgStrings.escape(body(ex))),
-            schemaOf), owner.keySet,
-          canRead = t => owner.get(t).exists(ds => acl.get.canRead(userOpt, ds)))
+        // one ACL snapshot for every read the query makes
+        val st = acl.get
+        val df = SqlGate.run(cat, body(ex), ds => st.canRead(userOpt, ds))
         val accept = Option(ex.getRequestHeaders.getFirst("Accept")).getOrElse("")
         if (accept.contains("application/json")) {
           import scala.jdk.CollectionConverters._

@@ -1,5 +1,6 @@
 package graft.engine
 
+import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
 
@@ -157,6 +158,57 @@ class SqlGateSpec extends AnyFunSuite {
     }
     intercept[SqlGate.Denied] {
       SqlGate.execute(spark, "SELECT k FROM known", Set("known"), _ => false)
+    }
+  }
+
+  // ---- SqlGate.run: the whole /sql flow over a catalog ----
+
+  private def csvFile(text: String): String = {
+    val f = Files.createTempFile("sqlgate", ".csv")
+    Files.writeString(f, text)
+    f.toString
+  }
+
+  /** Four entries: Pub v1, Priv v1, and Comp v1 + v2 compacted. */
+  private lazy val cat = {
+    val c = new Catalog(spark, Files.createTempDirectory("graft-sqlgate-wh").toString)
+    val kv = "k,v\n2,a\n2,b\n3,c\n"
+    c.ingest("Pub", Ingest.csv(spark, csvFile(kv)), "csv")
+    c.ingest("Priv", Ingest.csv(spark, csvFile(kv)), "csv")
+    c.ingest("Comp", Ingest.csv(spark, csvFile(kv)), "csv")
+    c.ingest("Comp", Ingest.csv(spark, csvFile(kv + "4,d\n")), "csv")
+    c.compact("Comp")
+    c
+  }
+  private val notPriv: String => Boolean = _ != "Priv"
+
+  test("run builds one frame for a one-table query; registerViews builds one per entry") {
+    assert(cat.entries.size == 4)
+    val one = TestSpark.jobsOf("run-one-table")(SqlGate.run(cat, "SELECT k FROM pub", notPriv))
+    assert(one.size <= 1, s"jobs $one")
+    val all = TestSpark.jobsOf("register-views")(cat.registerViews())
+    assert(all.size == cat.entries.size, s"jobs $all")
+  }
+
+  test("run denies before building any frame: unknown table, missing grant") {
+    for (q <- Seq("SELECT * FROM nosuch", "SELECT * FROM pub JOIN priv USING (k)")) {
+      val jobs = TestSpark.jobsOf("run-denied") {
+        intercept[SqlGate.Denied](SqlGate.run(cat, q, notPriv))
+      }
+      assert(jobs.isEmpty, s"$q ran jobs $jobs")
+    }
+  }
+
+  test("run expands DISTINCT ON (k) * from catalog metadata, plain and compacted") {
+    val first = Seq("2" -> "a", "3" -> "c")
+    for ((table, view, rows) <- Seq(
+        ("pub", cat.view("Pub"), first),
+        ("comp_v1", cat.view("Comp", 1), first),
+        ("comp", cat.view("Comp"), first :+ ("4" -> "d")))) {
+      val df = SqlGate.run(cat, s"SELECT DISTINCT ON (k) * FROM $table ORDER BY k, v", notPriv)
+      assert(df.columns.toSeq == view.columns.toSeq, table)
+      assert(df.select("k", "v").collect().map(r => r.get(0).toString -> r.getString(1)).toSeq
+        == rows, table)
     }
   }
 }

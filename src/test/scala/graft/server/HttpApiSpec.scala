@@ -328,4 +328,16 @@ class HttpApiSpec extends AnyFunSuite {
     assert(r.statusCode == 400, r.body)
     assert(req("POST", "/user/login?user=&pass=x").statusCode == 401)
   }
+
+  test("POST /sql on one source answers while another source's data is missing") {
+    for (n <- Seq("gone_a", "gone_b"))
+      assert(req("POST", s"/sources?name=$n.csv", "x,y\n2,3\n", asRoot).statusCode == 201)
+    def rm(f: java.io.File): Unit = { Option(f.listFiles).foreach(_.foreach(rm)); f.delete() }
+    val typed = new java.io.File(api.cat.entry("gone_b.csv", 1).typedPath)
+    rm(typed)
+    assert(!typed.exists)
+    val r = req("POST", "/sql", "SELECT x, y FROM gone_a_csv", asRoot)
+    assert(r.statusCode == 200, r.body)
+    assert(r.body.contains("2,3"), r.body)
+  }
 }
