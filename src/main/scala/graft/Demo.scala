@@ -61,8 +61,7 @@ object Demo {
       cat.view("cities", 2).schema("avg_temp").dataType.simpleString)
 
     // 8. HTTP ingest (loopback server standing in for a remote URL)
-    val server = com.sun.net.httpserver.HttpServer.create(
-      new java.net.InetSocketAddress("127.0.0.1", 0), 0)
+    val server = HttpServers.loopback()
     val body = "id,score\n1,0.5\n2,0.8\n".getBytes("UTF-8")
     server.createContext("/remote.csv", (ex: com.sun.net.httpserver.HttpExchange) => {
       ex.sendResponseHeaders(200, body.length)

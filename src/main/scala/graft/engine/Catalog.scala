@@ -2,6 +2,7 @@ package graft.engine
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Versioned, tagged, searchable dataset catalog (SURVEY.md §1.4, §2
   * I11/I14/I15/I18/I19).
@@ -17,6 +18,15 @@ import org.apache.spark.sql.functions._
   * these entries), beside `acl.json`. Catalog metadata is read and
   * committed on the driver (JsonDoc) and never runs a Spark job; data
   * stays distributed.
+  *
+  * Schema: a view's read schema is built from its entry's `colTypes`
+  * (`ColumnType.sparkType`), not inferred from Parquet footers, so
+  * building one runs no job. During `rebuildTyped`'s swap window a
+  * reader still holding the pre-commit entry therefore fails with a
+  * schema mismatch (unless the Parquet reader can widen the new type
+  * to the old one) instead of reading the new types. Immutable data
+  * directories (one per commit, ROADMAP item 4) would close that
+  * window.
   */
 final case class SourceEntry(
     ix: Long,                    // global source id (sources.ix analog)
@@ -158,23 +168,36 @@ class Catalog(val spark: SparkSession, val warehouse: String) {
   /** Friendly-named typed DataFrame of one version (the `<name>_vN` view). */
   def view(name: String, version: Int): DataFrame = view(entry(name, version))
 
-  /** Friendly-named typed DataFrame of one entry (no catalog read). */
-  def view(e: SourceEntry): DataFrame =
+  /** Friendly-named typed DataFrame of one entry (no catalog read, no
+    * Spark job). Read schema: a plain version's typed copy is `ix` long
+    * plus `c<i>` of each column's `sparkType`; a compacted table is `ix`
+    * long, `c1..cn` string and `ixs` array<int>, with the casts
+    * re-applied.
+    */
+  def view(e: SourceEntry): DataFrame = {
+    val types = e.colTypes.map(ColumnType.fromDisplay)
+    val cols = types.indices.map(i => s"c${i + 1}")
+    val ix = StructField("ix", LongType)
     if (e.compactedPath.nonEmpty) {
       // the compacted table stores untyped text; re-apply this version's casts
-      val raw = spark.read.parquet(e.compactedPath)
+      val schema = StructType(ix +: cols.map(StructField(_, StringType)) :+
+        StructField("ixs", ArrayType(IntegerType)))
+      val raw = spark.read.schema(schema).parquet(e.compactedPath)
         .filter(array_contains(col("ixs"), e.version))
       // lenient like setColumnType's re-materialization: an overridden
       // type with unparseable values must read as NULL here too, not
       // throw under ANSI at view time
-      val typedCols = e.colTypes.zipWithIndex.map { case (t, i) =>
-        Ingest.castTo(col(s"c${i + 1}"), ColumnType.fromDisplay(t), lenient = true)
-          .as(s"c${i + 1}")
+      val typedCols = types.zip(cols).map { case (t, c) =>
+        Ingest.castTo(col(c), t, lenient = true).as(c)
       }
       raw.select(col("ix") +: typedCols: _*)
         .toDF("ix" +: e.friendlyNames: _*)
-    } else
-      spark.read.parquet(e.typedPath).toDF("ix" +: e.friendlyNames: _*)
+    } else {
+      val schema = StructType(ix +: types.zip(cols).map { case (t, c) =>
+        StructField(c, t.sparkType) })
+      spark.read.schema(schema).parquet(e.typedPath).toDF("ix" +: e.friendlyNames: _*)
+    }
+  }
 
   /** Highest version's view, deprecated or not (as sqlNames' bare alias). */
   def view(name: String): DataFrame =

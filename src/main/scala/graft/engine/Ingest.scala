@@ -66,25 +66,21 @@ object Ingest {
     * whitespace like the untyped→typed INSERT..SELECT CAST does.
     * `lenient` uses try_cast (null on parse failure) — for user type
     * OVERRIDES, where the values are not inference-approved and an
-    * ANSI cast would fail the whole re-type on one bad row.
+    * ANSI cast would fail the whole re-type on one bad row. The result
+    * has type `t.sparkType`.
     */
   def castTo(c: org.apache.spark.sql.Column, t: ColumnType,
-             lenient: Boolean = false): org.apache.spark.sql.Column = {
-    def num(dt: org.apache.spark.sql.types.DataType) =
-      if (lenient) trim(c).try_cast(dt) else trim(c).cast(dt)
+             lenient: Boolean = false): org.apache.spark.sql.Column =
     t match {
       case ColumnType.ColBool =>
         val v = lower(trim(c))
         when(v.isin("t", "true", "y", "yes", "on", "1"), lit(true))
           .when(v.isin("f", "false", "n", "no", "off", "0"), lit(false))
           .otherwise(lit(null).cast(BooleanType))
-      case ColumnType.ColInt(IntWidth.I4) => num(IntegerType)
-      case ColumnType.ColInt(IntWidth.I8) => num(LongType)
-      case ColumnType.ColReal             => num(DoubleType)
-      case ColumnType.ColForeign(_, _)    => num(LongType)
-      case _                              => c // Text / Document / JSON stay raw
+      case ColumnType.ColInt(_) | ColumnType.ColReal | ColumnType.ColForeign(_, _) =>
+        if (lenient) trim(c).try_cast(t.sparkType) else trim(c).cast(t.sparkType)
+      case _ => c // Text / Document / int[] / JSON stay raw
     }
-  }
 
   /** The reference's full tab-extension set (Interface/Ingest.hs
     * guessFileType: .tsv/.txt plus the bioinformatics .bed/.gtf).

@@ -1,7 +1,7 @@
 package graft.engine
 
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream, InputStream}
-import java.net.{HttpURLConnection, InetSocketAddress, URI, URL}
+import java.net.{HttpURLConnection, URI, URL}
 import java.nio.charset.StandardCharsets.UTF_8
 
 import org.apache.hadoop.conf.Configuration
@@ -641,8 +641,7 @@ final class S3Loopback(credentials: Option[(String, String)] = None) {
     String, (String, java.util.concurrent.ConcurrentSkipListMap[Int, Array[Byte]])]()
   private val uploadSeq = new java.util.concurrent.atomic.AtomicLong(0L)
   private val partFailures = new java.util.concurrent.atomic.AtomicInteger(0)
-  private val server = com.sun.net.httpserver.HttpServer.create(
-    new InetSocketAddress("127.0.0.1", 0), 0)
+  private val server = HttpServers.loopback()
 
   /** Fault injection for the multipart retry path: the next `n`
     * UploadPart requests answer 500 (after consuming the body), so a

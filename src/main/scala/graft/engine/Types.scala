@@ -27,7 +27,11 @@ object InferredType {
 }
 
 sealed trait ColumnType {
-  /** Spark storage type (our analog of fieldPostgresType, TypeUniverse.hs:72-81). */
+  /** Spark storage type: the type `Ingest.castTo` writes for this
+    * column and `Catalog.view` reads it back as (our analog of
+    * fieldPostgresType, TypeUniverse.hs:72-81). int[] is stored as its
+    * raw text, like Text / Document / JSON.
+    */
   def sparkType: org.apache.spark.sql.types.DataType = {
     import org.apache.spark.sql.types._
     this match {
@@ -37,7 +41,7 @@ sealed trait ColumnType {
       case ColumnType.ColReal              => DoubleType
       case ColumnType.ColText              => StringType
       case ColumnType.ColDocument          => StringType
-      case ColumnType.ColArr               => ArrayType(IntegerType)
+      case ColumnType.ColArr               => StringType
       case ColumnType.ColJSON(_)           => StringType
       case ColumnType.ColForeign(_, _)     => LongType
     }

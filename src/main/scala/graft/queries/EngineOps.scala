@@ -529,8 +529,7 @@ object EngineOps {
           z.write(csvBody.getBytes("UTF-8")); z.closeEntry(); z.close()
           baos.toByteArray
         }
-        val server = com.sun.net.httpserver.HttpServer.create(
-          new java.net.InetSocketAddress("127.0.0.1", 0), 0)
+        val server = graft.engine.HttpServers.loopback()
         def serve(route: String, bytes: Array[Byte]): Unit =
           server.createContext(route, (ex: com.sun.net.httpserver.HttpExchange) => {
             ex.sendResponseHeaders(200, bytes.length)

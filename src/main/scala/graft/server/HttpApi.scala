@@ -1,6 +1,5 @@
 package graft.server
 
-import java.net.InetSocketAddress
 import java.net.URLDecoder
 import java.nio.charset.StandardCharsets.UTF_8
 import java.util.concurrent.{ConcurrentHashMap, ExecutorService, Executors, TimeUnit}
@@ -86,7 +85,13 @@ import graft.engine._
   *
   * Scale notes: /sql and /download stream the response line by line
   * (toLocalIterator — one partition in driver memory at a time, the
-  * Conduit.hs streaming analog), never a collect.
+  * Conduit.hs streaming analog), never a collect. A view's schema comes
+  * from its catalog entry, so building the frame of a /sql table or a
+  * download runs no Spark job. The server comes from
+  * `HttpServers.loopback`, which turns Nagle's algorithm off: the JDK
+  * server writes headers and body as two segments, and with Nagle on
+  * every response waited out a keep-alive client's delayed ACK (40 ms
+  * on Linux), several times a metadata route's own cost.
   * ACL/user state is DURABLE at `<warehouse>/acl.json` (AclStore —
   * the analog of the reference's Postgres security tables); session
   * tokens are ephemeral. Catalog and ACL mutations serialize on one
@@ -137,7 +142,7 @@ class HttpApi(val cat: Catalog, defaultPublic: Boolean = true,
     * handler threads are named `graft-http-<port>-<n>`.
     */
   def start(port: Int = 0): Int = {
-    server = HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
+    server = HttpServers.loopback(port)
     val bound = server.getAddress.getPort
     val n = new AtomicInteger()
     pool = Executors.newFixedThreadPool(4, (r: Runnable) =>

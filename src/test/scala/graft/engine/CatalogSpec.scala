@@ -207,4 +207,79 @@ class CatalogSpec extends AnyFunSuite {
     assert(spark.read.parquet(e.typedPath).count() == e.rowCount,
       "typed parquet on disk diverges from the cached ingest count")
   }
+
+  /** The reference read for `view`: the same renames and casts over a
+    * footer-inferred `spark.read.parquet`.
+    */
+  private def footerView(e: SourceEntry): org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.functions.{array_contains, col}
+    if (e.compactedPath.nonEmpty) {
+      val typedCols = e.colTypes.zipWithIndex.map { case (t, i) =>
+        Ingest.castTo(col(s"c${i + 1}"), ColumnType.fromDisplay(t), lenient = true)
+          .as(s"c${i + 1}")
+      }
+      spark.read.parquet(e.compactedPath)
+        .filter(array_contains(col("ixs"), e.version))
+        .select(col("ix") +: typedCols: _*)
+        .toDF("ix" +: e.friendlyNames: _*)
+    } else spark.read.parquet(e.typedPath).toDF("ix" +: e.friendlyNames: _*)
+  }
+
+  /** `cat.view(e)` equals the footer read, and neither it nor a
+    * download's frame (`view(name, version)`) runs a Spark job.
+    */
+  private def assertViewFromEntry(cat: Catalog, e: SourceEntry): Unit = {
+    val label = s"${e.name} v${e.version}"
+    val jobs = TestSpark.jobsOf("view")(cat.view(e))
+    assert(jobs.isEmpty, s"$label: view ran jobs $jobs")
+    val download = TestSpark.jobsOf("download")(cat.view(e.name, e.version))
+    assert(download.isEmpty, s"$label: download frame ran jobs $download")
+    val v = cat.view(e)
+    val ref = footerView(e)
+    assert(v.schema == ref.schema, label)
+    assert(v.orderBy("ix").collect().toSeq == ref.orderBy("ix").collect().toSeq, label)
+  }
+
+  private def csvFile(text: String): String = {
+    val p = Files.createTempFile("graft-view", ".csv")
+    Files.writeString(p, text)
+    p.toString
+  }
+
+  test("view reads its schema from the entry: footer-read schema and rows, 0 jobs") {
+    val cat = freshCatalog()
+    // every inferred type, plus a ragged header-less column
+    val doc = "d" * (ColumnType.MaxTextLen + 1)
+    val every = cat.ingest("every", Ingest.csv(spark, csvFile(
+      s"b,i,l,r,t,d\nt,2,12345678901,1.5,hello,$doc\nf,-7,42,2e3,world,short,x\n")), "csv")
+    assert(every.colTypes.toSet == Set("BOOLEAN", "INTEGER", "BIGINT",
+      "DOUBLE PRECISION", "TEXT", "DOCUMENT"), every.colTypes)
+    val js = Files.createTempFile("graft-view", ".json")
+    Files.writeString(js, """{"a":1} {"a":2,"b":"x"}""")
+    val json = cat.ingest("js", Ingest.json(spark, js.toString), "json")
+    val meta = cat.ingest("meta", Ingest.csv(spark, res("projects_md.csv")), "csv")
+    val metaView = cat.view(meta)
+    val extra = cat.ingest("extra", Ingest.extraData(spark, res("projects_data.csv"),
+      metaView, metaView.columns(1)), "csv")
+    assert(extra.colTypes.head == "FOREIGN meta(ix)")
+    cat.ingest("retyped", Ingest.csv(spark, res("typeinfer.csv")), "csv")
+    cat.setColumnType("retyped", 1, 2, ColumnType.ColText)
+    val retyped = cat.setColumnType("retyped", 1, 3, ColumnType.ColArr)
+    assert(retyped.colTypes.slice(1, 3) == Seq("TEXT", "int[]"))
+    cat.ingest("promoted", Ingest.csv(spark, res("typeinfer.csv"),
+      Ingest.CsvOptions(typeInference = false)), "csv")
+    val promoted = cat.makeTyped("promoted", 1)
+    for (e <- Seq(every, json, meta, extra, retyped, promoted)) assertViewFromEntry(cat, e)
+
+    // compacted versions of different widths, one of them retyped
+    cat.ingest("w", Ingest.csv(spark, csvFile("a,b\n1,x\n2,y\n")), "csv")
+    cat.ingest("w", Ingest.csv(spark, csvFile("a,b,c\n1,x,true\n3,z,false\n")), "csv")
+    cat.setColumnType("w", 2, 1, ColumnType.ColArr)
+    cat.compact("w")
+    cat.compact("every")
+    val compacted = cat.entries.filter(e => Set("w", "every")(e.name))
+    assert(compacted.size == 3 && compacted.forall(_.compactedPath.nonEmpty))
+    assert(compacted.map(_.colTypes.length).toSet == Set(2, 3, 7))
+    compacted.foreach(assertViewFromEntry(cat, _))
+  }
 }

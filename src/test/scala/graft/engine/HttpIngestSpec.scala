@@ -3,7 +3,6 @@ package graft.engine
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
-import java.net.InetSocketAddress
 
 /** HTTP(S) remote ingest (I3; reference Ingest.hs:566-690 ingests
   * http:// URIs directly). The sandbox has no egress, so the fixture
@@ -31,7 +30,7 @@ class HttpIngestSpec extends AnyFunSuite {
   }
 
   private def withServer(f: Int => Unit): Unit = {
-    val server = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
+    val server = HttpServers.loopback()
     serve("/data.csv", csvBody.getBytes("UTF-8"))(server)
     serve("/data.zip", zipOf("data.csv", csvBody))(server)
     serve("/vals.json", "{\"a\":1} {\"a\":2}".getBytes("UTF-8"))(server)

@@ -211,4 +211,17 @@ class IngestSpec extends AnyFunSuite {
     assert(read >= size, s"read=$read < size=$size — counter not capturing")
     assert(read <= size * 5 / 2, s"read=$read vs size=$size: input scanned more than ~once")
   }
+
+  test("castTo writes each display name's sparkType, strict and lenient") {
+    import org.apache.spark.sql.functions.col
+    val names = Seq("BOOLEAN", "INTEGER", "BIGINT", "DOUBLE PRECISION", "TEXT",
+      "DOCUMENT", "int[]", "JSON", "FOREIGN meta(ix)")
+    val raw = spark.range(1).selectExpr("'2' AS s")
+    for (n <- names; lenient <- Seq(false, true)) {
+      val t = ColumnType.fromDisplay(n)
+      assert(t.displayName == n)
+      val written = raw.select(Ingest.castTo(col("s"), t, lenient)).schema.head.dataType
+      assert(written == t.sparkType, s"$n lenient=$lenient")
+    }
+  }
 }

@@ -184,10 +184,23 @@ class SqlGateSpec extends AnyFunSuite {
 
   test("run builds one frame for a one-table query; registerViews builds one per entry") {
     assert(cat.entries.size == 4)
+    // a view's schema comes from its entry: building frames runs no job
     val one = TestSpark.jobsOf("run-one-table")(SqlGate.run(cat, "SELECT k FROM pub", notPriv))
-    assert(one.size <= 1, s"jobs $one")
+    assert(one.isEmpty, s"jobs $one")
     val all = TestSpark.jobsOf("register-views")(cat.registerViews())
-    assert(all.size == cat.entries.size, s"jobs $all")
+    assert(all.isEmpty, s"jobs $all")
+    // so frames are counted as what a fresh session ends up holding:
+    // its temp views, and the distinct frames behind them
+    def tempViews(build: Catalog => Any) = {
+      val c = new Catalog(spark.newSession(), cat.warehouse)
+      build(c)
+      c.spark.catalog.listTables().collect().filter(_.isTemporary).map(t =>
+        t.name -> c.spark.table(t.name).queryExecution.optimizedPlan).toMap
+    }
+    assert(tempViews(SqlGate.run(_, "SELECT k FROM pub", notPriv)).keySet == Set("pub"))
+    val registered = tempViews(_.registerViews())
+    assert(registered.keySet == cat.sqlNames.keySet.map(_.toLowerCase))
+    assert(registered.values.toSet.size == cat.entries.size, registered.keySet)
   }
 
   test("run denies before building any frame: unknown table, missing grant") {

@@ -340,4 +340,34 @@ class HttpApiSpec extends AnyFunSuite {
     assert(r.statusCode == 200, r.body)
     assert(r.body.contains("2,3"), r.body)
   }
+
+  test("back-to-back keep-alive GETs answer without a delayed-ACK stall") {
+    // a sub-millisecond route on a one-entry catalog. With Nagle on,
+    // each response's body waited for the client's delayed ACK of its
+    // headers: Linux's floor is 40 ms, and the median read about 50 ms.
+    val a = new HttpApi(new Catalog(spark,
+      Files.createTempDirectory("graft-http-latency").toString))
+    val p = a.start()
+    try {
+      val http = HttpClient.newBuilder().version(HttpClient.Version.HTTP_1_1).build()
+      def post(path: String, body: String, token: String = ""): HttpResponse[String] =
+        http.send(HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:$p$path"))
+          .header("X-Token", token).POST(HttpRequest.BodyPublishers.ofString(body)).build(),
+          HttpResponse.BodyHandlers.ofString())
+      val token = "\"token\":\"([^\"]+)\"".r
+        .findFirstMatchIn(post("/user/login?user=root&pass=", "").body).get.group(1)
+      assert(post("/sources?name=one", "k,v\n2,a\n", token).statusCode == 201)
+      val get = HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:$p/source/name/one")).build()
+      def callMs(): Double = {
+        val t0 = System.nanoTime()
+        val r = http.send(get, HttpResponse.BodyHandlers.ofString())
+        assert(r.statusCode == 200, r.body)
+        (System.nanoTime() - t0) / 1e6
+      }
+      (1 to 5).foreach(_ => callMs())
+      val ms = Seq.fill(30)(callMs()).sorted
+      val median = (ms(14) + ms(15)) / 2
+      assert(median < 20.0, f"median $median%.1f ms; sorted: ${ms.map(m => f"$m%.1f").mkString(" ")}")
+    } finally a.stop()
+  }
 }

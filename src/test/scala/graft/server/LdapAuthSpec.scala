@@ -214,10 +214,9 @@ class LdapAuthSpec extends AnyFunSuite {
   }
 
   test("BasicAuthProvider: 401 is a hard deny, outage fallback is opt-in") {
-    import com.sun.net.httpserver.HttpServer
     val state = graft.engine.Acl.State(admins = Set("root"))
       .addUser("ada", "local-pw").addUser("root", "root-pw")
-    val http = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
+    val http = graft.engine.HttpServers.loopback()
     http.createContext("/auth", (ex: com.sun.net.httpserver.HttpExchange) => {
       ex.sendResponseHeaders(401, -1); ex.close() // everyone revoked
     })
@@ -287,8 +286,7 @@ class LdapAuthSpec extends AnyFunSuite {
   }
 
   test("BasicAuthProvider: 200 accepts, 401 denies, outage fails closed") {
-    import com.sun.net.httpserver.HttpServer
-    val http = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
+    val http = graft.engine.HttpServers.loopback()
     http.createContext("/auth", (ex: com.sun.net.httpserver.HttpExchange) => {
       val hdr = Option(ex.getRequestHeaders.getFirst("Authorization"))
       val expected = "Basic " + java.util.Base64.getEncoder
