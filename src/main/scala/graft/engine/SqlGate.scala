@@ -124,6 +124,14 @@ object SqlGate {
     * exactly once (doubling is not idempotent), and `DISTINCT ON (k) *`
     * expands from the stored column list, so nothing is analyzed before
     * authorization. Views are registered only for the tables read.
+    *
+    * The temp views live on the session every request shares, so
+    * registering them and analyzing the query hold `viewLock`: without
+    * it a concurrent request can replace a view between the two steps
+    * and this query binds the other request's frame — another catalog's
+    * table, or one this caller was not authorized for. Analysis is
+    * eager, so the returned frame is bound before the lock is released;
+    * frames are built, and the query runs, outside it.
     */
   def run(cat: Catalog, text: String, canRead: String => Boolean): DataFrame = {
     val tables = cat.sqlNames.map { case (n, e) => n.toLowerCase -> e }
@@ -131,7 +139,12 @@ object SqlGate {
       n => tables.get(n.toLowerCase).map("ix" +: _.friendlyNames)
     val sql = PgSelect.rewrite(PgJson.rewrite(PgStrings.escape(text)), schemaOf)
     val reads = authorize(cat.spark, sql, tables.keySet, t => canRead(tables(t).name))
-    reads.foreach(t => cat.view(tables(t)).createOrReplaceTempView(t))
-    cat.spark.sql(sql)
+    val views = reads.toSeq.map(t => t -> cat.view(tables(t)))
+    viewLock.synchronized {
+      views.foreach { case (t, df) => df.createOrReplaceTempView(t) }
+      cat.spark.sql(sql)
+    }
   }
+
+  private val viewLock = new Object
 }

@@ -712,103 +712,101 @@ object Dedup {
     * themselves, so distance-to-min shrinks geometrically (measured on
     * the same graph: see BASELINE.md ScaleCheck r9).
     *
-    * Each phase's result is checkpointed: the loop REPLACES lineage
+    * Each phase is ONE exchange: the rows are hash-partitioned on u,
+    * which also clusters (u, v), so the (u, v) dedup and the per-u min
+    * (a window over u) run inside that exchange, and each deduped row
+    * emits exactly one row — no self-join, union or distinct.
+    * Large-star reads both directions of every edge (an explode, not a
+    * union) and emits (v, m) from its v > u rows, one per edge;
+    * small-star keeps (u, m) from the one row per u with v = m and
+    * emits (v, m) from every other row. So the edge set never grows:
+    * one row out per deduped row in, and the next dedup only shrinks
+    * it. A row MOVED when its output is not the edge it came from
+    * (m ≠ u in large-star, v ≠ m in small-star).
+    *
+    * Convergence is exact without a set compare: a round leaves the
+    * edge set unchanged IFF no row moved in either phase. If nothing
+    * moved, each phase maps every edge to itself. If a row moved, its
+    * output has a strictly smaller endpoint sum than its input edge
+    * (large-star lowers u to m; small-star lowers both ends) and no
+    * row's sum grows, so — summing id RANKS, which the comparisons
+    * cannot tell from ids — the set's total strictly falls, since
+    * dedup only drops positive terms: the set changed. So the loop
+    * stops at the same round, with the same edges, as a compare of
+    * consecutive edge sets would. Both moved counts are collected with
+    * Dataset.observe by the round's own checkpoint job (0 extra jobs);
+    * only zero versus nonzero is read, so a retried task counting
+    * twice cannot change the decision. A round is 3 jobs: one per
+    * exchange plus the checkpoint.
+    *
+    * Each round's result is checkpointed: the loop REPLACES lineage
     * instead of nesting it, so round N's plan is flat, not exponential.
     * If `spark.sparkContext.setCheckpointDir` is set, rounds use
     * RELIABLE checkpoints (survive executor loss — set it on a real
     * cluster); otherwise localCheckpoint (fine single-node, where
-    * executor loss is process death anyway). Per phase the work is one
-    * min-groupBy plus one equi-join on the edge list — every stage
+    * executor loss is process death anyway). Every stage is
     * partition-parallel, nothing driver-side.
     *
     * Output: (node, cluster_id) for every node that appears in a pair,
     * cluster_id = min doc id of the component. Deterministic.
     *
-    * If `maxIter` is exhausted while the edge set is still changing,
+    * If `maxIter` is exhausted while edges are still being re-pointed,
     * the result would be silently WRONG (a half-contracted component
     * splits into several — catastrophic when chained boilerplate links
     * clusters), so this THROWS instead of returning. Convergence is
     * observable either way via
     * OpsMetrics.lastConvergence("graft.cc.convergence") = (rounds run,
-    * edges still changing — 0 means clean).
+    * edges re-pointed in the last round — 0 means clean).
     */
   def connectedComponents(pairs: DataFrame, maxIter: Int = 50): DataFrame = {
-    // reliable checkpoint when a dir is configured, local otherwise.
-    // The createDataFrame rebuild after the checkpoint is load-bearing:
-    // checkpoint returns a LogicalRDD that CARRIES the checkpointed
-    // plan's stats (originStats), and each phase joins the edge list
-    // with an aggregate OF ITSELF — so sizeInBytes would be SQUARED
-    // every round and its bit length would double. By round ~17 the
-    // driver visibly burns whole seconds per round in
-    // BigInteger.multiply inside join size estimation (measured on the
-    // predecessor loop: rounds 17→24 went 0.5 s → 446 s total at
-    // sf0.1, main thread pinned in BigInteger.multiplyToomCook3).
-    // Rebuilding from the already-materialized RDD[Row] resets stats
-    // to defaults and keeps the lineage truncation. (Checkpointing
-    // itself now lives in Flat.releasable, which additionally frees a
-    // superseded round's blocks — r20.)
+    // One exchange per phase: hash(u) already clusters (u, v), so the
+    // dedup and the per-u window add none.
+    def star(e: DataFrame): DataFrame =
+      e.repartition(col("u")).dropDuplicates("u", "v")
+        .withColumn("m", min(col("v")).over(Window.partitionBy("u")))
     // emitted (v, m) has v > u ≥ m, so the u > v canonical form is
     // an invariant of both phases — no re-canonicalization needed.
     def largeStar(e: DataFrame): DataFrame = {
-      val sym = e.union(e.select(col("v").as("u"), col("u").as("v")))
-      val mins = sym.groupBy("u")
-        .agg(least(min(col("v")), col("u")).as("m"))
-      sym.join(mins, "u").filter(col("v") > col("u"))
-        .select(col("v").as("u"), col("m").as("v"))
-        .filter(col("u") =!= col("v"))
-        .distinct()
+      val sym = e.select(explode(array(
+          struct(col("u"), col("v")),
+          struct(col("v").as("u"), col("u").as("v")))).as("e"))
+        .select(col("e.u"), col("e.v"))
+      val m = least(col("m"), col("u"))
+      star(sym).filter(col("v") > col("u"))
+        .select(col("v").as("u"), m.as("v"), (m =!= col("u")).as("moved"))
     }
     def smallStar(e: DataFrame): DataFrame = {
-      val mins = e.groupBy("u").agg(min(col("v")).as("m")) // m < u always
-      e.join(mins, "u").filter(col("v") =!= col("m"))
-        .select(col("v").as("u"), col("m").as("v"))
-        .union(mins.select(col("u"), col("m").as("v")))
-        .distinct()
+      val stays = col("v") === col("m") // m < u always
+      star(e).select(when(stays, col("u")).otherwise(col("v")).as("u"),
+        col("m").as("v"), (!stays).as("moved"))
     }
-    val (edges0, relEdges0) = Flat.releasable(pairs
+    def counted(name: String, phase: DataFrame): DataFrame =
+      phase.observe(name, count(when(col("moved"), 1)).as("n")).select("u", "v")
+    val (lsMoved, ssMoved) = ("graft_cc_large_star", "graft_cc_small_star")
+    var edges = pairs
       .select(greatest(col("id_a").cast("long"), col("id_b").cast("long")).as("u"),
               least(col("id_a").cast("long"), col("id_b").cast("long")).as("v"))
       .filter(col("u") =!= col("v"))
-      .distinct())
-    var edges = edges0
-    var relPrev = relEdges0
-    var edgeCount = edges.count()
+    var relPrev: () => Unit = () => ()
     var changed = 1L
     var i = 0
     while (changed > 0 && i < maxIter) {
-      // large-star feeds small-star, which reads it twice (groupBy +
-      // join) — checkpoint both so neither subplan recomputes.
-      val (ls, relLs) = Flat.releasable(largeStar(edges))
-      val (next, relNext) = Flat.releasable(smallStar(ls))
-      relLs() // next is materialized — the large-star intermediate is dead
-      // exact set-equality check in ONE action (r20): both sides are
-      // distinct, so tagging each set and aggregating per (u, v) gives
-      // |next| and |next ∩ edges| together, and |A Δ B| = |A| + |B| −
-      // 2·|A ∩ B| — the identical exact statistic the previous
-      // next.count() + union-distinct pair computed in TWO driver-
-      // synced jobs per round. Still a set compare, never a hash (a
-      // collision would silently mis-cluster — the r19 decision).
-      val st = next.select(col("u"), col("v"), lit(1L).as("__a"), lit(0L).as("__b"))
-        .unionAll(edges.select(col("u"), col("v"), lit(0L).as("__a"), lit(1L).as("__b")))
-        .groupBy(col("u"), col("v"))
-        .agg(max(col("__a")).as("__ma"), max(col("__b")).as("__mb"))
-        .agg(sum(col("__ma")).as("__na"), sum(col("__ma") * col("__mb")).as("__ni"))
-        .head
-      val nextCount = if (st.isNullAt(0)) 0L else st.getLong(0)
-      val inter = if (st.isNullAt(1)) 0L else st.getLong(1)
-      changed = nextCount + edgeCount - 2L * inter
-      relPrev() // the set-compare was the old round's last read
+      val round = counted(ssMoved, smallStar(counted(lsMoved, largeStar(edges))))
+      val (next, relNext) = Flat.releasable(round)
+      // AQE drops a CollectMetrics node only over an input it found
+      // empty, where nothing moved.
+      val counts = round.queryExecution.observedMetrics
+      changed = Seq(lsMoved, ssMoved).map(counts.get(_).fold(0L)(_.getLong(0))).sum
+      relPrev() // next is materialized — the previous round is dead
       edges = next
       relPrev = relNext
-      edgeCount = nextCount
       i += 1
     }
     OpsMetrics.recordConvergence("graft.cc.convergence", i, changed)
     if (changed > 0)
       throw new IllegalStateException(
-        s"connectedComponents did not converge: $changed edge(s) still " +
-        s"changing after $maxIter rounds — raise maxIter (labels would " +
-        s"be silently wrong)")
+        s"connectedComponents did not converge: $changed edge(s) re-pointed " +
+        s"in round $maxIter — raise maxIter (labels would be silently wrong)")
     // star forest: leaves point at their component min; roots appear
     // only on the v side and label themselves.
     edges.select(col("u").as("node"), col("v").as("cluster_id"))

@@ -55,6 +55,10 @@ object OpsMetrics {
     * the named iterative operator's most recent invocation — 0 still
     * changing means clean convergence. Pipelines chaining e.g. dup-
     * cluster resolution can assert this instead of trusting the loop.
+    * For "graft.cc.convergence" the second field is the number of edges
+    * re-pointed in the last round (0 iff that round left the edge set
+    * unchanged); a retried task can count twice, so read it only as
+    * zero versus nonzero.
     */
   def lastConvergence(metric: String): Option[(Int, Long)] =
     Option(convergences.get(metric))

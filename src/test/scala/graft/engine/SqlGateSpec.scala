@@ -224,4 +224,27 @@ class SqlGateSpec extends AnyFunSuite {
         == rows, table)
     }
   }
+
+  test("concurrent run over two catalogs never reads the other catalog's view") {
+    // both catalogs name a source `t`, so both register the temp view
+    // `t` on the one shared session; a request must analyze its query
+    // against the frame it registered, not the other request's
+    def catalogWith(v: String) = {
+      val c = new Catalog(spark, Files.createTempDirectory("graft-sqlgate-race").toString)
+      c.ingest("t", Ingest.csv(spark, csvFile(s"k,v\n2,$v\n")), "csv")
+      c
+    }
+    val cats = Seq("alpha" -> catalogWith("alpha"), "beta" -> catalogWith("beta"))
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+    try {
+      val runs = (cats ++ cats).map { case (want, c) =>
+        pool.submit(() => (1 to 200).flatMap { _ =>
+          SqlGate.run(c, "SELECT v FROM t", _ => true).collect().map(_.getString(0))
+            .filter(_ != want)
+        })
+      }
+      val wrong = runs.flatMap(_.get(5, java.util.concurrent.TimeUnit.MINUTES))
+      assert(wrong.isEmpty, s"${wrong.size} of ${runs.size * 200} reads saw the other catalog's row")
+    } finally pool.shutdownNow()
+  }
 }
