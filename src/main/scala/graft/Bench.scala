@@ -1,119 +1,119 @@
 package graft
 import org.apache.spark.sql.SparkSession
 object Bench {
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = GraftSession.build()
-    // headline queries only: the im* entries are engine-flow correctness
-    // artifacts (tiny embedded inputs + temp-warehouse writes), not
-    // data-path performance. Run the whole set TWICE and report the
-    // second (warm) pass: the first pass absorbs JVM/JIT/codegen-cache/
-    // page-cache warm-up, which otherwise dominates per-query times at
-    // this scale and makes run-to-run comparison noise, not signal.
-    // excluded: entries whose OUTPUT is a pass/fail verdict rather than
-    // data (engine-flow im* gates and the mm02 batch-invariance gate,
-    // which runs its operator 3x + exceptAll just to self-validate)
+  /** Registry entries outside the headline besides the im* gates: each
+    * one's OUTPUT is a pass/fail verdict rather than data, or its wall
+    * measures a loop or a write rather than a query. Bench times them
+    * in its concurrent engine passes; PlanDump's "headline" skips them.
+    */
+  val nonHeadline: Set[String] = Set(
+    // the mm02 batch-invariance gate runs its operator 3x + exceptAll
+    // just to self-validate
+    "mm02_decode_batched",
     // ... same category: sim04/em02 run MULTIPLE pipelines (IVF / PQ
     // variants + brute force) to emit recall-bound booleans, and
     // st03/st04 spend their time writing fixture copies to tmp parquet
     // before streaming them — all correctness verdicts, not data-path
     // throughput
-    val headline = SparkEntry.queries
-      .filterNot(q => q._1.startsWith("im") || q._1 == "mm02_decode_batched"
-        || q._1 == "sim04_ivf_kmeans_recall" || q._1 == "st03_dedup_stream"
-        || q._1 == "st04_interval_join" || q._1 == "st05_stream_enrich"
-        || q._1 == "st07_session_window"
-        || q._1 == "em02_pq_recall" || q._1 == "sim05_ivfpq_recall"
-        || q._1 == "st06_neardup_ingest" || q._1 == "hll01_sketch_rollup"
-        // em07 is the same category: runs the whitening TWICE-shaped
-        // work (transform + full moment audit) to emit booleans
-        || q._1 == "em07_zca_whiten"
-        // mm06 likewise: embedded-fixture perceptual-contract verdict
-        || q._1 == "mm06_image_dhash"
-        // dd18: three blocking configs + an O(n²) brute-force
-        // reference over an embedded 600-signature fixture, emitting
-        // pinned drop/recall counts — the sim04/em02 category
-        || q._1 == "dd18_hamming_arity"
-        // tk01 is an iterative TRAINING job (12 sequential shuffle
-        // rounds), not a query — its wall time measures the loop.
-        // tk05's GATE re-runs that same bpeTrain loop before its
-        // one-scan fertility aggregate (the loop is ~95% of its 7.7 s
-        // sf0.1 wall) — same category; the fertility op itself is
-        // probed flat in ScaleCheck r15 (0.6 s → 0.3 s at ×4)
-        || q._1 == "tk01_bpe_merges" || q._1 == "tk02_bpe_encode"
-        || q._1 == "tk05_bpe_fertility"
-        // tk06 is tk01's category: an iterative EM TRAINING loop
-        // (seed pass + 2 Viterbi/count rounds), not a query; tk07's
-        // gate re-runs that training before its one-scan encode
-        // (tk05's relationship to tk01)
-        || q._1 == "tk06_unigram_train" || q._1 == "tk07_unigram_encode"
-        || q._1 == "tk08_vocab_roundtrip"
-        // pr01 is the same shape: ten sequential checkpointed rounds
-        // whose wall measures the loop, not a query (edge join + agg
-        // per round); its scale behavior is probed in ScaleCheck r9
-        || q._1 == "pr01_pagerank"
-        // bb01 spends its time WRITING the bucketed tables (the point
-        // is the zero-exchange read plan, asserted in PlanQualitySpec)
-        || q._1 == "bb01_bucketed_join"
-        // pp10/pp12 are bb01's category: partitioned parquet WRITEs +
-        // read-back manifests — wall time measures the landing, not a
-        // query (the shard plan itself is probed in ScaleCheck r16)
-        || q._1 == "pp10_shard_materialize" || q._1 == "pp12_shard_append"
-        || q._1 == "pp13_compact_landing" || q._1 == "pp14_erase_from_landing"
-        || q._1 == "pp15_validate_landing" || q._1 == "pp16_tokenized_landing"
-        || q._1 == "mf01_landing_manifest"
-        // pp17 composes tk06's iterative EM training with pp16's
-        // landing write; pp18 writes a temp landing before reading —
-        // both walls measure the flow, not a query
-        || q._1 == "pp17_learned_tokenized_landing"
-        || q._1 == "pp18_landing_reader"
-        // pp19/pp20 are pp18's category: each writes temp landings
-        // (pp20 adds a manifest + append) before the read/validate
-        // under test; st13 is st12's shape (fixture batches →
-        // streaming landing → manifest); mm12 is mm06's (embedded
-        // image fixtures → cluster verdict)
-        || q._1 == "pp19_epoch_shuffle_reader"
-        || q._1 == "pp20_incremental_validate"
-        || q._1 == "pp21_epoch_index_reader"
-        // pp22 is pp21's category one step further: temp landing +
-        // two epoch-index writes + registry lifecycle asserts — a
-        // flow/verdict gate, not a query (missed when the gate landed)
-        || q._1 == "pp22_epoch_lifecycle"
-        || q._1 == "st13_streaming_tokenized_landing"
-        || q._1 == "mm12_image_neardup"
-        // st08 writes fixture file-batches then drives a streaming
-        // query against them — a correctness verdict like st06;
-        // st12 is the same shape (fixture batches → streaming shard
-        // landing → manifest read-back)
-        || q._1 == "st08_rollup_ingest" || q._1 == "st12_shard_landing"
-        // em09 is em07's category: projection + a full covariance
-        // re-audit (driver Jacobi both sides) to emit booleans
-        || q._1 == "em09_pca_project"
-        // bfs01 is pr01's category: an iterative frontier loop whose
-        // wall measures the rounds; its slope is probed in r9d
-        || q._1 == "bfs01_hop_distance"
-        // lp01 is the same category (4 checkpointed rounds); probed
-        // in r9f on a 1M-node circulant
-        || q._1 == "lp01_label_prop"
-        // hits01 likewise: 3 checkpointed power-iteration rounds with
-        // two driver-synced norms each — wall measures the loop
-        || q._1 == "hits01_hubs_authorities"
-        // NOTE (r15 decision): gr04 and gr06 both pay lp01's 4-round
-        // label propagation (~7 s each at sf0.1) — deliberately NOT
-        // deduplicated with a shared-fixture mode. Each gate times the
-        // END-TO-END cost a user pays for that operator alone, and the
-        // gr04-vs-gr06 pair IS the recorded A/B for composition value
-        // (12.9 s separately → 6.35 s composed, BASELINE r14); a bench
-        // mode that shares the label frame would measure a state no
-        // verify path runs and silently understate the standalone ops.
-        // bf02 is hll01's category: a bounds-verdict gate; probe
-        // throughput is measured in r9f (40M probes ~1 s)
-        || q._1 == "bf02_bloom_membership"
-        // st09/st10 are st06's category: write fixture batches then
-        // drive a streaming query — correctness verdicts, not
-        // throughput
-        || q._1 == "st09_cusum_monitor"
-        || q._1 == "st10_heavy_hitters")
+    "sim04_ivf_kmeans_recall", "st03_dedup_stream", "st04_interval_join",
+    "st05_stream_enrich", "st07_session_window", "em02_pq_recall",
+    "sim05_ivfpq_recall", "st06_neardup_ingest", "hll01_sketch_rollup",
+    // em07 is the same category: runs the whitening TWICE-shaped
+    // work (transform + full moment audit) to emit booleans
+    "em07_zca_whiten",
+    // mm06 likewise: embedded-fixture perceptual-contract verdict
+    "mm06_image_dhash",
+    // dd18: three blocking configs + an O(n²) brute-force
+    // reference over an embedded 600-signature fixture, emitting
+    // pinned drop/recall counts — the sim04/em02 category
+    "dd18_hamming_arity",
+    // tk01 is an iterative TRAINING job (12 sequential shuffle
+    // rounds), not a query — its wall time measures the loop.
+    // tk05's GATE re-runs that same bpeTrain loop before its
+    // one-scan fertility aggregate (the loop is ~95% of its 7.7 s
+    // sf0.1 wall) — same category; the fertility op itself measured
+    // flat at ×4 (0.6 s → 0.3 s, BASELINE.md round-15 scale probes)
+    "tk01_bpe_merges", "tk02_bpe_encode", "tk05_bpe_fertility",
+    // tk06 is tk01's category: an iterative EM TRAINING loop
+    // (seed pass + 2 Viterbi/count rounds), not a query; tk07's
+    // gate re-runs that training before its one-scan encode
+    // (tk05's relationship to tk01)
+    "tk06_unigram_train", "tk07_unigram_encode", "tk08_vocab_roundtrip",
+    // pr01 is the same shape: ten sequential checkpointed rounds
+    // whose wall measures the loop, not a query (edge join + agg
+    // per round; its ×4 slope is in BASELINE.md round 9)
+    "pr01_pagerank",
+    // bb01 spends its time WRITING the bucketed tables (the point
+    // is the zero-exchange read plan, asserted in PlanQualitySpec)
+    "bb01_bucketed_join",
+    // pp10/pp12 are bb01's category: partitioned parquet WRITEs +
+    // read-back manifests — wall time measures the landing, not a
+    // query (the shard plan's ×4 slope is in BASELINE.md round 16)
+    "pp10_shard_materialize", "pp12_shard_append", "pp13_compact_landing",
+    "pp14_erase_from_landing", "pp15_validate_landing",
+    "pp16_tokenized_landing", "mf01_landing_manifest",
+    // pp17 composes tk06's iterative EM training with pp16's
+    // landing write; pp18 writes a temp landing before reading —
+    // both walls measure the flow, not a query
+    "pp17_learned_tokenized_landing", "pp18_landing_reader",
+    // pp19/pp20 are pp18's category: each writes temp landings
+    // (pp20 adds a manifest + append) before the read/validate
+    // under test; st13 is st12's shape (fixture batches →
+    // streaming landing → manifest); mm12 is mm06's (embedded
+    // image fixtures → cluster verdict)
+    "pp19_epoch_shuffle_reader", "pp20_incremental_validate",
+    "pp21_epoch_index_reader",
+    // pp22 is pp21's category one step further: temp landing +
+    // two epoch-index writes + registry lifecycle asserts — a
+    // flow/verdict gate, not a query (missed when the gate landed)
+    "pp22_epoch_lifecycle", "st13_streaming_tokenized_landing",
+    "mm12_image_neardup",
+    // st08 writes fixture file-batches then drives a streaming
+    // query against them — a correctness verdict like st06;
+    // st12 is the same shape (fixture batches → streaming shard
+    // landing → manifest read-back)
+    "st08_rollup_ingest", "st12_shard_landing",
+    // em09 is em07's category: projection + a full covariance
+    // re-audit (driver Jacobi both sides) to emit booleans
+    "em09_pca_project",
+    // bfs01 is pr01's category: an iterative frontier loop whose
+    // wall measures the rounds
+    "bfs01_hop_distance",
+    // lp01 is the same category (4 checkpointed rounds)
+    "lp01_label_prop",
+    // hits01 likewise: 3 checkpointed power-iteration rounds with
+    // two driver-synced norms each — wall measures the loop
+    "hits01_hubs_authorities",
+    // NOTE (r15 decision): gr04 and gr06 both pay lp01's 4-round
+    // label propagation (~7 s each at sf0.1) — deliberately NOT
+    // deduplicated with a shared-fixture mode. Each gate times the
+    // END-TO-END cost a user pays for that operator alone, and the
+    // gr04-vs-gr06 pair IS the recorded A/B for composition value
+    // (12.9 s separately → 6.35 s composed, BASELINE r14); a bench
+    // mode that shares the label frame would measure a state no
+    // verify path runs and silently understate the standalone ops.
+    // bf02 is hll01's category: a bounds-verdict gate; probe
+    // throughput is in BASELINE.md round 9 (40M probes ~1 s)
+    "bf02_bloom_membership",
+    // st09/st10 are st06's category: write fixture batches then
+    // drive a streaming query — correctness verdicts, not
+    // throughput
+    "st09_cusum_monitor", "st10_heavy_hitters")
+
+  /** Headline queries: not an engine-flow im* gate (tiny embedded
+    * inputs + temp-warehouse writes) and not in [[nonHeadline]].
+    */
+  def isHeadline(name: String): Boolean =
+    !name.startsWith("im") && !nonHeadline(name)
+
+  def main(args: Array[String]): Unit = {
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val spark = GraftSession.build()
+    // Run the whole headline set TWICE and report the second (warm)
+    // pass: the first pass absorbs JVM/JIT/codegen-cache/page-cache
+    // warm-up, which otherwise dominates per-query times at this
+    // scale and makes run-to-run comparison noise, not signal.
+    val headline = SparkEntry.queries.filter(q => isHeadline(q._1))
       .toSeq.sortBy(_._1)
       // SPARK_GRAFT_ONLY=cf01_basket_lift,gr02_assortativity — solo
       // timing for regression attribution; production runs leave it
@@ -140,10 +140,8 @@ object Bench {
     // heavy tail (big sorts/hash-aggs) regressing as the suite grows.
     // Dropping persisted RDDs after a query's action has completed
     // recomputes nothing; it restores the isolation a per-job cluster
-    // deployment gets for free. (SPARK_GRAFT_NO_CLEAN=1 disables, for
-    // A/B runs.)
-    val cleanBetween = !sys.env.get("SPARK_GRAFT_NO_CLEAN").contains("1")
-    def dropLeftoverBlocks(): Unit = if (cleanBetween) {
+    // deployment gets for free.
+    def dropLeftoverBlocks(): Unit = {
       // clearCache FIRST: unpersisting the RDDs alone leaves the
       // CacheManager's InMemoryRelation entries behind, and the warm
       // pass's identical logical plans then match a stale relation
@@ -297,7 +295,7 @@ object Bench {
       .filterNot(q => headline.exists(_._1 == q._1))
       .filter { case (name, _) =>
         sys.env.get("SPARK_GRAFT_ONLY").forall(_.split(',').contains(name)) }
-    // The pass runs N-way CONCURRENT (default 4): these gates are
+    // The pass runs enginePar-way CONCURRENT: these gates are
     // dominated by fixed latencies (micro-batch streaming startup,
     // catalog lifecycle round-trips, per-iteration checkpoint syncs)
     // that overlap cleanly on 32 cores, and the pass exists only for
@@ -315,14 +313,13 @@ object Bench {
     // concurrent clearCache would destroy another in-flight gate's
     // localCheckpoint blocks irrecoverably (their lineage is
     // truncated); one cleanup runs after the pass completes.
-    // default 6 → 8 (r16): the flow set grew 46 → 55 with six
+    // 6 → 8 (r16): the flow set grew 46 → 55 with six
     // landing-writer gates (pp10/pp12/pp13/pp14/pp15/st12 — multiple
     // parquet writes + FS swaps each, nearly pure latency); the
     // same-day A/B at sf0.1 read 69.7 s (par=6, 54 gates) vs 51.4 s
     // (par=8, 55 gates). The r15 4→6 bump was the same shape one
     // growth step earlier.
-    val enginePar =
-      math.max(1, sys.env.getOrElse("SPARK_GRAFT_ENGINE_PAR", "8").toInt)
+    val enginePar = 8
     def runEnginePass(): (Map[String, Double], Double) = {
       import scala.concurrent.{Await, ExecutionContext, Future}
       import scala.concurrent.duration.Duration

@@ -3,8 +3,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The one SparkSession factory: every entry point (Bench, Verify,
-  * PlanDump, Scratch, ScaleCheck, Demo) and the test suites build
-  * their session here, so the plans they run are the benched plans.
+  * PlanDump, Scratch, Demo) and the test suites build their session
+  * here, so the plans they run are the benched plans.
   * The native `graft_*` functions need no set-up: Spark loads
   * [[graft.functions.GraftExtensions]] from the classpath
   * (META-INF/services) into every session it builds.

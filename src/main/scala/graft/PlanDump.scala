@@ -10,8 +10,8 @@ import java.nio.charset.StandardCharsets
   * plans.
   *
   * Usage: runMain graft.PlanDump <outDir> [names] [sfDir]
-  *   names: comma-separated query names, or "headline" (Bench's
-  *   filter), or "all" (default: headline).
+  *   names: comma-separated query names, or "headline"
+  *   (`Bench.isHeadline`), or "all" (default: headline).
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
@@ -25,11 +25,7 @@ object PlanDump {
     val all = SparkEntry.queries
     val selected: Seq[String] = namesArg match {
       case "all" => all.keys.toSeq.sorted
-      case "headline" =>
-        // names only — the queries that carry a DuckDB oracle and read
-        // the sf tables (skip engine-flow im* fixture gates, whose
-        // plans are fixture-embedded and whose walls Bench excludes)
-        all.keys.filterNot(_.startsWith("im")).toSeq.sorted
+      case "headline" => all.keys.filter(Bench.isHeadline).toSeq.sorted
       case csv => csv.split(',').toSeq
     }
     selected.foreach { name =>

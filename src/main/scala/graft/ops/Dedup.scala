@@ -710,7 +710,7 @@ object Dedup {
     * round, so a high-eccentricity similarity graph (sf0.1 sd02: 1526
     * nodes) trickled for 24 rounds; star contraction rewires the edges
     * themselves, so distance-to-min shrinks geometrically (measured on
-    * the same graph: see BASELINE.md ScaleCheck r9).
+    * the same graph: see BASELINE.md's connected-components probe).
     *
     * Each phase is ONE exchange: the rows are hash-partitioned on u,
     * which also clusters (u, v), so the (u, v) dedup and the per-u min

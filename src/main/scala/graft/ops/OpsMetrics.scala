@@ -115,8 +115,8 @@ object OpsMetrics {
     // (b) hides statistics, so a join consuming the guarded side
     // degrades to a sort-merge join whose many-to-many buffered-pair
     // scan measured ~15× slower than the broadcast-hash plan on the
-    // SAME pair count (ScaleCheck `er` probe: 1.1 s vs 16.9 s for 9M
-    // scored pairs). This form aggregates bucket SIZES (bucket-
+    // SAME pair count (1.1 s vs 16.9 s for 9M scored pairs,
+    // BASELINE.md round 9, "guard-shape finding"). This form aggregates bucket SIZES (bucket-
     // cardinality rows, UDF evaluated once per bucket for the drop
     // accumulators) and semi-joins the keep set back — AQE broadcasts
     // the kept-keys frame when it fits, leaving the data side a pure

@@ -114,7 +114,7 @@ object CurationOps {
     pp02From(docs(s, d))
 
   /** The composed pipeline over any documents frame — shared by the
-    * gate and ScaleCheck r16's whole-composition ×4 probe. */
+    * gate and PlanQualitySpec's "pp02 composed" plan pin. */
   def pp02From(ds: DataFrame): DataFrame = {
     val keep = graft.ops.Dedup.exact(ds).select(col("keep_id").as("doc_id"))
     // STAGE the deduped corpus before the multi-consumer cut: the

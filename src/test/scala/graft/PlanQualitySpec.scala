@@ -144,8 +144,8 @@ class PlanQualitySpec extends AnyFunSuite {
     // reads the staged intermediates). Before staging, the cut's
     // multi-reference lineage re-ran the dedup join per consumer —
     // 21 full-table scans in one plan, the recompute that would
-    // dominate a 100 TB run. The companion ×4 wall probe is
-    // ScaleCheck r16.
+    // dominate a 100 TB run. Its ×4 wall read flat (BASELINE.md
+    // round-16 scale probes).
     val df = queries.CurationOps.pp02From(Tables.load(spark, dir, "documents"))
     val p = df.queryExecution.executedPlan.toString
     val scans = "Scan parquet".r.findAllIn(p).length

@@ -121,6 +121,12 @@ class RegistrySchemaLintSpec extends AnyFunSuite {
     assert(globalWindows(pw).isEmpty)
   }
 
+  test("every name Bench keeps out of the headline is a registry query") {
+    // a renamed query would otherwise quietly rejoin the headline
+    val unknown = (Bench.nonHeadline -- SparkEntry.queries.keySet).toSeq.sorted
+    assert(unknown.isEmpty, s"Bench.nonHeadline names no registry query: $unknown")
+  }
+
   test("no registry gate declares an ARRAY/MAP/STRUCT output column") {
     val offenders = built.flatMap {
       case (name, Right(df)) =>

@@ -212,6 +212,48 @@ class IngestSpec extends AnyFunSuite {
     assert(read <= size * 5 / 2, s"read=$read vs size=$size: input scanned more than ~once")
   }
 
+  test("no driver materialization: per-task input, result and memory stay flat at 4x rows") {
+    // BASELINE.md's ingest promise (the reference streams its 2M-row
+    // many-rows.csv under a 32 MB heap): CSV ingest plus the typed
+    // Parquet write run split by split, so at 4x the rows each task
+    // reads, returns and holds about what it did at 1x. Small splits
+    // make both sizes span several of them: at least 7, so inference's
+    // treeAggregate adds its one-accumulator combine level at both.
+    def ingest(rows: Int): TestSpark.Run = {
+      val f = java.nio.file.Files.createTempFile("graft-scale", ".csv")
+      val out = java.nio.file.Files.createTempDirectory("graft-scale").resolve("typed")
+      java.nio.file.Files.write(f,
+        ("a,b\n" + (1 to rows).map(i => s"$i,${i % 3 == 0}").mkString("\n") + "\n")
+          .getBytes("UTF-8"))
+      try TestSpark.run(s"ingest-$rows") {
+        val ing = Ingest.csv(spark, f.toString)
+        ing.typed.write.parquet(out.toString)
+        ing.unpersist()
+      } finally {
+        java.nio.file.Files.delete(f)
+        org.apache.commons.io.FileUtils.deleteDirectory(out.getParent.toFile)
+      }
+    }
+    val key = "spark.sql.files.maxPartitionBytes"
+    val prior = spark.conf.getOption(key)
+    spark.conf.set(key, "64k")
+    val (small, large) =
+      try (ingest(50000), ingest(200000))
+      finally prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    val input = (r: TestSpark.Run) => r.total(_.inputMetrics.bytesRead)
+    assert(input(large) >= 3 * input(small),
+      s"input counter misses the data: ${input(small)} -> ${input(large)} bytes")
+    val perTask = Seq[(String, org.apache.spark.executor.TaskMetrics => Long)](
+      "input bytes" -> (_.inputMetrics.bytesRead),
+      "result bytes" -> (_.resultSize),
+      "peak execution memory" -> (_.peakExecutionMemory))
+    for ((name, m) <- perTask) {
+      val (a, b) = (small.maxTask(m), large.maxTask(m))
+      info(s"max per-task $name: $a at 50k rows, $b at 200k")
+      assert(b <= 1.5 * a, s"max per-task $name grew $a -> $b at 4x rows")
+    }
+  }
+
   test("castTo writes each display name's sparkType, strict and lenient") {
     import org.apache.spark.sql.functions.col
     val names = Seq("BOOLEAN", "INTEGER", "BIGINT", "DOUBLE PRECISION", "TEXT",

@@ -167,9 +167,26 @@ class ConnectedComponentsSpec extends AnyFunSuite {
     val (j8, r8) = run(8L)
     val (j300, r300) = run(300L)
     assert(r300 > r8, s"rounds $r8 vs $r300")
+    // rounds do not follow the diameter: one-hop label propagation
+    // would need 4x the rounds on the 4x path
+    val (_, r1200) = run(1200L)
+    assert(r1200 <= 2 * r300, s"rounds grew $r300 -> $r1200 from a 300- to a 1200-node path")
     val perRound = (j300 - j8).toDouble / (r300 - r8)
     info(s"$perRound jobs per round")
     assert(perRound <= 3.0,
       s"$perRound jobs per round (8 nodes: $j8 jobs/$r8 rounds; 300 nodes: $j300/$r300)")
+  }
+
+  test("a forest of 10-node cliques: 4x the cliques writes at most 4.5x the shuffle records") {
+    def records(cliques: Int): Long = {
+      val pairs = (for (c <- 0 until cliques; a <- 0 until 10; b <- a + 1 until 10)
+        yield (10L * c + a, 10L * c + b)).toDF("id_a", "id_b")
+      TestSpark.run(s"cc-cliques-$cliques")(Dedup.connectedComponents(pairs).collect())
+        .total(_.shuffleWriteMetrics.recordsWritten)
+    }
+    val (small, large) = (records(50), records(200))
+    assert(small > 0, "no shuffle records counted")
+    info(s"shuffle records: $small at 500 nodes, $large at 2000")
+    assert(large <= 4.5 * small, s"shuffle records grew $small -> $large at 4x the cliques")
   }
 }

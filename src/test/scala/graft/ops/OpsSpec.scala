@@ -42,6 +42,32 @@ class OpsSpec extends AnyFunSuite {
     assert(est == 1.0) // identical docs → identical signatures
   }
 
+  test("minhash-LSH shuffle records grow linearly: 4x the docs, at most 4.5x") {
+    // 200 docs in near-dup pairs (one word apart), replicated with a
+    // replica tag on every word: the replicas share no shingle, so each
+    // adds the same bucket structure and candidate pairs stay
+    // bucket-local. Threshold 0 keeps every candidate pair, so the pair
+    // distinct's shuffle counts them all (a threshold is pushed below
+    // it). A quadratic candidate step grows ~16x here.
+    val base = (0 until 200).map { j =>
+      val words = { val rnd = new scala.util.Random(j / 2); Array.fill(30)(rnd.nextInt(500)) }
+      if (j % 2 == 1) words(j % 30) = 500 + j
+      words
+    }
+    def records(replicas: Int): (Long, Int) = {
+      val docs = (for (r <- 0 until replicas; (ws, j) <- base.zipWithIndex)
+        yield (r * 1000L + j, ws.map(w => s"w${w}r$r").mkString(" "))).toDF("doc_id", "text")
+      var pairs = 0
+      val run = TestSpark.run(s"minhash-x$replicas") {
+        pairs = Dedup.minhashLsh(docs, threshold = 0.0).collect().length }
+      (run.total(_.shuffleWriteMetrics.recordsWritten), pairs)
+    }
+    val ((small, pairs), (large, _)) = (records(1), records(4))
+    assert(pairs > 0 && small > 0, s"no candidate pairs ($pairs) or no shuffle ($small)")
+    info(s"shuffle records: $small at 200 docs, $large at 800")
+    assert(large <= 4.5 * small, s"shuffle records grew $small -> $large at 4x docs")
+  }
+
   test("simhash: identical docs have identical signatures, near-dups close") {
     val sh = Dedup.simhash(docs).collect().map(r => r.getLong(0) -> r.getString(1)).toMap
     assert(sh(1L) == sh(4L))
