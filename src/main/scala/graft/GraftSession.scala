@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The one SparkSession factory: every entry point (Bench, Verify,
-  * PlanDump, Scratch, Demo) and the test suites build their session
+  * PlanDump, Demo) and the test suites build their session
   * here, so the plans they run are the benched plans.
   * The native `graft_*` functions need no set-up: Spark loads
   * [[graft.functions.GraftExtensions]] from the classpath

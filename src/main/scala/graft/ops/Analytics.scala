@@ -209,14 +209,10 @@ object Analytics {
     // rows at every SF — so the one-time checkpoint write stays orders
     // of magnitude under the two full input re-scans it saves
     // (MEMORY_AND_DISK spills past memory at 10^9+ customers).
-    val per = {
-      val p0 = orders.groupBy(customer.as("customer"))
-        .agg(max(unix_micros(ts)).as("__last_us"),
-          count(lit(1)).as("frequency"),
-          round(sum(amount), 2).as("monetary"))
-      val cp = p0.localCheckpoint(true)
-      orders.sparkSession.createDataFrame(cp.rdd, cp.schema)
-    }
+    val per = Flat.flat(orders.groupBy(customer.as("customer"))
+      .agg(max(unix_micros(ts)).as("__last_us"),
+        count(lit(1)).as("frequency"),
+        round(sum(amount), 2).as("monetary")))
     val withR = per
       .crossJoin(broadcast(per.agg(max(col("__last_us")).as("__max_us"))))
       .withColumn("recency_days",
@@ -546,12 +542,9 @@ object Analytics {
     // lazy cache races itself and BOTH branches recompute the whole
     // quadratic pair explode + count (r19 perf: the 8M-row pair
     // exchange ran twice, 2×89 MB; post-agg co is item-pair-bounded,
-    // so the checkpoint is tiny). localCheckpoint, not persist: blocks
+    // so the checkpoint is tiny). A checkpoint, not persist: blocks
     // die with the RDD via the ContextCleaner.
-    val co = {
-      val cp = co0.localCheckpoint(true)
-      ui.sparkSession.createDataFrame(cp.rdd, cp.schema)
-    }
+    val co = Flat.flat(co0)
     // mirror so every item sees its full neighbor list
     val sym = co.union(co.select(col("j").as("i"), col("i").as("j"),
       col("n_common")))

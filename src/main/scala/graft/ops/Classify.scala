@@ -103,12 +103,8 @@ object Classify {
     // aggregate removes a full corpus tokenize + distinct shuffle
     // (r19 perf); aCounts is (token × class)-bounded, so the
     // checkpoint both consumers share is tiny
-    val aCounts = {
-      val a0 = presence.groupBy(col("tok"), col("__label").as("cls"))
-        .agg(count(lit(1)).as("a"))
-      val cp = a0.localCheckpoint(true)
-      df.sparkSession.createDataFrame(cp.rdd, cp.schema)
-    }
+    val aCounts = Flat.flat(presence.groupBy(col("tok"), col("__label").as("cls"))
+      .agg(count(lit(1)).as("a")))
     val tokDocs = aCounts.groupBy(col("tok")).agg(sum(col("a")).as("dt"))
     val grid = tokDocs.crossJoin(broadcast(classes))
       .join(aCounts, Seq("tok", "cls"), "left")
@@ -159,12 +155,8 @@ object Classify {
     // aggregate removes a full corpus tokenize + distinct shuffle
     // (r19 perf); aCounts is (token × class)-bounded, so the
     // checkpoint both consumers share is tiny
-    val aCounts = {
-      val a0 = presence.groupBy(col("tok"), col("__label").as("cls"))
-        .agg(count(lit(1)).as("a"))
-      val cp = a0.localCheckpoint(true)
-      df.sparkSession.createDataFrame(cp.rdd, cp.schema)
-    }
+    val aCounts = Flat.flat(presence.groupBy(col("tok"), col("__label").as("cls"))
+      .agg(count(lit(1)).as("a")))
     val tokDocs = aCounts.groupBy(col("tok")).agg(sum(col("a")).as("dt"))
     val grid = tokDocs.crossJoin(broadcast(classes))
       .join(aCounts, Seq("tok", "cls"), "left")

@@ -1708,14 +1708,10 @@ object Curation {
     // scalar total (a broadcast build) and the share projection, and
     // without the checkpoint each consumer re-ran the corpus-wide URL
     // parse + aggregate (r19 perf)
-    val byHost = {
-      val b0 = df.select(host.as("host"))
-        .filter(col("host").isNotNull && col("host") =!= "")
-        .groupBy(col("host"))
-        .agg(count(lit(1)).as("n_docs"))
-      val cp = b0.localCheckpoint(true)
-      df.sparkSession.createDataFrame(cp.rdd, cp.schema)
-    }
+    val byHost = Flat.flat(df.select(host.as("host"))
+      .filter(col("host").isNotNull && col("host") =!= "")
+      .groupBy(col("host"))
+      .agg(count(lit(1)).as("n_docs")))
     val total = byHost.agg(sum(col("n_docs")).as("__total_docs"))
     byHost.crossJoin(broadcast(total))
       .select(col("host"),
@@ -2010,13 +2006,9 @@ object Curation {
     // the budget scalar, the frontier chain, and the final assignment
     // — without the checkpoint each consumer re-ran that aggregate
     // (r19 perf)
-    val base = {
-      val b0 = perSource
-        .select(source.as("source"), tokens.cast("long").as("t"))
-        .filter(col("t") > 0)
-      val cp = b0.localCheckpoint(true)
-      perSource.sparkSession.createDataFrame(cp.rdd, cp.schema)
-    }
+    val base = Flat.flat(perSource
+      .select(source.as("source"), tokens.cast("long").as("t"))
+      .filter(col("t") > 0))
     val gl = base.agg((sum(col("t")) * lit(budgetRatio)).as("__b"),
       count(lit(1)).cast("double").as("__s"))
     val wr = base.crossJoin(broadcast(gl))

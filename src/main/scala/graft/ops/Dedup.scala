@@ -733,19 +733,16 @@ object Dedup {
     * cannot tell from ids — the set's total strictly falls, since
     * dedup only drops positive terms: the set changed. So the loop
     * stops at the same round, with the same edges, as a compare of
-    * consecutive edge sets would. Both moved counts are collected with
-    * Dataset.observe by the round's own checkpoint job (0 extra jobs);
-    * only zero versus nonzero is read, so a retried task counting
-    * twice cannot change the decision. A round is 3 jobs: one per
-    * exchange plus the checkpoint.
+    * consecutive edge sets would. Both moved counts are observed by
+    * the round's own checkpoint job (`Flat.iterate`), so a round is 3
+    * jobs: one per exchange plus the checkpoint.
     *
-    * Each round's result is checkpointed: the loop REPLACES lineage
-    * instead of nesting it, so round N's plan is flat, not exponential.
-    * If `spark.sparkContext.setCheckpointDir` is set, rounds use
-    * RELIABLE checkpoints (survive executor loss — set it on a real
-    * cluster); otherwise localCheckpoint (fine single-node, where
-    * executor loss is process death anyway). Every stage is
-    * partition-parallel, nothing driver-side.
+    * Each round's result is flat-checkpointed (`Flat.iterate`): the
+    * loop REPLACES lineage instead of nesting it. If
+    * `spark.sparkContext.setCheckpointDir` is set, rounds use RELIABLE
+    * checkpoints (survive executor loss — set it on a real cluster);
+    * otherwise localCheckpoint. Every stage is partition-parallel,
+    * nothing driver-side.
     *
     * Output: (node, cluster_id) for every node that appears in a pair,
     * cluster_id = min doc id of the component. Deterministic.
@@ -759,6 +756,7 @@ object Dedup {
     * edges re-pointed in the last round — 0 means clean).
     */
   def connectedComponents(pairs: DataFrame, maxIter: Int = 50): DataFrame = {
+    require(maxIter >= 1, s"maxIter must be positive: $maxIter")
     // One exchange per phase: hash(u) already clusters (u, v), so the
     // dedup and the per-u window add none.
     def star(e: DataFrame): DataFrame =
@@ -783,25 +781,14 @@ object Dedup {
     def counted(name: String, phase: DataFrame): DataFrame =
       phase.observe(name, count(when(col("moved"), 1)).as("n")).select("u", "v")
     val (lsMoved, ssMoved) = ("graft_cc_large_star", "graft_cc_small_star")
-    var edges = pairs
+    val canonical = pairs
       .select(greatest(col("id_a").cast("long"), col("id_b").cast("long")).as("u"),
               least(col("id_a").cast("long"), col("id_b").cast("long")).as("v"))
       .filter(col("u") =!= col("v"))
-    var relPrev: () => Unit = () => ()
-    var changed = 1L
-    var i = 0
-    while (changed > 0 && i < maxIter) {
-      val round = counted(ssMoved, smallStar(counted(lsMoved, largeStar(edges))))
-      val (next, relNext) = Flat.releasable(round)
-      // AQE drops a CollectMetrics node only over an input it found
-      // empty, where nothing moved.
-      val counts = round.queryExecution.observedMetrics
-      changed = Seq(lsMoved, ssMoved).map(counts.get(_).fold(0L)(_.getLong(0))).sum
-      relPrev() // next is materialized — the previous round is dead
-      edges = next
-      relPrev = relNext
-      i += 1
-    }
+    val (edges, i, changed) =
+      Flat.iterate(canonical, maxIter, Seq(lsMoved, ssMoved)) { e =>
+        counted(ssMoved, smallStar(counted(lsMoved, largeStar(e))))
+      }
     OpsMetrics.recordConvergence("graft.cc.convergence", i, changed)
     if (changed > 0)
       throw new IllegalStateException(

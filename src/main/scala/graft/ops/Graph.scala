@@ -25,10 +25,9 @@ object Graph {
     * the edge list (both sides keyed on src — co-partitioned after the
     * first round's exchange) and one (dst, sum) aggregate that
     * partial-aggregates map-side, so the shuffle carries one partial
-    * per (task, dst), not one row per edge. Each round's result is
-    * checkpointed (reliable when a checkpoint dir is set, local
-    * otherwise — dd06's convention), REPLACING lineage instead of
-    * nesting it: round N's plan stays flat. Driver work is two counts.
+    * per (task, dst), not one row per edge. Rounds run on
+    * `Flat.iterate`, which flat-checkpoints each round's ranks, so
+    * round N's plan never nests round N−1's.
     */
   def pageRank(edges: DataFrame, iters: Int = 10,
                damping: Double = 0.85): DataFrame = {
@@ -49,24 +48,16 @@ object Graph {
     require(dangling == 0,
       s"$dangling dangling node(s) would leak rank mass — symmetrize or prune sinks first")
     val n = nodes.count()
-    // Flat.releasable: eager flat checkpoint (resets LogicalRDD
-    // originStats, dd06's convention) + a handle that frees round
-    // N−1's blocks once round N is materialized — without it every
-    // round's checkpoint stays pinned until the driver GCs the RDD
-    // object (r19 verdict: accumulated checkpoint blocks inflated GC)
-    var (ranks, relPrev) =
-      Flat.releasable(nodes.withColumn("rank", lit(1.0 / n)))
-    for (_ <- 1 to iters) {
+    val seed = nodes.withColumn("rank", lit(1.0 / n))
+    val (ranks, _, _) = Flat.iterate(seed, iters) { ranks =>
       val contrib = withDeg
         .join(ranks.withColumnRenamed("node", "src"), "src")
         .groupBy(col("dst"))
         .agg(sum(col("rank") / col("__outdeg")).as("__s"))
-      val (next, rel) = Flat.releasable(nodes
+      nodes
         .join(contrib.withColumnRenamed("dst", "node"), Seq("node"), "left")
         .select(col("node"), (lit((1 - damping) / n) +
-          lit(damping) * coalesce(col("__s"), lit(0.0))).as("rank")))
-      relPrev() // next is materialized — the previous round's blocks are dead
-      ranks = next; relPrev = rel
+          lit(damping) * coalesce(col("__s"), lit(0.0))).as("rank"))
     }
     e.unpersist(); withDeg.unpersist(); nodes.unpersist()
     ranks
@@ -140,36 +131,31 @@ object Graph {
     * (pr01's convention) keep the result oracle-replayable on any
     * engine; convergence is recorded in OpsMetrics("graft.kcore") so
     * callers can assert the peel actually reached the fixed point
-    * (one extra round detects it: no node dropped → converged).
+    * (one extra round detects it: no edge dropped → converged).
     *
-    * Scale shape: each round is one degree aggregate + two semi-joins
-    * of the shrinking edge set — never a materialized neighbor list;
-    * rounds are flat-checkpointed so lineage and stats don't compound
-    * (the dd06/pr01 convention). Peel depth (degeneracy rounds) is
-    * small on real graphs; a chain worst case needs diameter rounds —
-    * bound it with `rounds` and read the convergence metric.
+    * Scale shape: each round is one degree aggregate joined back onto
+    * both endpoints of the shrinking edge set — never a materialized
+    * neighbor list. Rounds run on `Flat.iterate`: flat-checkpointed,
+    * with the dropped edges counted inside the round's checkpoint job.
+    * Peel depth (degeneracy rounds) is small on real graphs; a chain
+    * worst case needs diameter rounds — bound it with `rounds` and read
+    * the convergence metric.
     */
   def kCore(edges: DataFrame, k: Int, rounds: Int = 8): DataFrame = {
     require(k >= 1, s"k must be positive: $k")
     require(rounds >= 1 && rounds <= 64, s"rounds out of range: $rounds")
-    var (e, relPrev) = Flat.releasable(normalizedEdges(edges))
-    var dropped = -1L
-    var executed = 0
-    for (_ <- 1 to rounds if dropped != 0L) {
-      val adj = e.select(col("a").as("n")).union(e.select(col("b").as("n")))
-      val keep = adj.groupBy(col("n")).agg(count(lit(1)).as("deg"))
-        .filter(col("deg") >= k).select(col("n"))
-      val (e2, rel) = Flat.releasable(e
-        .join(keep.withColumnRenamed("n", "a"), Seq("a"), "left_semi")
-        .join(keep.withColumnRenamed("n", "b"), Seq("b"), "left_semi")
-        .select(col("a"), col("b")))
-      dropped = e.count() - e2.count()
-      relPrev() // counts read both rounds; the old round's blocks are now dead
-      executed += 1
-      e = e2; relPrev = rel
-    }
-    OpsMetrics.recordConvergence("graft.kcore", executed,
-      if (dropped == 0L) 0L else dropped)
+    val (e, executed, dropped) =
+      Flat.iterate(normalizedEdges(edges), rounds, Seq("graft_kcore_dropped")) { e =>
+        val deg = e.select(col("a").as("n")).union(e.select(col("b").as("n")))
+          .groupBy(col("n")).agg(count(lit(1)).as("deg"))
+        val minDeg = least(col("__da"), col("__db"))
+        e.join(deg.select(col("n").as("a"), col("deg").as("__da")), "a")
+          .join(deg.select(col("n").as("b"), col("deg").as("__db")), "b")
+          .observe("graft_kcore_dropped", count(when(minDeg < k, 1)))
+          .filter(minDeg >= k)
+          .select(col("a"), col("b"))
+      }
+    OpsMetrics.recordConvergence("graft.kcore", executed, dropped)
     val adj = e.select(col("a").as("node")).union(e.select(col("b").as("node")))
     adj.groupBy(col("node")).agg(count(lit(1)).as("core_degree"))
       .filter(col("core_degree") >= k)
@@ -189,19 +175,20 @@ object Graph {
     * orientation edge list (per-node work = degree², hub-capped by
     * `maxDegree` with the auditable highDegreeNodes set), one
     * edge-keyed support aggregate, one join-back filter — never a
-    * materialized neighbor list, rounds flat-checkpointed so lineage
-    * and join-size stats don't compound. Output: surviving (a, b)
-    * edges with their final support.
+    * materialized neighbor list. Rounds run on `Flat.iterate`:
+    * flat-checkpointed so lineage and join-size stats don't compound,
+    * with the dropped edges counted inside the round's checkpoint job.
+    * Output: surviving (a, b) edges with their final support.
     */
   def kTruss(edges: DataFrame, k: Int, rounds: Int = 3,
              maxDegree: Int = 10000): DataFrame = {
     require(k >= 3, s"k must be at least 3: $k")
     require(rounds >= 1 && rounds <= 32, s"rounds out of range: $rounds")
     val hubs = highDegreeNodes(edges, maxDegree).select(col("node"))
-    var (e, relPrev) = Flat.releasable(normalizedEdges(edges)
+    val capped = normalizedEdges(edges)
       .join(hubs.withColumnRenamed("node", "a"), Seq("a"), "left_anti")
       .join(hubs.withColumnRenamed("node", "b"), Seq("b"), "left_anti")
-      .select(col("a"), col("b")))
+      .select(col("a"), col("b"))
     def support(cur: DataFrame): DataFrame = {
       val wedges = cur.select(col("a").as("x"), col("b").as("y"))
         .join(cur.select(col("a").as("y"), col("b").as("z")), "y")
@@ -214,21 +201,17 @@ object Graph {
         .select(col("__e.a").as("a"), col("__e.b").as("b"))
         .groupBy(col("a"), col("b")).agg(count(lit(1)).as("support"))
     }
-    var dropped = -1L
-    var executed = 0
-    for (_ <- 1 to rounds if dropped != 0L) {
-      // inner join: an edge in no triangle has no support row and
-      // drops (k − 2 ≥ 1), exactly the truss rule
-      val (e2, rel) = Flat.releasable(e.join(support(e), Seq("a", "b"))
-        .filter(col("support") >= k - 2)
-        .select(col("a"), col("b")))
-      dropped = e.count() - e2.count()
-      relPrev() // both counts done — the old round's blocks are dead
-      executed += 1
-      e = e2; relPrev = rel
-    }
-    OpsMetrics.recordConvergence("graft.ktruss", executed,
-      if (dropped == 0L) 0L else dropped)
+    val (e, executed, dropped) =
+      Flat.iterate(capped, rounds, Seq("graft_ktruss_dropped")) { e =>
+        // an edge in no triangle has no support row (null) and drops
+        // (k − 2 ≥ 1), exactly the truss rule
+        e.join(support(e), Seq("a", "b"), "left")
+          .observe("graft_ktruss_dropped",
+            count(when(coalesce(col("support"), lit(0L)) < k - 2, 1)))
+          .filter(col("support") >= k - 2)
+          .select(col("a"), col("b"))
+      }
+    OpsMetrics.recordConvergence("graft.ktruss", executed, dropped)
     // LEFT join + 0: when the round budget exhausts before the fixed
     // point, an edge can survive the last executed round yet lie in no
     // triangle of the final subgraph — it is a survivor with support 0,
@@ -288,41 +271,31 @@ object Graph {
     * `maxHops` — the reachability/radius primitive behind trust
     * propagation and contamination tracing.
     *
-    * Scale shape: the classic frontier loop — each round is ONE join
-    * of the (shrinking) frontier onto the edge list plus one anti-join
-    * against the visited set, both keyed shuffles; rounds ≤ maxHops
-    * and the loop exits early the moment a frontier comes back empty
-    * (one driver-side count per round — the same bounded control-flow
-    * read every iterative op here does). Results are checkpointed flat
-    * per round (pageRank's convention) so round N's plan never nests
-    * lineage. Frontiers carry (node, dist) only.
+    * Scale shape: the classic frontier loop over ONE state frame of
+    * (node, dist) — each round joins its frontier (dist = hop − 1)
+    * onto the edge list, anti-joins the result against the state and
+    * appends it. Rounds ≤ maxHops, on `Flat.iterate`: each round is one
+    * flat checkpoint, which also counts the new frontier, and the loop
+    * exits after the first round that reaches no new node.
     */
   def hopDistance(edges: DataFrame, sources: DataFrame,
                   maxHops: Int = 6): DataFrame = {
     require(maxHops >= 1 && maxHops <= 64, s"maxHops out of range: $maxHops")
     val e = edges.select(col("src"), col("dst")).distinct().persist()
-    var (visited, relVisited) = Flat.releasable(
-      sources.select(col("node")).distinct().withColumn("dist", lit(0)))
-    var frontier = visited
-    var relFrontier: () => Unit = () => ()
     var hop = 0
-    var executed = 0
-    while (hop < maxHops && !frontier.isEmpty) {
-      hop += 1; executed += 1
-      val (next, relNext) = Flat.releasable(
-        frontier.join(e.withColumnRenamed("src", "node"), "node")
-          .select(col("dst").as("node")).distinct()
-          .join(visited.select(col("node")), Seq("node"), "left_anti")
-          .withColumn("dist", lit(hop)))
-      val (v2, relV2) = Flat.releasable(visited.union(next))
-      // the new visited is materialized: the old visited's and the old
-      // frontier's blocks are dead (next stays — it is the new frontier)
-      relVisited(); relFrontier()
-      visited = v2; relVisited = relV2
-      frontier = next; relFrontier = relNext
+    val (visited, executed, frontier) = Flat.iterate(
+        sources.select(col("node")).distinct().withColumn("dist", lit(0)),
+        maxHops, Seq("graft_bfs_frontier")) { visited =>
+      hop += 1
+      val next = visited.filter(col("dist") === hop - 1).select(col("node"))
+        .join(e.withColumnRenamed("src", "node"), "node")
+        .select(col("dst").as("node")).distinct()
+        .join(visited.select(col("node")), Seq("node"), "left_anti")
+        .withColumn("dist", lit(hop))
+        .observe("graft_bfs_frontier", count(lit(1)))
+      visited.union(next)
     }
-    OpsMetrics.recordConvergence("graft.bfs", executed, frontier.count())
-    relFrontier() // the convergence count was the frontier's last read
+    OpsMetrics.recordConvergence("graft.bfs", executed, frontier)
     e.unpersist()
     visited
   }
@@ -414,10 +387,8 @@ object Graph {
     // ReuseExchange computes the caller's chain once — measured r19;
     // the checkpoint below is what stops the deg/join consumers from
     // re-running it)
-    val eCp = e0.union(e0.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct()
-      .localCheckpoint(true)
-    val e = edges.sparkSession.createDataFrame(eCp.rdd, eCp.schema)
+    val e = Flat.flat(e0.union(e0.select(col("dst").as("src"), col("src").as("dst")))
+      .distinct())
     val deg = e.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg"))
     e.join(deg.select(col("node").as("src"), col("deg").as("dx")), "src")
       .join(deg.select(col("node").as("dst"), col("deg").as("dy")), "dst")
@@ -440,8 +411,8 @@ object Graph {
     * Scale shape: per round, two keyed join+aggregate passes over the
     * edge list (authority from hubs, then hubs from authorities) plus
     * one scalar-aggregate norm folded back as a literal — NEVER a
-    * normalization window. Rounds are flat-checkpointed; driver work
-    * is two doubles per round.
+    * normalization window. Rounds run on `Flat.iterate`
+    * (flat-checkpointed); driver work is two doubles per round.
     */
   def hits(edges: DataFrame, iters: Int = 5): DataFrame = {
     require(iters >= 1 && iters <= 50, s"iters out of range: $iters")
@@ -450,9 +421,12 @@ object Graph {
     e.count()
     val nodes = e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node"))).distinct().persist()
-    var (scores, relPrev) = Flat.releasable(nodes
-      .withColumn("hub", lit(1.0)).withColumn("auth", lit(1.0)))
-    for (_ <- 1 to iters) {
+    // the round's caches; each round unpersists the previous round's,
+    // which fed only the scores Flat.iterate has materialized since
+    var caches = Seq.empty[DataFrame]
+    val seed = nodes.withColumn("hub", lit(1.0)).withColumn("auth", lit(1.0))
+    val (scores, _, _) = Flat.iterate(seed, iters) { scores =>
+      caches.foreach(_.unpersist(false))
       // each norm is a driver-synced scalar, and the score update
       // consumes the SAME frame the norm was computed from — persist
       // the round's three intermediates so the edge-join+aggregate
@@ -473,18 +447,15 @@ object Graph {
         .groupBy(col("src")).agg(sum(col("__a")).as("h0")).persist()
       val hNorm = math.sqrt(
         hub0.agg(sum(col("h0") * col("h0"))).head.getDouble(0))
-      val (next, rel) = Flat.releasable(nodes
+      caches = Seq(auth0, auth, hub0)
+      nodes
         .join(hub0.withColumnRenamed("src", "node"), Seq("node"), "left")
         .join(auth.withColumnRenamed("auth", "__auth"), Seq("node"))
         .select(col("node"),
           (coalesce(col("h0"), lit(0.0)) / hNorm).as("hub"),
-          col("__auth").as("auth")))
-      // the round's scores are materialized — the caches and the
-      // previous round's checkpoint blocks are dead
-      auth0.unpersist(false); auth.unpersist(false); hub0.unpersist(false)
-      relPrev()
-      scores = next; relPrev = rel
+          col("__auth").as("auth"))
     }
+    caches.foreach(_.unpersist(false))
     e.unpersist(); nodes.unpersist()
     scores
   }
@@ -514,9 +485,10 @@ object Graph {
     * min_by reads exactly coalesce(argmax-vote, old-label) — one
     * aggregate instead of a per-round labels⋈won join (r19 perf:
     * 40 → 29 stages, 161 → 101 MB shuffled on the sf0.1 trade graph,
-    * byte-identical labels). Rounds are flat-checkpointed so the plan
-    * never nests. Community detection over a 100 TB crawl's host
-    * graph is this exact shape — O(E) per round, 5-10 rounds.
+    * byte-identical labels). Rounds run on `Flat.iterate`
+    * (flat-checkpointed) so the plan never nests. Community detection
+    * over a 100 TB crawl's host graph is this exact shape — O(E) per
+    * round, 5-10 rounds.
     */
   def labelPropagation(edges: DataFrame, rounds: Int = 4): DataFrame = {
     require(rounds >= 1 && rounds <= 50, s"rounds out of range: $rounds")
@@ -534,11 +506,8 @@ object Graph {
     e.count()
     val nodes = e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node"))).distinct().persist()
-    // no flat() on the seed: it is a projection of the persisted node
-    // set, so round 1's lineage is already shallow
-    var labels = nodes.withColumn("label", col("node"))
-    var relPrev: () => Unit = () => ()
-    for (_ <- 1 to rounds) {
+    val seed = nodes.withColumn("label", col("node"))
+    val (labels, _, _) = Flat.iterate(seed, rounds) { labels =>
       val counts = e.join(labels.withColumnRenamed("node", "src"), "src")
         .groupBy(col("dst"), col("label"))
         .agg(count(lit(1)).as("__c"))
@@ -547,13 +516,11 @@ object Graph {
       // smaller), replacing the left join-back
       val votes = counts.unionByName(
         labels.select(col("node").as("dst"), col("label"), lit(0L).as("__c")))
-      val (next, rel) = Flat.releasable(votes
+      votes
         .groupBy(col("dst"))
         .agg(min_by(col("label"),
           struct((-col("__c")).as("__nc"), col("label"))).as("label"))
-        .withColumnRenamed("dst", "node"))
-      relPrev() // next is materialized — the previous round's blocks are dead
-      labels = next; relPrev = rel
+        .withColumnRenamed("dst", "node")
     }
     e.unpersist(); nodes.unpersist()
     labels
@@ -607,17 +574,14 @@ object Graph {
     // construction) just for the 2m count. Labeled groups' statistics
     // are unchanged; the null group never reaches the output (sizes
     // only carries lab's labels).
-    val perLabel0 = e
+    val perLabel = Flat.flat(e
       .join(lab.select(col("node").as("src"), col("label").as("__sl")),
         Seq("src"), "left")
       .join(lab.select(col("node").as("dst"), col("label").as("__dl")),
         Seq("dst"), "left")
       .groupBy(col("__sl").as("label"))
       .agg(count(lit(1)).as("degree_sum"),
-        sum(when(col("__sl") === col("__dl"), 1L).otherwise(0L)).as("in_edges"))
-      .localCheckpoint(true)
-    val perLabel = edges.sparkSession
-      .createDataFrame(perLabel0.rdd, perLabel0.schema)
+        sum(when(col("__sl") === col("__dl"), 1L).otherwise(0L)).as("in_edges")))
     val twoM = perLabel.agg(sum(col("degree_sum")).as("__2m"))
     val sizes = lab.groupBy(col("label")).agg(count(lit(1)).as("n_nodes"))
     sizes.join(perLabel.filter(col("label").isNotNull), Seq("label"), "left")

@@ -51,14 +51,19 @@ object OpsMetrics {
   private val convergences =
     new ConcurrentHashMap[String, (Int, Long)]()
 
-  /** (rounds executed, rows still changing when the loop exited) for
-    * the named iterative operator's most recent invocation — 0 still
-    * changing means clean convergence. Pipelines chaining e.g. dup-
-    * cluster resolution can assert this instead of trusting the loop.
-    * For "graft.cc.convergence" the second field is the number of edges
-    * re-pointed in the last round (0 iff that round left the edge set
-    * unchanged); a retried task can count twice, so read it only as
-    * zero versus nonzero.
+  /** (rounds executed, rows still changing in the last round) for the
+    * named iterative operator's most recent invocation — 0 means clean
+    * convergence. Pipelines chaining e.g. dup-cluster resolution can
+    * assert this instead of trusting the loop. The second field is, per
+    * metric:
+    *  - "graft.kcore": edges peeled in the last round;
+    *  - "graft.ktruss": edges peeled in the last round;
+    *  - "graft.bfs": nodes first reached in the last round (the
+    *    frontier it left);
+    *  - "graft.cc.convergence": edges re-pointed in the last round.
+    * Each is a count observed inside the round's checkpoint job
+    * (`Flat.iterate`), which a retried task can double, so read it only
+    * as zero versus nonzero.
     */
   def lastConvergence(metric: String): Option[(Int, Long)] =
     Option(convergences.get(metric))

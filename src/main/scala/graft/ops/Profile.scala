@@ -307,19 +307,6 @@ object Profile {
       .drop("__anon_n")
   }
 
-  /** Eager lineage truncation (the Dedup/Graph `flat` pattern):
-    * checkpoint to the configured dir when one exists (cluster-safe),
-    * localCheckpoint otherwise; rebuild from the materialized RDD so
-    * downstream branches reuse blocks instead of re-running the chain.
-    */
-  private def flat(df: DataFrame): DataFrame = {
-    val cp =
-      if (df.sparkSession.sparkContext.getCheckpointDir.isDefined)
-        df.checkpoint(true)
-      else df.localCheckpoint(true)
-    df.sparkSession.createDataFrame(cp.rdd, cp.schema)
-  }
-
   /** l-diversity audit (pv02): k-anonymity's required companion — a
     * QI group can be large (k-anonymous) yet expose its members anyway
     * when every row shares one SENSITIVE value (the homogeneity

@@ -1081,10 +1081,7 @@ object Stats {
     // materialize the bins-row frame once: it feeds both the scalar
     // totals (a broadcast build) and the main aggregate, and without
     // the checkpoint each consumer re-scans the full input (r19 perf)
-    val perBin = {
-      val cp = perBin0.localCheckpoint(true)
-      df.sparkSession.createDataFrame(cp.rdd, cp.schema)
-    }
+    val perBin = Flat.flat(perBin0)
     val tot = perBin.agg(sum(col("n_k")).as("n"), sum(col("sy")).as("ty"),
       sum(col("sp2") - lit(2.0) * col("spy") + col("sy")).as("sqerr"))
     perBin.crossJoin(broadcast(tot))
@@ -1143,36 +1140,33 @@ object Stats {
       .agg(sum(col("n")).as("n_comparisons"))
       .join(wins, Seq("item"), "left").na.fill(0L, Seq("wins"))
       .persist()
-    val k = items.count()
-    val (w0, rel0) =
-      Flat.releasable(items.select(col("item"), lit(1.0 / k).as("wt")))
-    var w = w0
-    var relPrev = rel0
-    for (_ <- 1 to iters) {
+    // materialize items before the rounds fan out (labelPropagation's
+    // r19 note)
+    items.count()
+    // the state is the UNNORMALIZED update __raw, not w: __raw feeds
+    // both the Σ normalizer and the projection, so flat-checkpointing
+    // it keeps the whole den chain (2 joins + agg) from running TWICE
+    // per iteration — once under the broadcast build, once in the main
+    // pass (r19 perf: 116 → 84 jobs, 1995 → 1180 tasks, identical
+    // weights, el01 oracle-green). w derives from the checkpointed scan
+    // + a broadcast scalar, so its lineage is already flat. The seed
+    // __raw = 1 normalizes to exactly 1/k (k ones sum exactly).
+    def normalized(raw: DataFrame): DataFrame =
+      raw.crossJoin(broadcast(raw.agg(sum(col("__raw")).as("__tot"))))
+        .select(col("item"), (col("__raw") / col("__tot")).as("wt"))
+    val seed = items.select(col("item"), lit(1.0).as("__raw"))
+    val (raw, _, _) = Flat.iterate(seed, iters) { raw =>
+      val w = normalized(raw)
       val den = dpairs
         .join(w.select(col("item").as("i"), col("wt").as("__wi")), "i")
         .join(w.select(col("item").as("j"), col("wt").as("__wj")), "j")
         .groupBy(col("i").as("item"))
         .agg(sum(col("n") / (col("__wi") + col("__wj"))).as("__den"))
-      // flat-checkpoint the UNNORMALIZED update, not w: __raw feeds
-      // both the Σ normalizer and the projection, so without the
-      // checkpoint here the whole den chain (2 joins + agg) computed
-      // TWICE per iteration — once under the broadcast build, once in
-      // the main pass (r19 perf: 116 → 84 jobs, 1995 → 1180 tasks,
-      // identical weights, el01 oracle-green).
-      // w itself then derives from the checkpointed scan + a broadcast
-      // scalar, so its lineage is already flat without a second pass.
-      val (raw, rel) = Flat.releasable(items.select(col("item"), col("wins"))
+      items.select(col("item"), col("wins"))
         .join(den, "item")
-        .select(col("item"), (col("wins") / col("__den")).as("__raw")))
-      // raw is materialized and the previous round's w derives only
-      // from the previous raw — those blocks are dead now
-      relPrev()
-      relPrev = rel
-      val tot = raw.agg(sum(col("__raw")).as("__tot"))
-      w = raw.crossJoin(broadcast(tot))
-        .select(col("item"), (col("__raw") / col("__tot")).as("wt"))
+        .select(col("item"), (col("wins") / col("__den")).as("__raw"))
     }
+    val w = normalized(raw)
     val out = items.join(w, "item")
       .select(col("item"), col("wins"), col("n_comparisons"),
         Portability.zround(col("wt"), 6).as("strength"))

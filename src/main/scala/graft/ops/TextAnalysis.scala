@@ -698,13 +698,9 @@ object TextAnalysis {
     // probe, BASELINE.md): one row per distinct token TYPE — Zipf
     // keeps it sublinear in the corpus (~10^8 types ≈ 3 GB for a web
     // corpus) vs the corpus-sized explode each consumer would re-run.
-    val counts = {
-      val c0 = df.select(explode(split(text, "\\s+")).as("tok"))
-        .filter(col("tok") =!= "")
-        .groupBy(col("tok")).agg(count(lit(1)).as("c"))
-      val cp = c0.localCheckpoint(true)
-      spark.createDataFrame(cp.rdd, cp.schema)
-    }
+    val counts = Flat.flat(df.select(explode(split(text, "\\s+")).as("tok"))
+      .filter(col("tok") =!= "")
+      .groupBy(col("tok")).agg(count(lit(1)).as("c")))
     val perC = counts.groupBy(col("c"))
       .agg(count(lit(1)).as("n_types"), (count(lit(1)) * col("c")).as("mass"))
       .withColumn("negc", -col("c"))
