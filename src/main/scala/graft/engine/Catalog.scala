@@ -1,5 +1,7 @@
 package graft.engine
 
+import com.fasterxml.jackson.annotation.JsonIgnoreProperties
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -12,22 +14,24 @@ import org.apache.spark.sql.types._
   * (DB/Sources.hs:62-188). The trigger-maintained `cached_*` columns of
   * the reference are plain computed columns here.
   *
-  * Storage: one parquet dir per source version under
-  * `<warehouse>/data/<name>_v<N>/{untyped,typed}`, plus the catalog
-  * itself as one JSON document, `<warehouse>/catalog.json` (a list of
-  * these entries), beside `acl.json`. Catalog metadata is read and
-  * committed on the driver (JsonDoc) and never runs a Spark job; data
-  * stays distributed.
+  * Storage: each source version is stored once, as text: a parquet
+  * dir `<warehouse>/data/<name>_v<N>/untyped` of `ix` long plus
+  * `c1..cN` string. Compaction writes a fresh
+  * `<warehouse>/data/<name>_compacted<K>` (the same columns plus `ixs`,
+  * the versions a row belongs to). The catalog itself is one JSON
+  * document, `<warehouse>/catalog.json` (a list of these entries),
+  * beside `acl.json`. Catalog metadata is read and committed on the
+  * driver (JsonDoc) and never runs a Spark job; data stays distributed.
   *
-  * Schema: a view's read schema is built from its entry's `colTypes`
-  * (`ColumnType.sparkType`), not inferred from Parquet footers, so
-  * building one runs no job. During `rebuildTyped`'s swap window a
-  * reader still holding the pre-commit entry therefore fails with a
-  * schema mismatch (unless the Parquet reader can widen the new type
-  * to the old one) instead of reading the new types. Immutable data
-  * directories (one per commit, ROADMAP item 4) would close that
-  * window.
+  * Data directories are never rewritten in place: a retype changes
+  * only the entry's `colTypes`, a compaction re-points the entries at
+  * its new directory, and a commit is the only pointer swap.
+  * A view reads the stored text with a schema built from its entry and
+  * casts each column to the entry's type at read time, so building
+  * one runs no job, and a frame built before a retype keeps reading
+  * the types it was built with.
   */
+@JsonIgnoreProperties(ignoreUnknown = true) // older catalogs also record a typed copy
 final case class SourceEntry(
     ix: Long,                    // global source id (sources.ix analog)
     name: String,
@@ -38,8 +42,7 @@ final case class SourceEntry(
     deprecated: Boolean,
     tags: Seq[String],
     kind: String,                // "csv" | "json"
-    untypedPath: String,
-    typedPath: String,
+    untypedPath: String,         // the version's stored all-text rows
     headers: Seq[String],        // raw headers ("" if none)
     friendlyNames: Seq[String],
     colTypes: Seq[String],       // ColumnType.displayName per column
@@ -75,24 +78,9 @@ class Catalog(val spark: SparkSession, val warehouse: String) {
     entries.find(x => x.name == name && x.version == version)
       .getOrElse(throw new NoSuchElementException(s"$name v$version"))
 
-  /** Rename-aside swap of a data directory: write `df` to `<path>_new`,
-    * move the live copy ASIDE to `<path>_old` (never deleted inside the
-    * window), move the new copy in, run `commitCatalog`, and only then
-    * drop the aside copy. A crash anywhere leaves the old data at `path`
-    * or restorable at `<path>_old`; the catalog, committed last, never
-    * points at deleted data.
-    */
-  private def swapData(path: String, df: DataFrame)(commitCatalog: => Unit): Unit = {
-    val dst = new org.apache.hadoop.fs.Path(path)
-    val tmp = new org.apache.hadoop.fs.Path(path + "_new")
-    val old = new org.apache.hadoop.fs.Path(path + "_old")
-    df.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-    val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(old)) fs.delete(old, true)
-    if (fs.exists(dst)) fs.rename(dst, old)
-    fs.rename(tmp, dst)
-    commitCatalog
-    fs.delete(old, true)
+  private def removeDir(path: String): Unit = {
+    val p = new Path(path)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
   }
 
   /** The catalog as a DataFrame (perfbench's direct routes only). */
@@ -123,17 +111,14 @@ class Catalog(val spark: SparkSession, val warehouse: String) {
 
     val version = es.filter(_.name == name).map(_.version).maxOption.getOrElse(0) + 1
     val ix = es.map(_.ix).maxOption.getOrElse(0L) + 1
-    val dir = s"$warehouse/data/${name}_v$version"
-    val untypedPath = s"$dir/untyped"
-    val typedPath = s"$dir/typed"
+    val untypedPath = s"$warehouse/data/${name}_v$version/untyped"
     ingested.untyped.write.mode(SaveMode.Overwrite).parquet(untypedPath)
-    ingested.typed.write.mode(SaveMode.Overwrite).parquet(typedPath)
     // count the still-cached parse frame, not a re-read of the file
     // just written — the write is deterministic, so the counts are
     // identical, and this drops one read job per ingest (r19 perf;
     // im22 alone pays 38 of these)
     val rowCount = ingested.untyped.count()
-    ingested.unpersist() // both materializations done; drop the parse cache
+    ingested.unpersist() // write and count done; drop the parse cache
 
     val jsonType = ingested.colTypes match {
       case Seq(ColumnType.ColJSON(Some(t))) => JsonType.render(t)
@@ -150,7 +135,6 @@ class Catalog(val spark: SparkSession, val warehouse: String) {
       tags = sourceIdent.map(id => s"SUID:$id").toSeq,
       kind = kind,
       untypedPath = untypedPath,
-      typedPath = typedPath,
       headers = ingested.headers.map(_.getOrElse("")),
       friendlyNames = ingested.friendlyNames,
       colTypes = ingested.colTypes.map(_.displayName),
@@ -168,36 +152,29 @@ class Catalog(val spark: SparkSession, val warehouse: String) {
   /** Friendly-named typed DataFrame of one version (the `<name>_vN` view). */
   def view(name: String, version: Int): DataFrame = view(entry(name, version))
 
-  /** Friendly-named typed DataFrame of one entry (no catalog read, no
-    * Spark job). Read schema: a plain version's typed copy is `ix` long
-    * plus `c<i>` of each column's `sparkType`; a compacted table is `ix`
-    * long, `c1..cn` string and `ixs` array<int>, with the casts
-    * re-applied.
+  /** The stored text of one entry, `ix` long plus `c1..cN` string:
+    * its version directory, or the compacted table's rows that list
+    * this version. The schema comes from the entry, so building the
+    * frame reads no Parquet footer and runs no job.
     */
-  def view(e: SourceEntry): DataFrame = {
-    val types = e.colTypes.map(ColumnType.fromDisplay)
-    val cols = types.indices.map(i => s"c${i + 1}")
-    val ix = StructField("ix", LongType)
-    if (e.compactedPath.nonEmpty) {
-      // the compacted table stores untyped text; re-apply this version's casts
-      val schema = StructType(ix +: cols.map(StructField(_, StringType)) :+
-        StructField("ixs", ArrayType(IntegerType)))
-      val raw = spark.read.schema(schema).parquet(e.compactedPath)
-        .filter(array_contains(col("ixs"), e.version))
-      // lenient like setColumnType's re-materialization: an overridden
-      // type with unparseable values must read as NULL here too, not
-      // throw under ANSI at view time
-      val typedCols = types.zip(cols).map { case (t, c) =>
-        Ingest.castTo(col(c), t, lenient = true).as(c)
-      }
-      raw.select(col("ix") +: typedCols: _*)
-        .toDF("ix" +: e.friendlyNames: _*)
-    } else {
-      val schema = StructType(ix +: types.zip(cols).map { case (t, c) =>
-        StructField(c, t.sparkType) })
-      spark.read.schema(schema).parquet(e.typedPath).toDF("ix" +: e.friendlyNames: _*)
-    }
+  private def text(e: SourceEntry): DataFrame = {
+    val fields = StructField("ix", LongType) +:
+      e.colTypes.indices.map(i => StructField(s"c${i + 1}", StringType))
+    if (e.compactedPath.isEmpty) spark.read.schema(StructType(fields)).parquet(e.untypedPath)
+    else spark.read.schema(StructType(fields :+ StructField("ixs", ArrayType(IntegerType))))
+      .parquet(e.compactedPath)
+      .filter(array_contains(col("ixs"), e.version))
+      .drop("ixs")
   }
+
+  /** Friendly-named typed DataFrame of one entry (no catalog read, no
+    * Spark job): the stored text cast to the entry's types. The casts
+    * are lenient, so a value an overridden type cannot parse reads as
+    * NULL instead of failing the read under ANSI.
+    */
+  def view(e: SourceEntry): DataFrame =
+    Ingest.castColumns(text(e), e.colTypes.map(ColumnType.fromDisplay), e.friendlyNames,
+      lenient = true)
 
   /** Highest version's view, deprecated or not (as sqlNames' bare alias). */
   def view(name: String): DataFrame =
@@ -279,22 +256,21 @@ class Catalog(val spark: SparkSession, val warehouse: String) {
     names.foreach(df.createOrReplaceTempView)
   }
 
-  /** Column-type override + re-type (reference DB/ColumnSpec.hs:182-189,
+  /** Column-type override (reference DB/ColumnSpec.hs:182-189,
     * Interface/API.hs:304-311): when inference guessed wrong, set the
-    * column's type explicitly and rebuild the typed materialization
-    * from the untyped (all-text) table. Values that don't parse as the
-    * new type become NULL (try_cast) rather than failing the whole
-    * re-type; overriding to TEXT always restores the raw strings.
+    * column's type explicitly. Only the entry changes; views cast the
+    * stored text to the new type, so values that don't parse as it read
+    * as NULL, and overriding to TEXT restores the raw strings.
     */
   def setColumnType(name: String, version: Int, colIx: Int, t: ColumnType): SourceEntry = {
     val e = entry(name, version)
     require(colIx >= 1 && colIx <= e.colTypes.length,
       s"no column $colIx in $name v$version (${e.colTypes.length} columns)")
-    rebuildTyped(e, e.colTypes.updated(colIx - 1, t.displayName))
+    retype(e, e.colTypes.updated(colIx - 1, t.displayName))
   }
 
-  /** Promote a source to typed by re-inferring every column from the
-    * untyped (all-text) table — the reference's SourceMakeTyped
+  /** Promote a source to typed by re-inferring every column from its
+    * stored text — the reference's SourceMakeTyped
     * (POST /source/:SourceIx, Interface/API.hs:196-200): an ingest
     * made with `--no-type-inference` is upgraded in place without
     * re-reading the original file. Only TEXT columns re-infer (a type
@@ -305,28 +281,16 @@ class Catalog(val spark: SparkSession, val warehouse: String) {
     */
   def makeTyped(name: String, version: Int): SourceEntry = {
     val e = entry(name, version)
-    val untyped = spark.read.parquet(e.untypedPath)
-    val dataCols = e.colTypes.indices.map(i => col(s"c${i + 1}"))
-    val inferred = Infer.inferColumns(untyped.select(dataCols: _*))
-    val newTypes = e.colTypes.zip(inferred).map { case (oldT, newT) =>
+    val inferred = Infer.inferColumns(text(e).drop("ix"))
+    retype(e, e.colTypes.zip(inferred).map { case (oldT, newT) =>
       if (oldT == ColumnType.ColText.displayName) newT.displayName else oldT
-    }
-    rebuildTyped(e, newTypes)
+    })
   }
 
-  private def rebuildTyped(e: SourceEntry, newTypes: Seq[String]): SourceEntry = {
-    val untyped = spark.read.parquet(e.untypedPath)
-    val cols = newTypes.zipWithIndex.map { case (tn, i) =>
-      Ingest.castTo(col(s"c${i + 1}"), ColumnType.fromDisplay(tn), lenient = true)
-        .as(s"c${i + 1}")
-    }
-    // never overwrite typed in place; the catalog keeps the old
-    // colTypes until the new copy is in
+  private def retype(e: SourceEntry, newTypes: Seq[String]): SourceEntry = {
     val updated = e.copy(colTypes = newTypes)
-    swapData(e.typedPath, untyped.select(col("ix") +: cols: _*)) {
-      commit(entries.map(x =>
-        if (x.name == e.name && x.version == e.version) updated else x))
-    }
+    commit(entries.map(x =>
+      if (x.name == e.name && x.version == e.version) updated else x))
     updated
   }
 
@@ -354,7 +318,8 @@ class Catalog(val spark: SparkSession, val warehouse: String) {
         e.copy(tags = e.tags.filterNot(_ == t)) else e))
 
   /** Delete one version or a whole source (I18); re-ingest after delete
-    * restores identical state (runtests.sh:121-158).
+    * restores identical state (runtests.sh:121-158). A compacted table
+    * goes once no surviving entry reads it.
     */
   def delete(name: String, version: Option[Int] = None): Unit = {
     val (dead, alive) = entries.partition(e =>
@@ -363,11 +328,9 @@ class Catalog(val spark: SparkSession, val warehouse: String) {
     // orphaned (harmless, re-collectable) data, never a catalog
     // pointing at deleted paths
     commit(alive)
-    dead.foreach { e =>
-      val p = new org.apache.hadoop.fs.Path(s"$warehouse/data/${e.name}_v${e.version}")
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(p)) fs.delete(p, true)
-    }
+    val read = alive.map(_.compactedPath).toSet
+    dead.foreach(e => removeDir(s"$warehouse/data/${e.name}_v${e.version}"))
+    dead.map(_.compactedPath).distinct.filter(p => p.nonEmpty && !read(p)).foreach(removeDir)
   }
 
   /** Compaction (I11; Ingest.hs:342-428): merge all versions of `name`
@@ -384,11 +347,10 @@ class Catalog(val spark: SparkSession, val warehouse: String) {
     val width = vs.map(_.colTypes.length).max
 
     val unioned = vs.map { e =>
-      val df = spark.read.parquet(e.untypedPath)
       val padded = (1 to width).map { i =>
-        if (df.columns.contains(s"c$i")) col(s"c$i") else lit(null).cast("string").as(s"c$i")
+        if (i <= e.colTypes.length) col(s"c$i") else lit(null).cast("string").as(s"c$i")
       }
-      df.select(col("ix").as("orig_ix") +: padded :+ lit(e.version).as("srcver"): _*)
+      text(e).select(col("ix").as("orig_ix") +: padded :+ lit(e.version).as("srcver"): _*)
     }.reduce(_ unionByName _)
 
     // merge key = (original position, content): rows identical in BOTH
@@ -407,11 +369,15 @@ class Catalog(val spark: SparkSession, val warehouse: String) {
       .agg(sort_array(collect_set(col("srcver"))).as("ixs"))
       .select(col("orig_ix").as("ix") +: dataCols :+ col("ixs"): _*)
 
-    // committed entries may already point at an older compacted copy
-    val compactedPath = s"$warehouse/data/${name}_compacted"
-    swapData(compactedPath, merged) {
-      commit(entries.map(e =>
-        if (e.name == name) e.copy(compactedPath = compactedPath) else e))
-    }
+    // a fresh directory (numbered past every one this source's entries
+    // name); an older compacted copy goes only after the commit
+    // re-points every version away from it
+    val prefix = s"$warehouse/data/${name}_compacted"
+    val k = vs.flatMap(_.compactedPath.stripPrefix(prefix).toIntOption).maxOption.getOrElse(0) + 1
+    val compactedPath = s"$prefix$k"
+    merged.write.mode(SaveMode.Overwrite).parquet(compactedPath)
+    commit(entries.map(e =>
+      if (e.name == name) e.copy(compactedPath = compactedPath) else e))
+    vs.map(_.compactedPath).distinct.filter(_.nonEmpty).foreach(removeDir)
   }
 }

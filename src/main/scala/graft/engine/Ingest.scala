@@ -6,8 +6,9 @@ import org.apache.spark.sql.types._
 
 /** Ingest pipelines (SURVEY.md §2.A, I1–I9):
   * CSV/TSV/JSON file → untyped DataFrame (all-string c1..cN + ix row
-  * number from 1 in file order) → inferred schema → typed DataFrame →
-  * friendly-named view.
+  * number from 1 in file order) → inferred schema. The catalog stores
+  * only the untyped text; a typed view casts it per column
+  * (`castColumns`) at read time.
   *
   * Reference: src/backend/src/Lagoon/Ingest.hs:82-129 (dispatch),
   * 179-200 (tabular pipeline), 231-255 (JSON pipeline);
@@ -45,40 +46,49 @@ object Ingest {
       */
     def unpersist(): Unit = cached.foreach(_.unpersist(blocking = false))
 
-    /** Typed projection (I9, DB/Typed.hs:74-105): per-column CAST of the
-      * untyped strings; bool accepts the full lagoon literal set.
+    /** Typed projection (I9, DB/Typed.hs:74-105): per-column strict CAST
+      * of the untyped strings; bool accepts the full lagoon literal set.
       */
-    def typed: DataFrame = {
-      val cols = colTypes.zipWithIndex.map { case (t, i) =>
-        val c = col(s"c${i + 1}")
-        Ingest.castTo(c, t).as(s"c${i + 1}")
-      }
-      untyped.select(col("ix") +: cols: _*)
-    }
+    def typed: DataFrame =
+      castColumns(untyped, colTypes, colTypes.indices.map(i => s"c${i + 1}"), lenient = false)
 
     /** Friendly-named view of the typed data (I12, DB/ColumnSpec.hs:102-113). */
-    def view: DataFrame =
-      typed.toDF("ix" +: friendlyNames: _*)
+    def view: DataFrame = castColumns(untyped, colTypes, friendlyNames, lenient = false)
   }
 
+  /** `ix` plus each text column `c<i>` of `text`, cast to `types(i - 1)`
+    * by `castTo` and named `names(i - 1)`.
+    */
+  def castColumns(text: DataFrame, types: Seq[ColumnType], names: Seq[String],
+                  lenient: Boolean): DataFrame =
+    text.select(col("ix") +: types.zip(names).zipWithIndex.map { case ((t, n), i) =>
+      castTo(col(s"c${i + 1}"), t, lenient).as(n)
+    }: _*)
+
+  // the lexer's bool literals (InferFieldType.x:28-36), matched
+  // lowercase; one map lookup keeps the cast small to analyze, which
+  // every catalog view does on each query
+  private val boolLiterals = typedLit(
+    Seq("t", "true", "y", "yes", "on", "1").map(_ -> true).toMap ++
+      Seq("f", "false", "n", "no", "off", "0").map(_ -> false))
+
   /** CAST one untyped string column to its inferred type. Bool uses the
-    * lexer's literal set (InferFieldType.x:28-36); numeric casts trim
-    * whitespace like the untyped→typed INSERT..SELECT CAST does.
-    * `lenient` uses try_cast (null on parse failure) — for user type
-    * OVERRIDES, where the values are not inference-approved and an
-    * ANSI cast would fail the whole re-type on one bad row. The result
-    * has type `t.sparkType`.
+    * lexer's literal set (InferFieldType.x:28-36); Spark's numeric
+    * casts already skip the surrounding whitespace the lexer skips.
+    * `lenient` uses try_cast (null on parse failure) — for catalog
+    * views, whose types may be user OVERRIDES the values were never
+    * inferred for, where an ANSI cast would fail the whole read on one
+    * bad row. On a value the lexer typed as `t`, both modes agree
+    * (EngineProps). The result has type `t.sparkType`.
     */
   def castTo(c: org.apache.spark.sql.Column, t: ColumnType,
              lenient: Boolean = false): org.apache.spark.sql.Column =
     t match {
       case ColumnType.ColBool =>
-        val v = lower(trim(c))
-        when(v.isin("t", "true", "y", "yes", "on", "1"), lit(true))
-          .when(v.isin("f", "false", "n", "no", "off", "0"), lit(false))
-          .otherwise(lit(null).cast(BooleanType))
+        // the lexer's whitespace set (Infer.isWhite); `trim(c)` strips spaces only
+        try_element_at(boolLiterals, lower(trim(c, " \t\n\u000B\f\r")))
       case ColumnType.ColInt(_) | ColumnType.ColReal | ColumnType.ColForeign(_, _) =>
-        if (lenient) trim(c).try_cast(t.sparkType) else trim(c).cast(t.sparkType)
+        if (lenient) c.try_cast(t.sparkType) else c.cast(t.sparkType)
       case _ => c // Text / Document / int[] / JSON stay raw
     }
 

@@ -4,7 +4,10 @@ import java.net.URLDecoder
 import java.nio.charset.StandardCharsets.UTF_8
 import java.util.concurrent.{ConcurrentHashMap, ExecutorService, Executors, TimeUnit}
 import java.util.concurrent.atomic.{AtomicInteger, AtomicReference}
+import scala.jdk.CollectionConverters._
 
+import com.fasterxml.jackson.core.JsonProcessingException
+import com.fasterxml.jackson.databind.JsonNode
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 
 import graft.engine._
@@ -201,6 +204,11 @@ class HttpApi(val cat: Catalog, defaultPublic: Boolean = true,
   private def body(ex: HttpExchange): String =
     new String(ex.getRequestBody.readAllBytes(), UTF_8)
 
+  /** A request body parsed as JSON, or None when it is not JSON. */
+  private def json(b: String): Option[JsonNode] =
+    try Option(JsonDoc.mapper.readTree(b)).filterNot(_.isMissingNode)
+    catch { case _: JsonProcessingException => None }
+
   private def send(ex: HttpExchange, code: Int, content: String,
                    cType: String = "application/json",
                    headers: Map[String, String] = Map.empty): Unit = {
@@ -299,11 +307,9 @@ class HttpApi(val cat: Catalog, defaultPublic: Boolean = true,
     (method, segs) match {
       // ---- sessions & principals ----
       case ("POST", Seq("user", "login")) =>
-        val b = body(ex)
+        val b = json(body(ex))
         def fromBody(k: String): Option[String] =
-          ("\"" + k + "\"\\s*:\\s*\"((?:[^\"\\\\]|\\\\.)*)\"").r
-            .findFirstMatchIn(b).map(_.group(1)
-              .replace("\\\"", "\"").replace("\\\\", "\\"))
+          b.flatMap(n => Option(n.get(k))).filter(_.isTextual).map(_.asText)
         val u = p1("user").orElse(fromBody("user"))
           .getOrElse(throw new IllegalArgumentException("user required"))
         val pass = p1("pass").orElse(fromBody("pass")).getOrElse("")
@@ -332,10 +338,10 @@ class HttpApi(val cat: Catalog, defaultPublic: Boolean = true,
       // UserResumeSession (Interface/API.hs:351): exchange an auth
       // token for a fresh session token
       case ("POST", Seq("user", "resume")) =>
+        // {"token": ...}, a JSON string, or the bare token
         val b = body(ex)
-        val tok = "\"token\"\\s*:\\s*\"([^\"]+)\"".r.findFirstMatchIn(b)
-          .map(_.group(1))
-          .getOrElse(b.trim.stripPrefix("\"").stripSuffix("\""))
+        val tok = json(b).map(n => Option(n.get("token")).getOrElse(n))
+          .filter(_.isTextual).map(_.asText).getOrElse(b.trim)
         val u = Option(authTokens.get(tok))
           .getOrElse(throw Unauthorized("unknown auth token"))
         val token = java.util.UUID.randomUUID().toString
@@ -529,9 +535,11 @@ class HttpApi(val cat: Catalog, defaultPublic: Boolean = true,
       }
       case ("POST", Seq("source", n, v, "tags")) => lock.synchronized {
         requireLevel(Some(user), n, Acl.LevelUpdate)
-        // body: JSON array of tag names (minimal parse: quoted strings)
-        val tags = "\"((?:[^\"\\\\]|\\\\.)*)\"".r.findAllMatchIn(body(ex))
-          .map(_.group(1).replace("\\\"", "\"").replace("\\\\", "\\")).toSeq
+        // body: a JSON array of tag names, or one JSON string
+        val tags = json(body(ex)).toSeq
+          .flatMap(n => if (n.isArray) n.elements.asScala.toSeq else Seq(n))
+          .map(t => if (t.isTextual) t.asText
+                    else throw new IllegalArgumentException(s"tag is not a string: $t"))
         require(tags.nonEmpty, "no tags in body")
         tags.foreach(cat.tag(n, v.toInt, _))
         send(ex, 204, "")
@@ -580,10 +588,9 @@ class HttpApi(val cat: Catalog, defaultPublic: Boolean = true,
         val st = acl.get
         val df = SqlGate.run(cat, body(ex), ds => st.canRead(userOpt, ds))
         val accept = Option(ex.getRequestHeaders.getFirst("Accept")).getOrElse("")
-        if (accept.contains("application/json")) {
-          import scala.jdk.CollectionConverters._
+        if (accept.contains("application/json"))
           stream(ex, df.toJSON.toLocalIterator().asScala, "application/json")
-        } else stream(ex, Export.csvLines(df), "text/csv")
+        else stream(ex, Export.csvLines(df), "text/csv")
 
       // ---- diagnostics ----
       case ("GET", Seq("dbinfo")) | ("GET", Seq("debug", "dumpDbInfo")) =>

@@ -198,45 +198,43 @@ class CatalogSpec extends AnyFunSuite {
     // r19 switched the recorded rowCount from a file re-read to the
     // still-cached parse frame (one read job saved per ingest); this
     // spec keeps the persisted-file integrity check alive somewhere: a
-    // silently truncated/partial untyped or typed write would diverge
-    // from the cached count here.
+    // silently truncated/partial write would diverge from the cached
+    // count here.
     val cat = freshCatalog()
     val e = cat.ingest("rb", Ingest.csv(spark, res("typeinfer.csv")), "csv")
     assert(spark.read.parquet(e.untypedPath).count() == e.rowCount,
       "untyped parquet on disk diverges from the cached ingest count")
-    assert(spark.read.parquet(e.typedPath).count() == e.rowCount,
-      "typed parquet on disk diverges from the cached ingest count")
   }
 
-  /** The reference read for `view`: the same renames and casts over a
-    * footer-inferred `spark.read.parquet`.
+  /** A compacted version's reference read: the same renames and casts
+    * over a footer-inferred `spark.read.parquet` of the compacted table.
     */
   private def footerView(e: SourceEntry): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.functions.{array_contains, col}
-    if (e.compactedPath.nonEmpty) {
-      val typedCols = e.colTypes.zipWithIndex.map { case (t, i) =>
-        Ingest.castTo(col(s"c${i + 1}"), ColumnType.fromDisplay(t), lenient = true)
-          .as(s"c${i + 1}")
-      }
-      spark.read.parquet(e.compactedPath)
-        .filter(array_contains(col("ixs"), e.version))
-        .select(col("ix") +: typedCols: _*)
-        .toDF("ix" +: e.friendlyNames: _*)
-    } else spark.read.parquet(e.typedPath).toDF("ix" +: e.friendlyNames: _*)
+    val typedCols = e.colTypes.zipWithIndex.map { case (t, i) =>
+      Ingest.castTo(col(s"c${i + 1}"), ColumnType.fromDisplay(t), lenient = true)
+        .as(s"c${i + 1}")
+    }
+    spark.read.parquet(e.compactedPath)
+      .filter(array_contains(col("ixs"), e.version))
+      .select(col("ix") +: typedCols: _*)
+      .toDF("ix" +: e.friendlyNames: _*)
   }
 
-  /** `cat.view(e)` equals the footer read, and neither it nor a
-    * download's frame (`view(name, version)`) runs a Spark job.
+  /** `cat.view(e)` has `ref`'s column names, data types and rows, and
+    * neither it nor a download's frame (`view(name, version)`) runs a
+    * Spark job.
     */
-  private def assertViewFromEntry(cat: Catalog, e: SourceEntry): Unit = {
+  private def assertViewFromEntry(cat: Catalog, e: SourceEntry,
+                                  ref: org.apache.spark.sql.DataFrame): Unit = {
     val label = s"${e.name} v${e.version}"
     val jobs = TestSpark.jobsOf("view")(cat.view(e))
     assert(jobs.isEmpty, s"$label: view ran jobs $jobs")
     val download = TestSpark.jobsOf("download")(cat.view(e.name, e.version))
     assert(download.isEmpty, s"$label: download frame ran jobs $download")
     val v = cat.view(e)
-    val ref = footerView(e)
-    assert(v.schema == ref.schema, label)
+    def types(df: org.apache.spark.sql.DataFrame) = df.schema.map(f => (f.name, f.dataType))
+    assert(types(v) == types(ref), label)
     assert(v.orderBy("ix").collect().toSeq == ref.orderBy("ix").collect().toSeq, label)
   }
 
@@ -246,30 +244,43 @@ class CatalogSpec extends AnyFunSuite {
     p.toString
   }
 
-  test("view reads its schema from the entry: footer-read schema and rows, 0 jobs") {
+  test("view reads its schema from the entry: the strict ingest's types and rows, 0 jobs") {
     val cat = freshCatalog()
+    // each plain entry against the strict typed projection of its own
+    // ingest (`Ingested.view`), re-typed to the entry's types
+    val plain = Seq.newBuilder[(SourceEntry, Ingest.Ingested)]
+    def ingest(name: String, ing: Ingest.Ingested, kind: String = "csv"): SourceEntry = {
+      val e = cat.ingest(name, ing, kind)
+      plain += e -> ing
+      e
+    }
     // every inferred type, plus a ragged header-less column
     val doc = "d" * (ColumnType.MaxTextLen + 1)
-    val every = cat.ingest("every", Ingest.csv(spark, csvFile(
-      s"b,i,l,r,t,d\nt,2,12345678901,1.5,hello,$doc\nf,-7,42,2e3,world,short,x\n")), "csv")
+    val every = ingest("every", Ingest.csv(spark, csvFile(
+      s"b,i,l,r,t,d\nt,2,12345678901,1.5,hello,$doc\nf,-7,42,2e3,world,short,x\n")))
     assert(every.colTypes.toSet == Set("BOOLEAN", "INTEGER", "BIGINT",
       "DOUBLE PRECISION", "TEXT", "DOCUMENT"), every.colTypes)
     val js = Files.createTempFile("graft-view", ".json")
     Files.writeString(js, """{"a":1} {"a":2,"b":"x"}""")
-    val json = cat.ingest("js", Ingest.json(spark, js.toString), "json")
-    val meta = cat.ingest("meta", Ingest.csv(spark, res("projects_md.csv")), "csv")
+    ingest("js", Ingest.json(spark, js.toString), "json")
+    val meta = ingest("meta", Ingest.csv(spark, res("projects_md.csv")))
     val metaView = cat.view(meta)
-    val extra = cat.ingest("extra", Ingest.extraData(spark, res("projects_data.csv"),
-      metaView, metaView.columns(1)), "csv")
+    val extra = ingest("extra", Ingest.extraData(spark, res("projects_data.csv"),
+      metaView, metaView.columns(1)))
     assert(extra.colTypes.head == "FOREIGN meta(ix)")
-    cat.ingest("retyped", Ingest.csv(spark, res("typeinfer.csv")), "csv")
+    ingest("retyped", Ingest.csv(spark, res("typeinfer.csv")))
+    ingest("promoted", Ingest.csv(spark, res("typeinfer.csv"),
+      Ingest.CsvOptions(typeInference = false)))
     cat.setColumnType("retyped", 1, 2, ColumnType.ColText)
     val retyped = cat.setColumnType("retyped", 1, 3, ColumnType.ColArr)
     assert(retyped.colTypes.slice(1, 3) == Seq("TEXT", "int[]"))
-    cat.ingest("promoted", Ingest.csv(spark, res("typeinfer.csv"),
-      Ingest.CsvOptions(typeInference = false)), "csv")
     val promoted = cat.makeTyped("promoted", 1)
-    for (e <- Seq(every, json, meta, extra, retyped, promoted)) assertViewFromEntry(cat, e)
+    assert(promoted.colTypes.contains("BOOLEAN"), promoted.colTypes)
+    for ((e0, ing) <- plain.result()) {
+      val e = cat.entry(e0.name, e0.version)
+      assertViewFromEntry(cat, e,
+        ing.copy(colTypes = e.colTypes.map(ColumnType.fromDisplay)).view)
+    }
 
     // compacted versions of different widths, one of them retyped
     cat.ingest("w", Ingest.csv(spark, csvFile("a,b\n1,x\n2,y\n")), "csv")
@@ -280,6 +291,41 @@ class CatalogSpec extends AnyFunSuite {
     val compacted = cat.entries.filter(e => Set("w", "every")(e.name))
     assert(compacted.size == 3 && compacted.forall(_.compactedPath.nonEmpty))
     assert(compacted.map(_.colTypes.length).toSet == Set(2, 3, 7))
-    compacted.foreach(assertViewFromEntry(cat, _))
+    compacted.foreach(e => assertViewFromEntry(cat, e, footerView(e)))
+  }
+
+  test("delete removes a compacted table once no surviving version reads it") {
+    val cat = freshCatalog()
+    val data = new java.io.File(cat.warehouse, "data")
+    def dirs = data.list().toSeq.filter(_.startsWith("t_")).sorted
+    def download(v: Int) = Export.csvString(cat.view("t", v).orderBy("ix"))
+    cat.ingest("t", Ingest.csv(spark, csvFile("a,b\n1,x\n2,y\n")), "csv")
+    cat.ingest("t", Ingest.csv(spark, csvFile("a,b\n1,x\n3,z\n")), "csv")
+    cat.ingest("t", Ingest.csv(spark, csvFile("a,b,c\n1,x,p\n")), "csv")
+    cat.compact("t")
+    assert(dirs == Seq("t_compacted1", "t_v1", "t_v2", "t_v3"))
+    // a second compaction writes a fresh directory and drops the first
+    cat.compact("t")
+    assert(dirs == Seq("t_compacted2", "t_v1", "t_v2", "t_v3"))
+    val before = Seq(1, 3).map(download)
+    cat.delete("t", Some(2))
+    assert(dirs == Seq("t_compacted2", "t_v1", "t_v3"))
+    assert(Seq(1, 3).map(download) == before)
+    cat.delete("t")
+    assert(cat.entries.isEmpty)
+    assert(dirs.isEmpty, dirs)
+  }
+
+  test("a catalog document that still lists typedPath reads") {
+    val cat = freshCatalog()
+    cat.ingest("t", Ingest.csv(spark, res("typeinfer.csv")), "csv")
+    val path = s"${cat.warehouse}/catalog.json"
+    def doc = JsonDoc.read(spark, path)(JsonDoc.mapper.readTree).get
+    val old = doc
+    old.get(0).asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+      .put("typedPath", "gone")
+    JsonDoc.write(spark, path, old)
+    assert(doc.get(0).has("typedPath"))
+    assert(cat.view("t", 1).count() == 4)
   }
 }

@@ -3,9 +3,10 @@ package graft.engine
 import org.scalacheck.{Gen, Properties}
 import org.scalacheck.Prop.{forAll, propBoolean}
 
-/** Property-based invariants for the pure engine kernels (no Spark
-  * session): CSV parse/render inversion, TsQuery parser totality,
-  * JsonType lattice laws, name-dedup laws.
+/** Property-based invariants for the engine kernels: CSV parse/render
+  * inversion, TsQuery parser totality, JsonType lattice laws,
+  * name-dedup laws, and (the one property that needs a Spark session)
+  * agreement of the strict and lenient ingest casts.
   */
 object EngineProps extends Properties("engine") {
 
@@ -37,7 +38,7 @@ object EngineProps extends Properties("engine") {
   // ---------------- TsQuery ----------------
 
   private val probe = SourceEntry(1L, "sales_q1", 1, "2024-01-01T00:00:00Z", "alice",
-    "quarterly sales", false, Seq("finance"), "csv", "", "", Seq("region"), Seq("region"),
+    "quarterly sales", false, Seq("finance"), "csv", "", Seq("region"), Seq("region"),
     Seq("TEXT"), "", 0L, "", "sales_q1_v1")
 
   property("tsquery parser is total (error recovery, never throws)") =
@@ -129,6 +130,21 @@ object EngineProps extends Properties("engine") {
         if (len <= 9) InferredType.InfInt(IntWidth.I4)
         else if (len <= 18) InferredType.InfInt(IntWidth.I8)
         else InferredType.InfText)
+    }
+
+  // the catalog stores text and casts leniently at read time, so the
+  // strict cast must never fail or differ where the lexer typed a value
+  property("castTo: strict and lenient agree, non-null, on every lexer-typed field") =
+    forAll(Gen.oneOf(fieldVal.filter(_ != null), numericish), Gen.oneOf("", " ", "\t")) {
+      (f0, ws) =>
+        val f = ws + f0 + ws
+        val t = Infer.fieldColumnType(f)
+        val spark = graft.TestSpark.spark
+        import spark.implicits._
+        import org.apache.spark.sql.functions.col
+        val r = Seq(f).toDF("c")
+          .select(Ingest.castTo(col("c"), t), Ingest.castTo(col("c"), t, lenient = true)).head()
+        (r.get(0) != null && r.get(0) == r.get(1)) :| s"'$f' as $t: ${r.get(0)} vs ${r.get(1)}"
     }
 
   property("column join is commutative") = forAll(fieldVal, fieldVal) { (f, g) =>

@@ -31,7 +31,7 @@ class SearchSpec extends AnyFunSuite {
                     tags: Seq[String], friendlyNames: Seq[String], deprecated: Boolean,
                     created: String): SourceEntry =
     SourceEntry(ix, name, 1, created, addedBy, description, deprecated, tags, "csv",
-      "", "", friendlyNames, friendlyNames, friendlyNames.map(_ => "TEXT"), "", 0L, "",
+      "", friendlyNames, friendlyNames, friendlyNames.map(_ => "TEXT"), "", 0L, "",
       s"${name}_v1")
 
   private val catalog = Seq(

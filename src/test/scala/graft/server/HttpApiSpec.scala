@@ -333,12 +333,42 @@ class HttpApiSpec extends AnyFunSuite {
     for (n <- Seq("gone_a", "gone_b"))
       assert(req("POST", s"/sources?name=$n.csv", "x,y\n2,3\n", asRoot).statusCode == 201)
     def rm(f: java.io.File): Unit = { Option(f.listFiles).foreach(_.foreach(rm)); f.delete() }
-    val typed = new java.io.File(api.cat.entry("gone_b.csv", 1).typedPath)
-    rm(typed)
-    assert(!typed.exists)
+    val data = new java.io.File(api.cat.entry("gone_b.csv", 1).untypedPath).getParentFile
+    rm(data)
+    assert(!data.exists)
     val r = req("POST", "/sql", "SELECT x, y FROM gone_a_csv", asRoot)
     assert(r.statusCode == 200, r.body)
     assert(r.body.contains("2,3"), r.body)
+  }
+
+  test("JSON request bodies decode their escapes: login, tags, resume") {
+    // passwords "pé" and "a/b", sent JSON-escaped
+    assert(req("POST", "/users?name=jesc&pass=p%C3%A9", headers = asRoot).statusCode == 204)
+    assert(req("POST", "/users?name=jslash&pass=a%2Fb", headers = asRoot).statusCode == 204)
+    assert(req("POST", "/user/login", "{\"user\":\"jesc\",\"pass\":\"p\\u00e9\"}")
+      .statusCode == 200)
+    assert(req("POST", "/user/login", "{\"user\":\"jslash\",\"pass\":\"a\\/b\"}")
+      .statusCode == 200)
+    assert(req("POST", "/user/login", "{\"user\":\"jslash\",\"pass\":\"a/c\"}")
+      .statusCode == 401)
+
+    // tags are stored decoded; a body that is not a JSON array of
+    // strings is a client error
+    assert(req("POST", "/sources?name=escapes.csv", "k,v\na,2\n", asRoot).statusCode == 201)
+    assert(req("POST", "/source/escapes.csv/1/tags", "[\"caf\\u00e9\",\"a\\/b\"]", asRoot)
+      .statusCode == 204)
+    assert(api.cat.entry("escapes.csv", 1).tags == Seq("caf\u00e9", "a/b"))
+    for (bad <- Seq("[\"x\"", "not json", "[1]", "[]"))
+      assert(req("POST", "/source/escapes.csv/1/tags", bad, asRoot).statusCode == 400, bad)
+    assert(api.cat.entry("escapes.csv", 1).tags == Seq("caf\u00e9", "a/b"))
+
+    // resume: an escaped token decodes; a bare token still resumes
+    val at = req("POST", "/user/token", headers = asRoot)
+    val auth = "\"token\":\"([^\"]+)\"".r.findFirstMatchIn(at.body).get.group(1)
+    val escaped = auth.replace("-", "\\u002d")
+    assert(req("POST", "/user/resume", "{\"token\":\"" + escaped + "\"}").statusCode == 200)
+    assert(req("POST", "/user/resume", auth).statusCode == 200)
+    req("DELETE", "/source/escapes.csv", headers = asRoot)
   }
 
   test("back-to-back keep-alive GETs answer without a delayed-ACK stall") {
