@@ -244,7 +244,7 @@ class CatalogSpec extends AnyFunSuite {
     p.toString
   }
 
-  test("view reads its schema from the entry: the strict ingest's types and rows, 0 jobs") {
+  test("view of a plain entry: the strict ingest's types and rows, 0 jobs") {
     val cat = freshCatalog()
     // each plain entry against the strict typed projection of its own
     // ingest (`Ingested.view`), re-typed to the entry's types
@@ -281,8 +281,15 @@ class CatalogSpec extends AnyFunSuite {
       assertViewFromEntry(cat, e,
         ing.copy(colTypes = e.colTypes.map(ColumnType.fromDisplay)).view)
     }
+  }
 
-    // compacted versions of different widths, one of them retyped
+  test("view reads its schema from the entry: footer-read schema and rows, 0 jobs") {
+    val cat = freshCatalog()
+    // compacted versions of different widths, one of them retyped, and
+    // one version holding every inferred type plus a ragged column
+    val doc = "d" * (ColumnType.MaxTextLen + 1)
+    cat.ingest("every", Ingest.csv(spark, csvFile(
+      s"b,i,l,r,t,d\nt,2,12345678901,1.5,hello,$doc\nf,-7,42,2e3,world,short,x\n")), "csv")
     cat.ingest("w", Ingest.csv(spark, csvFile("a,b\n1,x\n2,y\n")), "csv")
     cat.ingest("w", Ingest.csv(spark, csvFile("a,b,c\n1,x,true\n3,z,false\n")), "csv")
     cat.setColumnType("w", 2, 1, ColumnType.ColArr)
