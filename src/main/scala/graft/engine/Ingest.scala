@@ -48,6 +48,8 @@ object Ingest {
 
     /** Typed projection (I9, DB/Typed.hs:74-105): per-column strict CAST
       * of the untyped strings; bool accepts the full lagoon literal set.
+      * Nothing is stored from it (the catalog keeps the text only); it
+      * is the strict reference IngestSpec checks inference against.
       */
     def typed: DataFrame =
       castColumns(untyped, colTypes, colTypes.indices.map(i => s"c${i + 1}"), lenient = false)
