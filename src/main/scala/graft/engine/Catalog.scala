@@ -51,12 +51,12 @@ final case class SourceEntry(
     compactedPath: String,       // "" unless this version lives in a compacted table
     /** SQL-registrable view name, sanitized like the reference's
       * `_001_simple_csv_v1` views (SensibleNames; a raw `people.csv_v1`
-      * is not a valid temp-view identifier). ALLOCATED at ingest with a
+      * is not a valid SQL identifier). ALLOCATED at ingest with a
       * uniqueness check against every existing entry (the reference's
       * mkUniqueView, DB/Sources.hs:150-160) and STORED: sanitation is
       * lossy ('a.b' and 'a_b' both sanitize to a_b_v1), so a derived
-      * name would silently last-wins-overwrite the temp view and let
-      * the /sql ACL attribute a table to the wrong source.
+      * name would let two sources share one SQL name, last one wins,
+      * and the /sql ACL attribute a table to the wrong source.
       */
     viewName: String)
 
@@ -211,7 +211,7 @@ class Catalog(val spark: SparkSession, val warehouse: String) {
   /** mkUniqueView analog (DB/Sources.hs:150-160): preferred name =
     * sanitize(name + "_vN"); on collision with ANY existing entry's
     * view name, insert a counter before the version suffix. The check
-    * is case-insensitive because Spark's temp-view resolver is.
+    * is case-insensitive, as SqlGate's lowercased name lookup is.
     */
   private def allocViewName(es: Seq[SourceEntry], name: String, version: Int): String = {
     val taken = es.map(_.viewName.toLowerCase).toSet

@@ -46,15 +46,10 @@ object Ingest {
       */
     def unpersist(): Unit = cached.foreach(_.unpersist(blocking = false))
 
-    /** Typed projection (I9, DB/Typed.hs:74-105): per-column strict CAST
-      * of the untyped strings; bool accepts the full lagoon literal set.
-      * Nothing is stored from it (the catalog keeps the text only); it
-      * is the strict reference IngestSpec checks inference against.
+    /** Friendly-named typed view (I9 + I12, DB/Typed.hs:74-105,
+      * DB/ColumnSpec.hs:102-113): per-column strict CAST of the untyped
+      * strings; bool accepts the full lagoon literal set.
       */
-    def typed: DataFrame =
-      castColumns(untyped, colTypes, colTypes.indices.map(i => s"c${i + 1}"), lenient = false)
-
-    /** Friendly-named view of the typed data (I12, DB/ColumnSpec.hs:102-113). */
     def view: DataFrame = castColumns(untyped, colTypes, friendlyNames, lenient = false)
   }
 

@@ -83,8 +83,8 @@ import graft.engine._
   * admin is `root` with the constructor's `adminPass` ("" by default,
   * matching the reference test rig's dummy-auth empty password).
   *
-  * /sql is one SqlGate.run call, which builds views only for the
-  * tables the query reads, after authorizing it.
+  * /sql is one SqlGate.run call: it authorizes the parsed query, then
+  * binds the views of the tables it reads into that plan (no temp view).
   *
   * Scale notes: /sql and /download stream the response line by line
   * (toLocalIterator — one partition in driver memory at a time, the

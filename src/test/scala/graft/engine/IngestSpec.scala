@@ -20,7 +20,7 @@ class IngestSpec extends AnyFunSuite {
     val rows = ing.untyped.orderBy("ix").collect()
     assert(rows.map(_.getLong(0)).toSeq == Seq(1L, 2L, 3L, 4L)) // ix from 1, file order
     assert(rows(0).getString(1) == "0")
-    val typed = ing.typed.orderBy("ix").collect()
+    val typed = ing.view.orderBy("ix").collect()
     assert(typed(0).getBoolean(1) == false && typed(1).getBoolean(1) == true)
     assert(typed(0).getInt(2) == 2)
     assert(typed(0).getLong(3) == 1234567890L)
@@ -204,7 +204,7 @@ class IngestSpec extends AnyFunSuite {
     val before = localBytesRead
     val ing = Ingest.csv(spark, f.toString)
     ing.view.count()  // caller materialization
-    ing.typed.count() // second consumer still hits the cache
+    ing.view.count()  // second consumer still hits the cache
     val read = localBytesRead - before
     ing.unpersist()
     java.nio.file.Files.delete(f)
@@ -227,7 +227,7 @@ class IngestSpec extends AnyFunSuite {
           .getBytes("UTF-8"))
       try TestSpark.run(s"ingest-$rows") {
         val ing = Ingest.csv(spark, f.toString)
-        ing.typed.write.parquet(out.toString)
+        ing.view.write.parquet(out.toString)
         ing.unpersist()
       } finally {
         java.nio.file.Files.delete(f)

@@ -1,6 +1,8 @@
 package graft.engine
 
 import java.nio.file.Files
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
 
@@ -197,10 +199,51 @@ class SqlGateSpec extends AnyFunSuite {
       c.spark.catalog.listTables().collect().filter(_.isTemporary).map(t =>
         t.name -> c.spark.table(t.name).queryExecution.optimizedPlan).toMap
     }
-    assert(tempViews(SqlGate.run(_, "SELECT k FROM pub", notPriv)).keySet == Set("pub"))
+    // run binds its one frame into the query's plan and registers no temp view
+    assert(tempViews(SqlGate.run(_, "SELECT k FROM pub", notPriv)).isEmpty,
+      "run registers no temp view")
+    assert(relationRoots(SqlGate.run(cat, "SELECT k FROM pub", notPriv)).size == 1)
     val registered = tempViews(_.registerViews())
     assert(registered.keySet == cat.sqlNames.keySet.map(_.toLowerCase))
     assert(registered.values.toSet.size == cat.entries.size, registered.keySet)
+  }
+
+  /** Root paths of every file relation a frame's analyzed plan reads,
+    * subquery plans included, one per relation leaf.
+    */
+  private def relationRoots(df: DataFrame): Seq[String] =
+    df.queryExecution.analyzed.collectWithSubqueries {
+      case l: LogicalRelation => l.relation match {
+        case fs: HadoopFsRelation => fs.location.rootPaths.map(_.toString).mkString(",")
+        case other => fail(s"unexpected relation $other")
+      }
+    }
+
+  test("run reads the catalog's table, not a session temp view of that name, and leaves it") {
+    val session = spark.newSession()
+    session.createDataFrame(Seq(("9", "z"))).toDF("k", "v").createOrReplaceTempView("pub")
+    val c = new Catalog(session, cat.warehouse)
+    val rows = SqlGate.run(c, "SELECT k, v FROM pub ORDER BY k, v", notPriv).collect()
+      .map(r => r.get(0).toString -> r.getString(1)).toSeq
+    assert(rows == Seq("2" -> "a", "2" -> "b", "3" -> "c"))
+    assert(session.table("pub").collect().map(r => r.getString(0) -> r.getString(1)).toSeq
+      == Seq("9" -> "z"))
+  }
+
+  test("run's analyzed plan reads exactly the views of its authorized reads") {
+    val tables = cat.sqlNames.map { case (n, e) => n.toLowerCase -> e }
+    for ((q, rows) <- Seq(
+        "SELECT a.k, b.v FROM pub a JOIN pub b ON a.k = b.k" -> 5,
+        "SELECT * FROM pub WHERE k IN (SELECT k FROM comp_v2 WHERE v = 'd' OR k = 3)" -> 1,
+        "WITH priv AS (SELECT * FROM pub) SELECT * FROM priv" -> 3,
+        "WITH RECURSIVE r AS (SELECT 1 AS n UNION ALL SELECT n + 1 FROM r WHERE n < 3) SELECT * FROM r"
+          -> 3,
+        "SELECT a.v, b.v FROM comp_v1 a JOIN comp b ON a.k = b.k" -> 5)) {
+      val df = SqlGate.run(cat, q, notPriv)
+      val views = SqlGate.summarize(spark, q).reads.toSeq.map(t => cat.view(tables(t)))
+      assert(relationRoots(df).toSet == views.flatMap(relationRoots).toSet, q)
+      assert(df.count() == rows, q)
+    }
   }
 
   test("run denies before building any frame: unknown table, missing grant") {
