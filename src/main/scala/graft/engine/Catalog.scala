@@ -5,31 +5,14 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import java.util.UUID
+import java.util.concurrent.ConcurrentHashMap
+import scala.jdk.CollectionConverters._
 
-/** Versioned, tagged, searchable dataset catalog (SURVEY.md §1.4, §2
-  * I11/I14/I15/I18/I19).
-  *
-  * Reference: sourcenames/sources/sourcecolumns tables
-  * (src/backend/src/Lagoon/DB/Schema.hs:136-219) + version bookkeeping
-  * (DB/Sources.hs:62-188). The trigger-maintained `cached_*` columns of
-  * the reference are plain computed columns here.
-  *
-  * Storage: each source version is stored once, as text: a parquet
-  * dir `<warehouse>/data/<name>_v<N>/untyped` of `ix` long plus
-  * `c1..cN` string. Compaction writes a fresh
-  * `<warehouse>/data/<name>_compacted<K>` (the same columns plus `ixs`,
-  * the versions a row belongs to). The catalog itself is one JSON
-  * document, `<warehouse>/catalog.json` (a list of these entries),
-  * beside `acl.json`. Catalog metadata is read and committed on the
-  * driver (JsonDoc) and never runs a Spark job; data stays distributed.
-  *
-  * Data directories are never rewritten in place: a retype changes
-  * only the entry's `colTypes`, a compaction re-points the entries at
-  * its new directory, and a commit is the only pointer swap.
-  * A view reads the stored text with a schema built from its entry and
-  * casts each column to the entry's type at read time, so building
-  * one runs no job, and a frame built before a retype keeps reading
-  * the types it was built with.
+/** One version of a source, as `catalog.json` lists it. An entry is an
+  * immutable value: a retype, tag, deprecation or compaction commits a
+  * different value, and the data directories it names are never
+  * rewritten, so two equal entries always read the same rows.
   */
 @JsonIgnoreProperties(ignoreUnknown = true) // older catalogs also record a typed copy
 final case class SourceEntry(
@@ -60,16 +43,61 @@ final case class SourceEntry(
       */
     viewName: String)
 
+/** Versioned, tagged, searchable dataset catalog (SURVEY.md §1.4, §2
+  * I11/I14/I15/I18/I19).
+  *
+  * Reference: sourcenames/sources/sourcecolumns tables
+  * (src/backend/src/Lagoon/DB/Schema.hs:136-219) + version bookkeeping
+  * (DB/Sources.hs:62-188). The trigger-maintained `cached_*` columns of
+  * the reference are plain computed columns here.
+  *
+  * Storage: each source version is stored once, as text: a parquet
+  * dir `<warehouse>/data/<name>_v<N>-<uuid>/untyped` of `ix` long plus
+  * `c1..cN` string, in a directory no earlier ingest used (a version
+  * number comes back after its version is deleted; the directory does
+  * not). Compaction writes a fresh
+  * `<warehouse>/data/<name>_compacted<K>` (the same columns plus `ixs`,
+  * the versions a row belongs to). The catalog itself is one JSON
+  * document, `<warehouse>/catalog.json` (a list of these entries),
+  * beside `acl.json`. Catalog metadata is read and committed on the
+  * driver (JsonDoc) and never runs a Spark job; data stays distributed.
+  *
+  * Data directories are never rewritten in place: a retype changes
+  * only the entry's `colTypes`, a compaction re-points the entries at
+  * its new directory, and a commit is the only pointer swap.
+  * A view reads the stored text with a schema built from its entry and
+  * casts each column to the entry's type at read time, so building
+  * one runs no job, and a frame built before a retype keeps reading
+  * the types it was built with.
+  *
+  * Metadata is re-read from `catalog.json` on every call, so Catalogs
+  * on one warehouse see each other's commits. Frames are not: `view`
+  * builds one frame per entry value and hands every later call with an
+  * equal entry the same frame, so a version's frame is analyzed once
+  * and planned on its first action, not on every request. That is
+  * sound because an equal entry names the same immutable directory
+  * with the same types, so its frame reads the same rows and its file
+  * listing cannot go stale. Each `entries` read drops the frames of
+  * entries it no longer lists, so the memo holds the live catalog's
+  * entries plus at most those built after the last read.
+  */
 class Catalog(val spark: SparkSession, val warehouse: String) {
   import spark.implicits._
 
   private def catalogPath = s"$warehouse/catalog.json"
 
+  // one frame per entry value; `view` fills it, `entries` prunes it
+  private[engine] val frames = new ConcurrentHashMap[SourceEntry, DataFrame]
+
   // read on every call, no cache: other Catalogs on this warehouse
   // commit through the same file. Missing = empty; corrupt throws.
-  def entries: Seq[SourceEntry] =
-    JsonDoc.read(spark, catalogPath)(in =>
+  // Drops the frames of entries the file no longer lists.
+  def entries: Seq[SourceEntry] = {
+    val es = JsonDoc.read(spark, catalogPath)(in =>
       JsonDoc.mapper.readValue(in, classOf[Array[SourceEntry]]).toSeq).getOrElse(Seq.empty)
+    if (!frames.isEmpty) frames.keySet.retainAll(es.toSet.asJava)
+    es
+  }
 
   // write-then-swap: never read+overwrite the catalog in place
   private def commit(es: Seq[SourceEntry]): Unit = JsonDoc.write(spark, catalogPath, es)
@@ -111,8 +139,10 @@ class Catalog(val spark: SparkSession, val warehouse: String) {
 
     val version = es.filter(_.name == name).map(_.version).maxOption.getOrElse(0) + 1
     val ix = es.map(_.ix).maxOption.getOrElse(0L) + 1
-    val untypedPath = s"$warehouse/data/${name}_v$version/untyped"
-    ingested.untyped.write.mode(SaveMode.Overwrite).parquet(untypedPath)
+    // a directory no write used before: a version number is reused
+    // after that version's delete, and an equal entry must mean equal rows
+    val untypedPath = s"$warehouse/data/${name}_v$version-${UUID.randomUUID}/untyped"
+    ingested.untyped.write.parquet(untypedPath)
     // count the still-cached parse frame, not a re-read of the file
     // just written — the write is deterministic, so the counts are
     // identical, and this drops one read job per ingest (r19 perf;
@@ -170,11 +200,13 @@ class Catalog(val spark: SparkSession, val warehouse: String) {
   /** Friendly-named typed DataFrame of one entry (no catalog read, no
     * Spark job): the stored text cast to the entry's types. The casts
     * are lenient, so a value an overridden type cannot parse reads as
-    * NULL instead of failing the read under ANSI.
+    * NULL instead of failing the read under ANSI. Built once per entry
+    * value: an equal entry gets the same frame (see the class doc).
+    * The build must not read `entries`, which prunes this map.
     */
-  def view(e: SourceEntry): DataFrame =
+  def view(e: SourceEntry): DataFrame = frames.computeIfAbsent(e, _ =>
     Ingest.castColumns(text(e), e.colTypes.map(ColumnType.fromDisplay), e.friendlyNames,
-      lenient = true)
+      lenient = true))
 
   /** Highest version's view, deprecated or not (as sqlNames' bare alias). */
   def view(name: String): DataFrame =
@@ -329,7 +361,7 @@ class Catalog(val spark: SparkSession, val warehouse: String) {
     // pointing at deleted paths
     commit(alive)
     val read = alive.map(_.compactedPath).toSet
-    dead.foreach(e => removeDir(s"$warehouse/data/${e.name}_v${e.version}"))
+    dead.foreach(e => removeDir(new Path(e.untypedPath).getParent.toString))
     dead.map(_.compactedPath).distinct.filter(p => p.nonEmpty && !read(p)).foreach(removeDir)
   }
 

@@ -90,7 +90,9 @@ import graft.engine._
   * (toLocalIterator — one partition in driver memory at a time, the
   * Conduit.hs streaming analog), never a collect. A view's schema comes
   * from its catalog entry, so building the frame of a /sql table or a
-  * download runs no Spark job. The server comes from
+  * download runs no Spark job, and the Catalog builds it once per entry
+  * value: later requests for an unchanged version reuse its analyzed
+  * and planned frame instead of re-planning it. The server comes from
   * `HttpServers.loopback`, which turns Nagle's algorithm off: the JDK
   * server writes headers and body as two segments, and with Nagle on
   * every response waited out a keep-alive client's delayed ACK (40 ms
@@ -98,7 +100,8 @@ import graft.engine._
   * ACL/user state is DURABLE at `<warehouse>/acl.json` (AclStore —
   * the analog of the reference's Postgres security tables); session
   * tokens are ephemeral. Catalog and ACL mutations serialize on one
-  * lock; reads are lock-free, each re-reading `catalog.json`.
+  * lock; reads are lock-free, each re-reading `catalog.json` (which also
+  * drops the memoized frames of entries no longer listed).
   */
 class HttpApi(val cat: Catalog, defaultPublic: Boolean = true,
               adminPass: String = "",

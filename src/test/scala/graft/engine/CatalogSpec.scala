@@ -309,7 +309,9 @@ class CatalogSpec extends AnyFunSuite {
   test("delete removes a compacted table once no surviving version reads it") {
     val cat = freshCatalog()
     val data = new java.io.File(cat.warehouse, "data")
-    def dirs = data.list().toSeq.filter(_.startsWith("t_")).sorted
+    // a version directory is `t_v<N>-<uuid>`: strip the ingest's suffix
+    def dirs = data.list().toSeq.filter(_.startsWith("t_"))
+      .map(_.replaceFirst("-[0-9a-f-]{36}$", "")).sorted
     def download(v: Int) = Export.csvString(cat.view("t", v).orderBy("ix"))
     cat.ingest("t", Ingest.csv(spark, csvFile("a,b\n1,x\n2,y\n")), "csv")
     cat.ingest("t", Ingest.csv(spark, csvFile("a,b\n1,x\n3,z\n")), "csv")
@@ -326,6 +328,77 @@ class CatalogSpec extends AnyFunSuite {
     cat.delete("t")
     assert(cat.entries.isEmpty)
     assert(dirs.isEmpty, dirs)
+  }
+
+  test("view builds one frame per entry value; a changed entry gets its own, a dead one none") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.types.{IntegerType, StringType}
+    val cat = freshCatalog()
+    // the memo holds frames only for entries of the last `entries` read
+    def live(): Set[SourceEntry] = {
+      val es = cat.entries.toSet
+      assert(cat.frames.keySet.asScala.subsetOf(es), cat.frames.keySet)
+      cat.frames.keySet.asScala.toSet
+    }
+    val e = cat.ingest("t", Ingest.csv(spark, res("typeinfer.csv")), "csv")
+    val v = cat.view(e)
+    // an equal entry re-read from catalog.json gets the same frame
+    assert(cat.view(cat.entry("t", 1)) eq v)
+    assert(cat.view("t", 1) eq v)
+    assert(live() == Set(e))
+    val retyped = cat.setColumnType("t", 1, 2, ColumnType.ColText)
+    val vRetyped = cat.view(retyped)
+    assert(!(vRetyped eq v))
+    assert(v.schema("int").dataType == IntegerType && vRetyped.schema("int").dataType == StringType)
+    assert(live() == Set(retyped))
+    cat.tag("t", 1, "x")
+    val tagged = cat.entry("t", 1)
+    val vTagged = cat.view(tagged)
+    assert(!(vTagged eq vRetyped) && vTagged.schema == vRetyped.schema)
+    assert(live() == Set(tagged))
+    cat.compact("t")
+    val compacted = cat.entry("t", 1)
+    val vCompacted = cat.view(compacted)
+    assert(compacted.compactedPath.nonEmpty && !(vCompacted eq vTagged))
+    assert(vCompacted.schema == vTagged.schema)
+    assert(Export.csvString(vCompacted.orderBy("ix")) == Export.csvString(vTagged.orderBy("ix")))
+    assert(live() == Set(compacted))
+    cat.delete("t")
+    assert(live().isEmpty)
+  }
+
+  test("a re-ingest after delete reads its own rows through a Catalog that memoized the old entry") {
+    val a = freshCatalog()
+    val b = new Catalog(spark, a.warehouse)
+    val created = Some("2001-06-01T00:00:00Z")
+    val old = a.ingest("t", Ingest.csv(spark, csvFile("k\n2\n3\n")), "csv", created = created)
+    def ks(c: Catalog) = c.view("t", 1).orderBy("ix").collect().map(_.getInt(1)).toSeq
+    assert(ks(b) == Seq(2, 3))
+    a.delete("t")
+    val fresh = a.ingest("t", Ingest.csv(spark, csvFile("k\n4\n5\n")), "csv", created = created)
+    // the same entry but for its directory: no ingest reuses one
+    assert(fresh.untypedPath != old.untypedPath)
+    assert(fresh.copy(untypedPath = old.untypedPath) == old)
+    assert(ks(b) == Seq(4, 5))
+  }
+
+  test("8 threads reading two memoized views get the single-threaded bytes") {
+    val cat = freshCatalog()
+    cat.ingest("p", Ingest.csv(spark, res("typeinfer.csv")), "csv")
+    cat.ingest("c", Ingest.csv(spark, csvFile("a,b\n2,x\n3,y\n")), "csv")
+    cat.ingest("c", Ingest.csv(spark, csvFile("a,b\n2,x\n4,z\n5,w\n")), "csv")
+    cat.compact("c")
+    val keys = Seq("p" -> 1, "c" -> 2)
+    def read(k: Int) = Export.csvLines(cat.view(cat.entry(keys(k)._1, keys(k)._2))).toVector
+    val want = keys.indices.map(read)
+    assert(want.map(_.size) == Seq(5, 4))
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
+    try {
+      val runs = (0 until 8).map(t => pool.submit(() =>
+        (0 until 30).map(i => (t + i) % 2).filter(k => read(k) != want(k))))
+      val wrong = runs.flatMap(_.get(5, java.util.concurrent.TimeUnit.MINUTES))
+      assert(wrong.isEmpty, s"${wrong.size} of 240 reads differ")
+    } finally pool.shutdownNow()
   }
 
   test("a catalog document that still lists typedPath reads") {

@@ -246,6 +246,23 @@ class SqlGateSpec extends AnyFunSuite {
     }
   }
 
+  test("run serves repeated requests from the memoized views: joins read the same rows") {
+    val tables = cat.sqlNames.map { case (n, e) => n.toLowerCase -> e }
+    val pairs = Seq("2,a,a", "2,a,b", "2,b,a", "2,b,b", "3,c,c")
+    for (q <- Seq(
+        // one entry under two names: both bind the same memoized plan
+        "SELECT a.k, a.v, b.v AS w FROM pub a JOIN pub_v1 b ON a.k = b.k ORDER BY k, v, w",
+        "SELECT p.k, p.v, c.v AS w FROM pub p JOIN comp c ON p.k = c.k ORDER BY k, v, w")) {
+      def rows() = SqlGate.run(cat, q, notPriv).collect().map(_.mkString(",")).toSeq
+      val reads = SqlGate.summarize(spark, q).reads.toSeq.sorted
+      def views() = reads.map(t => cat.view(tables(t)))
+      assert(rows() == pairs, q)
+      val first = views()
+      assert(rows() == pairs, q)
+      assert(views().zip(first).forall { case (a, b) => a eq b }, q)
+    }
+  }
+
   test("run denies before building any frame: unknown table, missing grant") {
     for (q <- Seq("SELECT * FROM nosuch", "SELECT * FROM pub JOIN priv USING (k)")) {
       val jobs = TestSpark.jobsOf("run-denied") {

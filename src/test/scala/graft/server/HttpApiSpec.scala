@@ -84,6 +84,8 @@ class HttpApiSpec extends AnyFunSuite {
     val dl = req("GET", "/source/people.csv/1/download")
     assert(dl.statusCode == 200)
     assert(dl.body.contains("Alice,34") && dl.body.contains("Bob,28"), dl.body)
+    // a second download reuses the version's frame: the same bytes
+    assert(req("GET", "/source/people.csv/1/download").body == dl.body)
 
     // POST /sql (SQL): gated query over the sanitized view names
     // (people.csv -> people_csv_v1, like the reference's
@@ -110,11 +112,17 @@ class HttpApiSpec extends AnyFunSuite {
     assert(req("DELETE", "/source/people.csv").statusCode == 401)
 
     // ColumnSetType: re-type age (data column 2; ix is not a column) to
-    // TEXT and back — INTEGER must vanish from the info while TEXT
+    // TEXT and back — INTEGER must vanish from the info while TEXT, and
+    // /sql must read each type (a retype is a new entry, so a new frame)
+    def ages = req("POST", "/sql", "SELECT age FROM people_csv_v1 ORDER BY name",
+      headers = Map("Accept" -> "application/json")).body
+    assert(ages.contains("""{"age":34}"""), ages)
     assert(req("POST", "/source/people.csv/1/column/2/type", "TEXT", asRoot).statusCode == 204)
     assert(!req("GET", "/source/people.csv/1").body.contains("\"type\":\"INTEGER\""))
+    assert(ages.contains("""{"age":"34"}"""), ages)
     assert(req("POST", "/source/people.csv/1/column/2/type", "INTEGER", asRoot).statusCode == 204)
     assert(req("GET", "/source/people.csv/1").body.contains("\"type\":\"INTEGER\""))
+    assert(ages.contains("""{"age":34}"""), ages)
 
     // tags (SourceTagsPost / SourceTagDelete)
     assert(req("POST", "/source/people.csv/1/tags", """["hr","golden"]""", asRoot).statusCode == 204)
